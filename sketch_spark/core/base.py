@@ -65,6 +65,12 @@ class Sketch:
     def merge(self, other: "Sketch") -> "Sketch":
         raise NotImplementedError
 
+    def _update_unique(self, keys: np.ndarray, counts: np.ndarray) -> None:
+        """``update_hashed`` for keys already made distinct with summed
+        int64 counts (``unique_with_counts`` or ``native.gram_counts``
+        output); sketches that aggregate their input skip that here."""
+        self.update_hashed(keys, counts)
+
     # --- shared machinery --------------------------------------------------
     def to_bytes(self) -> bytes:
         arrays = self._arrays()
@@ -116,10 +122,17 @@ class Sketch:
 def unique_with_counts(
     keys: np.ndarray, counts: np.ndarray | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Aggregate duplicate keys in a batch: (unique_keys, summed_counts)."""
+    """Aggregate duplicate keys in a batch: (unique_keys, summed_counts).
+
+    Integer counts sum exactly in int64; float weights sum in float64
+    and then truncate."""
     if counts is None:
         uk, c = np.unique(keys, return_counts=True)
         return uk, c.astype(np.int64)
     uk, inv = np.unique(keys, return_inverse=True)
+    if counts.dtype.kind in "iu":
+        summed = np.zeros(len(uk), dtype=np.int64)
+        np.add.at(summed, inv, counts.astype(np.int64, copy=False))
+        return uk, summed
     summed = np.bincount(inv, weights=counts.astype(np.float64), minlength=len(uk))
     return uk, summed.astype(np.int64)

@@ -14,7 +14,10 @@ re-expresses it as batch-vectorized numpy over hashed-key arrays:
   ``table[j, h_j] = max(table[j, h_j], est + c)`` (``np.maximum.at``
   resolves intra-batch bucket collisions exactly like simultaneous
   conservative updates).  This is the distributed-safe formulation of
-  the reference's per-item CU (sketch.cpp:154-158).
+  the reference's per-item CU (sketch.cpp:154-158).  With uint64 keys
+  and integer counts it runs as one compiled pass (``native.cmcu_update``:
+  aggregate in L2-sized hash partitions, read every minimum, then
+  scatter-max); the numpy code is its byte-identical fallback.
 
 Guarantees (proved in tests/test_core_countmin.py):
   exact_count <= CMCU estimate <= CM estimate <= exact + eps*N with
@@ -32,6 +35,7 @@ from typing import Any
 
 import numpy as np
 
+from . import native
 from .base import Sketch, register, unique_with_counts
 from .hashing import bucket_indices, derive_seeds, hash_strings
 
@@ -119,13 +123,15 @@ class CountMin(_CountMinBase):
     def update_hashed(self, keys: np.ndarray, counts: np.ndarray | None = None) -> None:
         if len(keys) == 0:
             return
-        uk, c = unique_with_counts(keys, counts)
-        idx = self._indices(uk)
+        self._update_unique(*unique_with_counts(keys, counts))
+
+    def _update_unique(self, keys: np.ndarray, counts: np.ndarray) -> None:
+        idx = self._indices(keys)
         for j in range(self.depth):
             self.table[j] += np.bincount(
-                idx[j], weights=c.astype(np.float64), minlength=self.width
+                idx[j], weights=counts.astype(np.float64), minlength=self.width
             ).astype(np.int64)
-        self.total += int(c.sum())
+        self.total += int(counts.sum())
 
 
 @register
@@ -137,7 +143,20 @@ class CountMinCU(_CountMinBase):
     def update_hashed(self, keys: np.ndarray, counts: np.ndarray | None = None) -> None:
         if len(keys) == 0:
             return
-        uk, c = unique_with_counts(keys, counts)
+        if native.cmcu_update(self.table, self._a, self._b, keys, counts, unique=False):
+            self.total += len(keys) if counts is None else int(counts.astype(np.int64).sum())
+            return
+        self._update_numpy(*unique_with_counts(keys, counts))
+
+    def _update_unique(self, keys: np.ndarray, counts: np.ndarray) -> None:
+        if len(keys) == 0:
+            return
+        if native.cmcu_update(self.table, self._a, self._b, keys, counts, unique=True):
+            self.total += int(counts.sum())
+            return
+        self._update_numpy(keys, counts)
+
+    def _update_numpy(self, uk: np.ndarray, c: np.ndarray) -> None:
         idx = self._indices(uk)
         rows = np.arange(self.depth)[:, None]
         cur = self.table[rows, idx]  # (d, n) pre-batch counters

@@ -43,14 +43,16 @@ class CountSketch(_CountMinBase):
     def update_hashed(self, keys: np.ndarray, counts: np.ndarray | None = None) -> None:
         if len(keys) == 0:
             return
-        uk, c = unique_with_counts(keys, counts)
-        idx = self._indices(uk)
-        sgn = self._signs(uk)
+        self._update_unique(*unique_with_counts(keys, counts))
+
+    def _update_unique(self, keys: np.ndarray, counts: np.ndarray) -> None:
+        idx = self._indices(keys)
+        sgn = self._signs(keys)
         for j in range(self.depth):
             self.table[j] += np.bincount(
-                idx[j], weights=(sgn[j] * c).astype(np.float64), minlength=self.width
+                idx[j], weights=(sgn[j] * counts).astype(np.float64), minlength=self.width
             ).astype(np.int64)
-        self.total += int(c.sum())
+        self.total += int(counts.sum())
 
     def estimate_hashed(self, keys: np.ndarray) -> np.ndarray:
         if len(keys) == 0:

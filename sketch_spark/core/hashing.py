@@ -26,10 +26,13 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from . import native
+
 __all__ = [
     "splitmix64",
     "derive_seeds",
     "hash_strings",
+    "hash_strings_native",
     "hash_u64",
     "mix_u64",
     "bitlen_u64",
@@ -81,7 +84,7 @@ def mix_u64(keys: np.ndarray, seed: np.uint64) -> np.ndarray:
 
 
 def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(data bytes, int64 offsets[n+1]) view of an Arrow string/binary array."""
+    """(data bytes, int32 or int64 offsets[n+1]) view of an Arrow string/binary array."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     t = arr.type
@@ -94,7 +97,6 @@ def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         odtype = np.int64
     bufs = arr.buffers()
     offsets = np.frombuffer(bufs[1], dtype=odtype)[arr.offset : arr.offset + len(arr) + 1]
-    offsets = offsets.astype(np.int64, copy=False)
     data = (
         np.frombuffer(bufs[2], dtype=np.uint8)
         if bufs[2] is not None
@@ -123,11 +125,11 @@ def hash_strings(
     if n == 0:
         return np.empty(0, dtype=np.uint64)
     data, offsets = _string_buffers(arr)
+    offsets = offsets.astype(np.int64, copy=False)
     lengths = offsets[1:] - offsets[:-1]
     eff_len = np.minimum(lengths, max_len)
     L = int(eff_len.max(initial=0))
-    init = np.uint64(splitmix64(seed ^ 0xA076_1D64_78BD_642F))
-    h = np.full(n, _FNV_OFFSET ^ init, dtype=np.uint64)
+    h = np.full(n, _FNV_OFFSET ^ np.uint64(_hash_init(seed)), dtype=np.uint64)
     if L > 0:
         starts = offsets[:-1]
         pos = np.arange(L, dtype=np.int64)
@@ -143,6 +145,24 @@ def hash_strings(
             h = np.where(col, hn, h)
     h ^= lengths.astype(np.uint64)
     return mix_u64(h, np.uint64(0))
+
+
+def _hash_init(seed: int) -> int:
+    return splitmix64(seed ^ 0xA076_1D64_78BD_642F)
+
+
+def hash_strings_native(arr: pa.Array, seed: int = 0, max_len: int = 64) -> np.ndarray | None:
+    """``hash_strings`` of an Arrow string/binary array through the
+    compiled kernel in ``core/native.py``: the same bits, one pass over
+    the Arrow buffers and no padded byte matrix.  ``None`` when the
+    kernel is unavailable."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if len(arr) == 0:  # an empty array may carry no offsets buffer
+        data, offsets = np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    else:
+        data, offsets = _string_buffers(arr)
+    return native.hash_strings(data, offsets, _hash_init(seed), max_len)
 
 
 def hash_u64(values: np.ndarray, seed: int = 0) -> np.ndarray:

@@ -1,4 +1,5 @@
-"""Optional compiled kernels for the serial decode recurrences.
+"""Optional compiled kernels for the serial decode recurrences and the
+sketch hot loop.
 
 Two loops in the pure-python decoders are serial by nature and so
 cannot be expressed as numpy whole-array ops:
@@ -15,23 +16,31 @@ cannot be expressed as numpy whole-array ops:
 Both made the pure-python scans the multimodal path's real scale
 risks.
 
-Here the same loop is ~40 lines of C compiled once per machine at
-first use (``cc -O2 -shared -fPIC``, cached in the system temp dir
-keyed by the source md5) and called through ctypes — no dependency
-beyond a system compiler, which clusters building native Spark
-extensions already carry.  Concurrent python workers race the first
-build safely: each compiles to a pid-suffixed temp file and
-``os.replace``s it into the cache path atomically.  When no compiler
-exists (or ``SKETCH_SPARK_NO_NATIVE=1`` forces it, as the equivalence
-tests do) the caller falls back to the python scan in
-``functions.multimodal._png_unfilter`` — property-tested byte-equal
-to this kernel across all five filters.
+The fused sketch pass's tokens mode adds three more: per-occurrence
+token hashing straight from the Arrow buffers (``hash_strings``), the
+rolling n-gram combine summed per distinct key (``gram_counts``), and
+the CMCU batch conservative update (``cmcu_update``).  In numpy these
+cost a padded byte matrix, a ``dictionary_encode`` and two sorts per
+order; here each is one pass.
+
+Each loop is plain C compiled once per machine at first use
+(``cc -O3 -shared -fPIC``, cached in the system temp dir keyed by the
+source md5) and called through ctypes — no dependency beyond a system
+compiler, which clusters building native Spark extensions already
+carry.  Concurrent python workers race the first build safely: each
+compiles to a pid-suffixed temp file and ``os.replace``s it into the
+cache path atomically.  When no compiler exists, or the build or load
+fails, the process logs one WARNING naming the reason and every caller
+runs its numpy/python path — property-tested byte-equal to the
+kernels.  ``SKETCH_SPARK_NO_NATIVE=1`` forces the same fallback
+silently, as the equivalence tests do.
 """
 
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import shutil
 import subprocess
@@ -40,9 +49,18 @@ import threading
 
 import numpy as np
 
-__all__ = ["jpeg_prog_ac", "jpeg_prog_dc", "jpeg_scan", "png_unfilter"]
+__all__ = [
+    "cmcu_update",
+    "gram_counts",
+    "hash_strings",
+    "jpeg_prog_ac",
+    "jpeg_prog_dc",
+    "jpeg_scan",
+    "png_unfilter",
+]
 
 _SRC = r"""
+#include <stdint.h>
 #include <stdlib.h>
 #include <string.h>
 
@@ -431,11 +449,208 @@ long jpeg_prog_ac(const unsigned char *buf, long len, long pos,
     }
     return 0;
 }
+
+/* ------------------------------------------------------------------ */
+/* Sketch hot loop: token hashing, n-gram counting and the CMCU batch
+   conservative update (the reference's scan -> hash -> update loop,
+   sketch.cpp:98-171).  Each one matches its numpy twin in
+   core/hashing.py, functions/text.py and core/countmin.py bit for
+   bit; uint64 arithmetic wraps exactly as numpy's does. */
+
+static inline uint64_t mix64(uint64_t z, uint64_t seed) {
+    z ^= seed;
+    z += 0x9E3779B97F4A7C15ULL;
+    z = (z ^ (z >> 30)) * 0xBF58476D1CE4E5B9ULL;
+    z = (z ^ (z >> 27)) * 0x94D049BB133111EBULL;
+    return z ^ (z >> 31);
+}
+
+/* hashing.hash_strings: FNV-1a over the first max_len bytes, xor the
+   full length, then the splitmix64 finalizer.  offsets holds n + 1
+   entries of owide (4 or 8) bytes; the caller has checked the first
+   and last against the data buffer.  Returns 0, or i + 1 when
+   string i has a negative length. */
+long hash_strings_u64(const unsigned char * restrict data,
+                      const void * restrict offsets, long owide, long n,
+                      uint64_t init, long max_len,
+                      uint64_t * restrict out) {
+    const int32_t *o32 = (const int32_t *)offsets;
+    const int64_t *o64 = (const int64_t *)offsets;
+    for (long i = 0; i < n; i++) {
+        int64_t s = owide == 4 ? o32[i] : o64[i];
+        int64_t e = owide == 4 ? o32[i + 1] : o64[i + 1];
+        if (e < s) return i + 1;
+        int64_t len = e - s, l = len < max_len ? len : max_len;
+        const unsigned char *p = data + s;
+        uint64_t h = 0xCBF29CE484222325ULL ^ init;
+        for (int64_t j = 0; j < l; j++) h = (h ^ p[j]) * 0x100000001B3ULL;
+        out[i] = mix64(h ^ (uint64_t)len, 0);
+    }
+    return 0;
+}
+
+/* Sum the counts of each distinct key (cnt == NULL: every key counts
+   1).  One table over all keys is bound by memory latency, so keys are
+   first scattered into okeys/ocnts by the top bits of a Fibonacci hash,
+   in groups of about 4k, and each group is then summed in an
+   open-addressing table that stays in L1/L2 and compacted in place
+   (the i-th key read never lands past slot i).  okeys/ocnts have room
+   for n and must not overlap keys/cnt, except that keys may be ocnts
+   itself when cnt == NULL (it is read only before any count is
+   written).  Returns the number u of distinct keys, now in
+   okeys/ocnts[0:u], or -1 when out of memory. */
+static long agg_counts(const uint64_t *keys, const int64_t *cnt, long n,
+                       uint64_t *okeys, int64_t *ocnts) {
+    int bits = 0, tb = 4;
+    long u = 0, maxp = 0;
+    if (n == 0) return 0;
+    while (bits < 12 && (n >> bits) > 4096) bits++;
+    long np_ = 1L << bits;
+    long *start = calloc((size_t)np_ + 1, sizeof(long));
+    long *cur = malloc((size_t)np_ * sizeof(long));
+    int32_t *table = 0;
+    if (!start || !cur) goto fail;
+#define AGG_FIB(k) ((k) * 0x9E3779B97F4A7C15ULL)
+#define AGG_PART(f) (bits ? (long)((f) >> (64 - bits)) : 0L)
+    for (long i = 0; i < n; i++) start[AGG_PART(AGG_FIB(keys[i])) + 1]++;
+    for (long p = 0; p < np_; p++) {
+        if (start[p + 1] > maxp) maxp = start[p + 1];
+        start[p + 1] += start[p];
+        cur[p] = start[p];
+    }
+    if (maxp > INT32_MAX) goto fail;
+    for (long i = 0; i < n; i++) {
+        long d = cur[AGG_PART(AGG_FIB(keys[i]))]++;
+        okeys[d] = keys[i];
+        if (cnt) ocnts[d] = cnt[i];
+    }
+    while ((1L << tb) < 2 * maxp) tb++;
+    table = malloc(((size_t)1 << tb) * sizeof(int32_t));
+    if (!table) goto fail;
+    for (long p = 0; p < np_; p++) {
+        long base = u;
+        tb = 4;
+        while ((1L << tb) < 2 * (start[p + 1] - start[p])) tb++;
+        uint64_t mask = ((uint64_t)1 << tb) - 1;
+        memset(table, 0xFF, ((size_t)1 << tb) * sizeof(int32_t));
+        for (long i = start[p]; i < start[p + 1]; i++) {
+            uint64_t k = okeys[i];
+            int64_t c = cnt ? ocnts[i] : 1;
+            uint64_t s = (AGG_FIB(k) << bits) >> (64 - tb);
+            for (;;) {
+                int32_t t = table[s];
+                if (t < 0) {
+                    table[s] = (int32_t)(u - base);
+                    okeys[u] = k;
+                    ocnts[u] = c;
+                    u++;
+                    break;
+                }
+                if (okeys[base + t] == k) {
+                    ocnts[base + t] = (int64_t)((uint64_t)ocnts[base + t] + (uint64_t)c);
+                    break;
+                }
+                s = (s + 1) & mask;
+            }
+        }
+    }
+#undef AGG_FIB
+#undef AGG_PART
+    free(start); free(cur); free(table);
+    return u;
+fail:
+    free(start); free(cur); free(table);
+    return -1;
+}
+
+/* text.hashes_from_base's rolling n-gram combine and same-row guard
+   over per-occurrence token hashes h, aggregated to (key, count).
+   parent[i] is the row of token i.  Returns the number of distinct
+   keys written to okeys/ocnts (room for n), or -1 when out of
+   memory. */
+long gram_counts(const uint64_t * restrict h, const int64_t * restrict parent,
+                 long n, long ngram, uint64_t *okeys, int64_t *ocnts) {
+    if (ngram <= 1) return agg_counts(h, 0, n, okeys, ocnts);
+    if (n < ngram) return 0;
+    /* the grams are staged in ocnts, which agg_counts reads before it
+       writes any count */
+    uint64_t *grams = (uint64_t *)ocnts;
+    long m = n - ngram + 1, g = 0;
+    for (long i = 0; i < m; i++) {
+        if (parent[i] != parent[i + ngram - 1]) continue;
+        uint64_t c = h[i];
+        for (long j = 1; j < ngram; j++)
+            c = mix64((c * 0x9DDFEA08EB382D69ULL) ^ h[i + j], (uint64_t)j);
+        grams[g++] = c;
+    }
+    return agg_counts(grams, 0, g, okeys, ocnts);
+}
+
+/* CountMinCU batch conservative update on a (depth, 2^log2w) int64
+   table: aggregate the batch to distinct keys unless is_unique or the
+   keys are strictly increasing (np.unique output), read every key's
+   pre-batch minimum est, then scatter max(counter, est + count) into
+   its depth counters.  cnt == NULL counts each key once.  Returns 0,
+   or -1 when out of memory. */
+long cmcu_update(int64_t * restrict table, long depth, long log2w,
+                 const uint64_t *a, const uint64_t *b,
+                 const uint64_t *keys, const int64_t *cnt, long n,
+                 long is_unique) {
+    uint64_t *uk = 0;
+    int64_t *nv = 0;
+    const uint64_t *k = keys;
+    const int64_t *c = cnt;
+    long u = n, w = 1L << log2w;
+    int shift = 64 - (int)log2w;
+    nv = malloc((size_t)(n ? n : 1) * sizeof(int64_t));
+    if (!nv) return -1;
+    if (!is_unique) {
+        is_unique = 1;
+        for (long i = 1; i < n && is_unique; i++) is_unique = keys[i - 1] < keys[i];
+    }
+    if (!is_unique || !cnt) {
+        uk = malloc((size_t)(n ? n : 1) * sizeof(uint64_t));
+        u = uk ? agg_counts(keys, cnt, n, uk, nv) : -1;
+        if (u < 0) {
+            free(uk);
+            free(nv);
+            return -1;
+        }
+        k = uk;
+        c = nv; /* each new value overwrites the count it was made from */
+    }
+    for (long i = 0; i < u; i++) {
+        int64_t est = INT64_MAX;
+        for (long j = 0; j < depth; j++) {
+            uint64_t idx = ((a[j] | 1) * k[i] + b[j]) >> shift;
+            int64_t v = table[j * w + (long)idx];
+            if (v < est) est = v;
+        }
+        nv[i] = (int64_t)((uint64_t)est + (uint64_t)c[i]);
+    }
+    for (long j = 0; j < depth; j++) {
+        int64_t *row = table + j * w;
+        uint64_t aj = a[j] | 1, bj = b[j];
+        for (long i = 0; i < u; i++) {
+            long idx = (long)((aj * k[i] + bj) >> shift);
+            if (row[idx] < nv[i]) row[idx] = nv[i];
+        }
+    }
+    free(uk);
+    free(nv);
+    return 0;
+}
 """
 
+_log = logging.getLogger(__name__)
 _lock = threading.Lock()
 _lib: ctypes.CDLL | None = None
 _tried = False
+
+
+def _fallback(reason: str) -> None:
+    """Log why this process runs the numpy/python paths instead."""
+    _log.warning("native kernels unavailable (%s); using the numpy/python fallbacks", reason)
 
 
 def _build() -> ctypes.CDLL | None:
@@ -446,6 +661,7 @@ def _build() -> ctypes.CDLL | None:
     if not os.path.exists(so):
         cc = shutil.which("cc") or shutil.which("gcc")
         if cc is None:
+            _fallback("no C compiler: neither cc nor gcc is on PATH")
             return None
         src = None
         tmp = f"{so}.{os.getpid()}.tmp"
@@ -462,7 +678,12 @@ def _build() -> ctypes.CDLL | None:
                 timeout=120,
             )
             os.replace(tmp, so)
-        except (OSError, subprocess.SubprocessError):
+        except subprocess.CalledProcessError as e:
+            err = e.stderr.decode(errors="replace").strip().splitlines()
+            _fallback(f"{cc} exited {e.returncode}: {err[-1] if err else 'no output'}")
+            return None
+        except (OSError, subprocess.SubprocessError) as e:
+            _fallback(f"compiling with {cc} failed: {e}")
             return None
         finally:
             for p in (src, tmp):
@@ -473,7 +694,8 @@ def _build() -> ctypes.CDLL | None:
                         pass
     try:
         lib = ctypes.CDLL(so)
-    except OSError:
+    except OSError as e:
+        _fallback(f"cannot load {so}: {e}")
         return None
     lib.png_unfilter.restype = ctypes.c_long
     lib.png_unfilter.argtypes = [ctypes.c_void_p, ctypes.c_void_p] + [
@@ -499,6 +721,16 @@ def _build() -> ctypes.CDLL | None:
         + [ctypes.c_void_p] * 4
         + [ctypes.c_long] * 6
         + [ctypes.c_void_p]
+    )
+    lib.hash_strings_u64.restype = ctypes.c_long
+    lib.hash_strings_u64.argtypes = (
+        [ctypes.c_void_p] * 2 + [ctypes.c_long] * 2 + [ctypes.c_uint64, ctypes.c_long, ctypes.c_void_p]
+    )
+    lib.gram_counts.restype = ctypes.c_long
+    lib.gram_counts.argtypes = [ctypes.c_void_p] * 2 + [ctypes.c_long] * 2 + [ctypes.c_void_p] * 2
+    lib.cmcu_update.restype = ctypes.c_long
+    lib.cmcu_update.argtypes = (
+        [ctypes.c_void_p] + [ctypes.c_long] * 2 + [ctypes.c_void_p] * 4 + [ctypes.c_long] * 2
     )
     return lib
 
@@ -747,3 +979,126 @@ def jpeg_prog_ac(
     )
     _jpeg_check(rc)
     return coef
+
+
+def _ptr(a: np.ndarray) -> ctypes.c_void_p:
+    return ctypes.c_void_p(a.ctypes.data)
+
+
+def hash_strings(
+    data: np.ndarray, offsets: np.ndarray, init: int, max_len: int
+) -> np.ndarray | None:
+    """``hashing.hash_strings`` over raw Arrow string buffers: ``data``
+    (uint8) and ``offsets`` (int32 or int64, one more than the strings,
+    already sliced to the array's offset).  Returns one uint64 per
+    string, or ``None`` when the kernel is unavailable.  Raises
+    ``ValueError`` on offsets outside ``data`` or a negative length."""
+    lib = _get()
+    if lib is None:
+        return None
+    if offsets.dtype not in (np.int32, np.int64):
+        raise ValueError(f"hash_strings: offsets must be int32 or int64, not {offsets.dtype}")
+    data = np.ascontiguousarray(data, np.uint8)
+    offsets = np.ascontiguousarray(offsets)
+    n = len(offsets) - 1
+    if n < 0:
+        raise ValueError("hash_strings: offsets is empty")
+    # the kernel walks data[offsets[0]:offsets[n]] and checks that the
+    # offsets never decrease, so these two bounds keep every read in data
+    if n and (offsets[0] < 0 or offsets[n] > len(data)):
+        raise ValueError(
+            f"hash_strings: offsets span [{offsets[0]}, {offsets[n]}) outside {len(data)} data bytes"
+        )
+    out = np.empty(n, np.uint64)
+    rc = lib.hash_strings_u64(
+        _ptr(data), _ptr(offsets), offsets.itemsize, n, init, max_len, _ptr(out)
+    )
+    if rc:
+        raise ValueError(f"hash_strings: string {rc - 1} has a negative length")
+    return out
+
+
+def gram_counts(
+    h: np.ndarray, parents: np.ndarray, ngram: int
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """(distinct n-gram keys, occurrence counts) from per-occurrence
+    token hashes ``h`` and their row ``parents`` — the rolling combine
+    and same-row guard of ``text.hashes_from_base`` followed by
+    ``unique_with_counts``, in one pass and without a sort.  Keys come
+    in no particular order.  ``None`` when the kernel is unavailable."""
+    lib = _get()
+    if lib is None:
+        return None
+    h = np.ascontiguousarray(h, np.uint64)
+    parents = np.ascontiguousarray(parents, np.int64)
+    if len(h) != len(parents):
+        raise ValueError(f"gram_counts: {len(h)} hashes but {len(parents)} parents")
+    if ngram < 1:
+        raise ValueError(f"gram_counts: ngram must be >= 1, not {ngram}")
+    m = max(len(h) - ngram + 1, 0)
+    keys = np.empty(m, np.uint64)
+    counts = np.empty(m, np.int64)
+    u = lib.gram_counts(_ptr(h), _ptr(parents), len(h), ngram, _ptr(keys), _ptr(counts))
+    if u < 0:
+        raise MemoryError("gram_counts: out of memory")
+    if u == m:
+        return keys, counts
+    return keys[:u].copy(), counts[:u].copy()
+
+
+def cmcu_update(
+    table: np.ndarray,
+    a: np.ndarray,
+    b: np.ndarray,
+    keys: np.ndarray,
+    counts: np.ndarray | None,
+    unique: bool,
+) -> bool:
+    """``CountMinCU``'s batch conservative update of ``table`` (int64,
+    ``(depth, 2**k)``) in place.  ``unique`` says the keys are already
+    distinct with summed counts (``gram_counts`` output), so the kernel
+    skips its own aggregation.  Returns ``False``, having changed
+    nothing, when the kernel is unavailable or the input is not uint64
+    keys with integer counts; the caller then runs the numpy path."""
+    if keys.dtype != np.uint64:
+        return False
+    if counts is not None and not (
+        counts.dtype.kind == "i" or (counts.dtype.kind == "u" and counts.itemsize < 8)
+    ):
+        return False
+    lib = _get()
+    if lib is None:
+        return False
+    depth, width = table.shape
+    log2w = width.bit_length() - 1
+    if not (
+        table.dtype == np.int64
+        and table.flags.c_contiguous
+        and table.flags.writeable
+        and width >= 2
+        and width == 1 << log2w
+        and a.shape == b.shape == (depth,)
+        and a.dtype == b.dtype == np.uint64
+    ):
+        raise ValueError("cmcu_update: malformed table or hash parameters")
+    keys = np.ascontiguousarray(keys)
+    if counts is not None:
+        if len(counts) != len(keys):
+            raise ValueError(f"cmcu_update: {len(keys)} keys but {len(counts)} counts")
+        counts = np.ascontiguousarray(counts, np.int64)
+    a = np.ascontiguousarray(a)
+    b = np.ascontiguousarray(b)
+    rc = lib.cmcu_update(
+        _ptr(table),
+        depth,
+        log2w,
+        _ptr(a),
+        _ptr(b),
+        _ptr(keys),
+        None if counts is None else _ptr(counts),
+        len(keys),
+        int(unique),
+    )
+    if rc:
+        raise MemoryError("cmcu_update: out of memory")
+    return True

@@ -28,10 +28,6 @@ def _k1(q: np.ndarray | float, delta: float) -> np.ndarray | float:
     return (delta / (2 * math.pi)) * np.arcsin(2 * np.clip(q, 0.0, 1.0) - 1)
 
 
-def _k1_inv(k: np.ndarray | float, delta: float) -> np.ndarray | float:
-    return (np.sin(k * (2 * math.pi) / delta) + 1) / 2
-
-
 @register
 class TDigest(Sketch):
     kind = "tdigest"

@@ -70,13 +70,6 @@ _MAGIC = {
 }
 
 
-def _sniff(buf: bytes) -> str:
-    for magic, kind in _MAGIC.items():
-        if buf[: len(magic)] == magic:
-            return kind
-    return "unknown"
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Decode/feature passes are CPU-bound python stages: spread an
     underpartitioned (e.g. single-split) input first so they

@@ -3,8 +3,10 @@ path, and JVM-side (Catalyst-codegen'd) expressions for SQL-checkable
 text analysis.
 
 The hot path mirrors the reference's fused scan->tokenize->hash loop
-(/root/reference/src/sketch.cpp:98-171) as whole-batch Arrow/numpy ops:
-no exploded token rows ever materialize in the Spark plan (the
+(src/sketch.cpp:98-171) as whole-batch ops: Arrow
+tokenizes, then ``GramCounts`` hashes and counts through the compiled
+kernels of ``core/native.py`` (numpy when none can be built).  No
+exploded token rows ever materialize in the Spark plan (the
 anti-pattern SURVEY.md §4.1 flags), and word n-grams reuse lower-order
 token hashes via a rolling combine — the Spark-native analogue of the
 reference's incremental multi-length H3 chaining (sketch.cpp:136-138,
@@ -19,7 +21,9 @@ import pyarrow.compute as pc
 
 from pyspark.sql import Column, functions as F
 
-from ..core.hashing import hash_strings, mix_u64
+from ..core import native
+from ..core.base import unique_with_counts
+from ..core.hashing import hash_strings, hash_strings_native, mix_u64
 
 _NGRAM_PRIME = np.uint64(0x9DDFEA08EB382D69)
 
@@ -67,33 +71,29 @@ def _dict_hashes(flat: pa.Array, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return hd, idx
 
 
-def token_hash_counts(
-    arr: pa.Array | pa.ChunkedArray, seed: int, lowercase: bool = False
-) -> tuple[np.ndarray, np.ndarray]:
-    """(unique token hashes, occurrence counts) for a batch of texts —
-    a thin wrapper over ``token_base`` so there is exactly one
-    canonical tokenize+hash path (SketchSpec.feed derives the same
-    quantities from its cached base)."""
-    hd, idx, _ = token_base(arr, seed, lowercase)
-    if len(hd) == 0:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
-    return hd, np.bincount(idx, minlength=len(hd)).astype(np.int64)
-
-
 def token_base(
     arr: pa.Array | pa.ChunkedArray, seed: int, lowercase: bool = False
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(dict hashes, dict indices, parent rows): ONE tokenize + ONE
-    dictionary-encode + ONE unique-hash pass for a batch — the shared
-    base every n-gram order and the unigram count path derive from.
-    Multi-spec builds cache this per (column, lowercase, seed) so a
-    4-order job tokenizes each batch once, not eight times.
+    dictionary-encode + ONE unique-hash pass for a batch — the numpy
+    base that MinHash, SimHash and ``GramCounts``' fallback derive
+    every n-gram order from.
     """
+    flat, parents = _tokens(arr, lowercase)
+    return _base_of(flat, parents, seed)
+
+
+def _tokens(arr: pa.Array | pa.ChunkedArray, lowercase: bool) -> tuple[pa.Array, np.ndarray]:
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if lowercase:
         arr = pc.utf8_lower(arr)
-    flat, parents = tokenize_batch(arr)
+    return tokenize_batch(arr)
+
+
+def _base_of(
+    flat: pa.Array, parents: np.ndarray, seed: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     if len(flat) == 0:
         return (
             np.empty(0, dtype=np.uint64),
@@ -128,6 +128,43 @@ def hashes_from_base(
     return combined[same_row]
 
 
+class GramCounts:
+    """(distinct key, count) per n-gram order for one batch of texts —
+    the input of every hashed sketch in ``SketchSpec.feed``'s tokens
+    mode, tokenized once and derived lazily per order.
+
+    With the compiled kernels (``core/native.py``) every order, unigrams
+    included, comes from one per-occurrence hash array: one pass hashes
+    each token occurrence straight from the Arrow buffers, and one pass
+    per order rolls the n-gram combine and sums equal keys in a hash
+    table.  Without them, the numpy path derives the same keys and
+    counts from ``token_base``.  Counts are summed per 64-bit key on
+    both paths, so two token strings sharing a hash count as one key.
+    Key order differs between the paths, which no sketch update can
+    observe.
+    """
+
+    def __init__(self, arr: pa.Array | pa.ChunkedArray, seed: int, lowercase: bool = False):
+        flat, self._parents = _tokens(arr, lowercase)
+        self._hashes = hash_strings_native(flat, seed)
+        self._base = _base_of(flat, self._parents, seed) if self._hashes is None else None
+        self._orders: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+
+    def counts(self, ngram: int = 1) -> tuple[np.ndarray, np.ndarray]:
+        """(distinct uint64 keys, int64 occurrence counts) of the order-``ngram`` grams."""
+        if ngram not in self._orders:
+            if self._hashes is not None:
+                self._orders[ngram] = native.gram_counts(self._hashes, self._parents, ngram)
+            elif ngram <= 1:
+                hd, idx, _ = self._base
+                self._orders[ngram] = unique_with_counts(
+                    hd, np.bincount(idx, minlength=len(hd)).astype(np.int64)
+                )
+            else:
+                self._orders[ngram] = unique_with_counts(hashes_from_base(self._base, ngram))
+        return self._orders[ngram]
+
+
 def token_hashes(
     arr: pa.Array | pa.ChunkedArray,
     seed: int,
@@ -158,11 +195,7 @@ def ngram_occurrences(
     path (``token_hashes``) exactly; strings are built vectorized with
     ``binary_join_element_wise``.
     """
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if lowercase:
-        arr = pc.utf8_lower(arr)
-    flat, parents = tokenize_batch(arr)
+    flat, parents = _tokens(arr, lowercase)
     n = len(flat)
     if n == 0 or n < ngram:
         return np.empty(0, dtype=np.uint64), pa.array([], type=pa.string())
@@ -230,23 +263,6 @@ def ngram_count_df(
     if min_count is not None:
         out = out.filter(F.col("cnt") >= min_count)
     return out
-
-
-def unique_token_counts(
-    arr: pa.Array | pa.ChunkedArray, lowercase: bool = False
-) -> tuple[np.ndarray, np.ndarray]:
-    """(unique token strings, counts) for a batch of texts — the map-side
-    combine primitive for exact second passes."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if lowercase:
-        arr = pc.utf8_lower(arr)
-    flat, _ = tokenize_batch(arr)
-    vc = flat.value_counts()
-    return (
-        np.asarray(vc.field("values").to_pandas(), dtype=object),
-        vc.field("counts").to_numpy(zero_copy_only=False).astype(np.int64),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -40,9 +40,9 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import make_sketch, sketch_from_bytes
-from ..core.base import Sketch, unique_with_counts
+from ..core.base import Sketch
 from ..core.hashing import hash_strings, hash_u64
-from ..functions.text import hashes_from_base, token_base, tokenize_batch
+from ..functions.text import GramCounts, tokenize_batch
 
 __all__ = [
     "SketchSpec",
@@ -255,47 +255,19 @@ class SketchSpec:
                 keys = hash_u64(col.to_numpy(zero_copy_only=False), seed=self._seed())
             sketch.update_hashed(keys)
             return len(keys)
-        # shared tokenize+dictionary base per (column, lowercase, seed):
-        # every n-gram order and the unigram count path derive from it,
-        # so a 4-order multi-length job tokenizes each batch exactly once
-        base_key = ("tokbase", self.column, self.lowercase, self._seed())
-        if cache is not None and base_key in cache:
-            base = cache[base_key]
-        else:
-            base = token_base(col, seed=self._seed(), lowercase=self.lowercase)
+        # one tokenization per (column, lowercase, seed) and batch: every
+        # n-gram order of every spec derives its keys and counts from it
+        key = ("tokens", self.column, self.lowercase, self._seed())
+        grams = cache.get(key) if cache is not None else None
+        if grams is None:
+            grams = GramCounts(col, seed=self._seed(), lowercase=self.lowercase)
             if cache is not None:
-                cache[base_key] = base
-        if self.ngram <= 1:
-            # fast path: dictionary-unique hashes + occurrence bincount
-            # (no per-occurrence hashing, no sort); the bincount itself
-            # is cached too so N unigram specs pay it once per batch
-            key = ("tok1", self.column, self.lowercase, self._seed())
-            if cache is not None and key in cache:
-                hd, c = cache[key]
-            else:
-                hd, idx, _ = base
-                c = (
-                    np.bincount(idx, minlength=len(hd)).astype(np.int64)
-                    if len(hd)
-                    else np.empty(0, dtype=np.int64)
-                )
-                if cache is not None:
-                    cache[key] = (hd, c)
-            if len(hd) == 0:
-                return 0
-            sketch.update_hashed(hd, c)
-            return int(c.sum())
-        key = ("ngram", self.column, self.lowercase, self._seed(), self.ngram)
-        if cache is not None and key in cache:
-            uk, c = cache[key]
-        else:
-            keys = hashes_from_base(base, self.ngram)
-            uk, c = unique_with_counts(keys) if len(keys) else (keys, keys)
-            if cache is not None:
-                cache[key] = (uk, c)
-        if len(uk):
-            sketch.update_hashed(uk, c)
-        return int(c.sum()) if len(uk) else 0
+                cache[key] = grams
+        uk, c = grams.counts(self.ngram)
+        if len(uk) == 0:
+            return 0
+        sketch._update_unique(uk, c)
+        return int(c.sum())
 
 
 _PARTIAL_FIELDS = [
@@ -1034,6 +1006,41 @@ def fd_spectrum(
     )
 
 
+def _fd_scores(batches: Iterator[pa.RecordBatch], v: np.ndarray) -> Iterator[pa.RecordBatch]:
+    """fd_residuals' map pass: score every (id, vector) batch against
+    the top right singular vectors ``v`` (k x d); zero-row batches
+    (empty partitions) yield nothing."""
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        ids = batch.column(0)
+        col = batch.column(1)
+        valid = col.drop_null()
+        if len(valid) != len(col):
+            raise ValueError("fd_residuals: null vector (filter first)")
+        vals = valid.flatten()
+        if vals.null_count:
+            raise ValueError("fd_residuals: null element inside a vector")
+        flat = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.float64)
+        mat = flat.reshape(len(col), -1)
+        if mat.shape[1] != v.shape[1]:
+            raise ValueError(
+                f"expected d={v.shape[1]} columns, got {mat.shape[1]}"
+            )
+        sq = np.einsum("ij,ij->i", mat, mat)
+        proj = mat @ v.T
+        res = np.maximum(sq - np.einsum("ij,ij->i", proj, proj), 0.0)
+        ratio = np.divide(res, sq, out=np.zeros_like(res), where=sq > 0)
+        yield pa.RecordBatch.from_pydict(
+            {
+                "_id": ids,
+                "sq_norm": pa.array(sq, pa.float64()),
+                "residual": pa.array(res, pa.float64()),
+                "ratio": pa.array(ratio, pa.float64()),
+            }
+        )
+
+
 def fd_residuals(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1070,34 +1077,7 @@ def fd_residuals(
     bvt = sc.broadcast(np.ascontiguousarray(vt))
 
     def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        v = bvt.value
-        for batch in batches:
-            ids = batch.column(0)
-            col = batch.column(1)
-            valid = col.drop_null()
-            if len(valid) != len(col):
-                raise ValueError("fd_residuals: null vector (filter first)")
-            vals = valid.flatten()
-            if vals.null_count:
-                raise ValueError("fd_residuals: null element inside a vector")
-            flat = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.float64)
-            mat = flat.reshape(len(col), -1)
-            if mat.shape[1] != v.shape[1]:
-                raise ValueError(
-                    f"expected d={v.shape[1]} columns, got {mat.shape[1]}"
-                )
-            sq = np.einsum("ij,ij->i", mat, mat)
-            proj = mat @ v.T
-            res = np.maximum(sq - np.einsum("ij,ij->i", proj, proj), 0.0)
-            ratio = np.divide(res, sq, out=np.zeros_like(res), where=sq > 0)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "_id": ids,
-                    "sq_norm": pa.array(sq, pa.float64()),
-                    "residual": pa.array(res, pa.float64()),
-                    "ratio": pa.array(ratio, pa.float64()),
-                }
-            )
+        return _fd_scores(batches, bvt.value)
 
     id_type = dict(df.dtypes)[id_col]
     out = df.select(F.col(id_col), F.col(vec_col)).mapInArrow(

@@ -1613,9 +1613,9 @@ def _line_cte(
     table_expr: str, text_col: str, id_col: str, min_docs: int, min_chars: int,
     sep: str = "\n",
 ) -> str:
-    _check_sep(sep)
     """Shared DuckDB CTE chain: per-doc lines, distinct eligible keys,
     and the boilerplate (df >= min_docs) line set."""
+    _check_sep(sep)
     return f"""
         WITH ln AS (
           SELECT {id_col}, string_split({text_col}, {_sep_sql(sep)}) AS ls

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -50,3 +51,24 @@ def sf001():
 @pytest.fixture(scope="session")
 def sf01():
     return os.path.join(TESTDATA, "sf0.01")
+
+
+@contextmanager
+def native_disabled():
+    """Run the block on the numpy/python fallbacks of ``core.native``,
+    exactly as a process without a C compiler would."""
+    from sketch_spark.core import native
+
+    saved = native._lib, native._tried
+    native._lib, native._tried = None, True
+    try:
+        yield
+    finally:
+        native._lib, native._tried = saved
+
+
+def require_native():
+    from sketch_spark.core import native
+
+    if native._get() is None:
+        pytest.skip("compiled kernels unavailable (no C compiler)")

@@ -12,6 +12,7 @@ from hypothesis import given, settings, strategies as st
 
 from sketch_spark.core import CountMin, CountMinCU, sketch_from_bytes
 from sketch_spark.core.base import unique_with_counts
+from tests.conftest import native_disabled, require_native
 
 
 def zipf_tokens(rng, n, vocab=2000, a=1.3):
@@ -185,3 +186,124 @@ def test_property_cm_merge_homomorphism(toks, nparts):
     for p in parts[1:]:
         acc.merge(p)
     assert (acc.table == whole.table).all()
+
+
+# ------------------------------------------- compiled update vs numpy update
+
+
+def _native_and_fallback(build):
+    """``build()`` run on the compiled kernel and on the numpy fallback."""
+    require_native()
+    nat = build()
+    with native_disabled():
+        fb = build()
+    assert nat.to_bytes() == fb.to_bytes(), "native and fallback states differ"
+    return nat, fb
+
+
+def _exact(keys, counts=None):
+    out = {}
+    for i, k in enumerate(keys.tolist()):
+        out[k] = out.get(k, 0) + (1 if counts is None else counts[i])
+    return out
+
+
+def test_cmcu_native_duplicate_keys_in_batch():
+    keys = np.array([5, 9, 5, 5, 2**63, 9, 0, 2**64 - 1, 0], dtype=np.uint64)
+    weights = np.arange(len(keys), dtype=np.int64)
+
+    order = np.argsort(keys, kind="stable")
+    uk, uc = unique_with_counts(keys)
+
+    def build():
+        cu = CountMinCU(depth=4, log2_width=4, seed=3)
+        cu.update_hashed(keys)
+        cu.update_hashed(keys, weights)
+        # sorted with repeats must still aggregate; strictly increasing need not
+        cu.update_hashed(keys[order], weights[order])
+        cu.update_hashed(uk, uc)
+        return cu
+
+    for cu in _native_and_fallback(build):
+        weighted = _exact(keys, weights)
+        exact = {k: 2 * n + 2 * weighted[k] for k, n in _exact(keys).items()}
+        uk = np.array(list(exact), dtype=np.uint64)
+        assert (cu.estimate_hashed(uk) >= np.array(list(exact.values()))).all()
+        assert cu.total == 2 * len(keys) + 2 * int(weights.sum())
+
+
+def test_cmcu_native_sums_tokens_sharing_a_hash():
+    """Tokens longer than 64 bytes hash their first 64 bytes and their
+    length, so these two collide; their counts must add, not max."""
+    a, b = "p" * 64 + "x", "p" * 64 + "y"
+    cm = CountMinCU(depth=4, log2_width=10, seed=5)
+    ha, hb = cm.hash_tokens([a, b])
+    assert ha == hb
+
+    def build():
+        cu = CountMinCU(depth=4, log2_width=10, seed=5)
+        cu.update_tokens([a, b, a, "q"])
+        cu.update_tokens(np.array([a, b]), np.array([2, 5]))
+        return cu
+
+    for cu in _native_and_fallback(build):
+        assert cu.estimate_tokens([a])[0] >= 3 + 7
+        assert cu.estimate_tokens(["q"])[0] >= 1
+
+
+def test_cmcu_native_weighted_int_and_float_counts():
+    keys = np.array([11, 12, 11, 13, 12, 11], dtype=np.uint64)
+    ints = np.array([3, 0, 7, 2**40, 1, 2], dtype=np.int64)
+    small = np.array([1, 2, 3, 4, 5, 6], dtype=np.uint16)
+    floats = np.array([0.5, 0.7, 2.9, 1.2, 0.4, 0.2])
+
+    def build():
+        cu = CountMinCU(depth=3, log2_width=5, seed=7)
+        cu.update_hashed(keys, ints)
+        cu.update_hashed(keys, small)
+        cu.update_hashed(keys, floats)
+        return cu
+
+    for cu in _native_and_fallback(build):
+        want = _exact(keys, ints)
+        for k, c in _exact(keys, small.astype(np.int64)).items():
+            want[k] += c
+        # float weights sum per key in float64, then truncate
+        for k, c in _exact(keys, floats).items():
+            want[k] += int(c)
+        uk = np.array(list(want), dtype=np.uint64)
+        assert (cu.estimate_hashed(uk) >= np.array(list(want.values()))).all()
+
+
+def test_cmcu_native_zero_length_input():
+    empty = np.empty(0, dtype=np.uint64)
+
+    def build():
+        cu = CountMinCU(depth=4, log2_width=6, seed=1)
+        cu.update_hashed(empty)
+        cu.update_hashed(empty, np.empty(0, dtype=np.int64))
+        cu._update_unique(empty, np.empty(0, dtype=np.int64))
+        cu.update_tokens([])
+        return cu
+
+    for cu in _native_and_fallback(build):
+        assert cu.total == 0 and not cu.table.any()
+        assert cu.to_bytes() == CountMinCU(depth=4, log2_width=6, seed=1).to_bytes()
+
+
+def test_cmcu_native_updates_a_deserialized_table(stream):
+    half = len(stream) // 2
+    first = CountMinCU(depth=4, log2_width=9, seed=2)
+    first.update_tokens(stream[:half])
+    blob = first.to_bytes()
+
+    def build():
+        cu = sketch_from_bytes(blob)
+        cu.update_tokens(stream[half:])
+        return cu
+
+    for cu in _native_and_fallback(build):
+        exact = exact_counts(stream)
+        toks = list(exact)
+        assert (cu.estimate_tokens(toks) >= np.array([exact[t] for t in toks])).all()
+        assert cu.total == len(stream)

@@ -237,6 +237,34 @@ def test_fd_residuals_validation(spark):
     assert len(ok) == 1
 
 
+def test_fd_residuals_empty_partition(spark):
+    """A zero-row Arrow batch (an empty partition) scores to nothing
+    instead of failing the reshape, and empty partitions in a real
+    job leave the other rows' scores intact."""
+    import pyarrow as pa
+
+    from sketch_spark.operators.aggregate import _fd_scores, fd_residuals
+
+    v = np.eye(2)[:1]
+    typ = pa.list_(pa.float32())
+    empty = pa.RecordBatch.from_pydict(
+        {"vec_id": pa.array([], pa.int64()), "embedding": pa.array([], typ)}
+    )
+    one = pa.RecordBatch.from_pydict(
+        {"vec_id": pa.array([7], pa.int64()), "embedding": pa.array([[3.0, 4.0]], typ)}
+    )
+    out = list(_fd_scores(iter([empty, one, empty]), v))
+    assert len(out) == 1 and out[0].num_rows == 1
+    assert out[0].column("residual").to_pylist() == [16.0]
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 2.0]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    ).repartition(8)
+    rows = fd_residuals(df, ell=2, k=1).collect()
+    assert sorted(r["vec_id"] for r in rows) == [1, 2, 3]
+
+
 def test_vector_mode_fuses_with_other_specs(spark):
     """The reference's 'all configs in one scan' (P1) must hold across
     modes: an FD (vector) spec and an HLL (value) spec build from the
