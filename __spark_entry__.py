@@ -19,6 +19,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W
 
+from sketch_spark.functions.text import tokens_col, tokens_sql
+
+_TOKS = tokens_sql("text")
+
 
 _SHIPPED_SESSIONS: set[int] = set()
 
@@ -48,12 +52,11 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _tokens(df: DataFrame, extra_cols: list[str] | None = None) -> DataFrame:
-    """Exploded (tok, ...) rows: the exact-pass tokenizer (JVM-side),
-    matching regexp_split_to_array(text, '\\s+') in DuckDB."""
-    cols = [F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")] + [
+    """Exploded (tok, ...) rows of the text column (JVM-side)."""
+    cols = [F.explode(tokens_col("text")).alias("tok")] + [
         F.col(c) for c in (extra_cols or [])
     ]
-    return df.select(*cols).filter(F.col("tok") != "")
+    return df.select(*cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1856,7 +1859,6 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard for doc pairs (doc_id < 100) with
     J >= 0.9 — fully SQL-expressible n-gram dedup oracle (n=1; the
     3-shingle variant backs minhash_near_dups, verified in pytest)."""
-    from sketch_spark.functions.text import tokens_col
 
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     sh = docs.select(
@@ -1947,7 +1949,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         surv.withColumn(
-            "n_tok", F.size(F.split(F.trim(F.col("text")), r"\s+"))
+            "n_tok", F.size(tokens_col("text"))
         )
         .join(dec.select("doc_id", "decile"), "doc_id")
         .groupBy("lang", "decile")
@@ -2371,8 +2373,7 @@ def q_streaming_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 2).parquet(in_dir)
     )
     agg = (
-        stream.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-        .filter(F.col("tok") != "")
+        stream.select(F.explode(tokens_col("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("cnt"))
     )
@@ -3099,6 +3100,18 @@ def _source_quality_oracle_sql() -> str:
     return source_quality_report_sql()
 
 
+def _doc_stats_oracle_sql() -> str:
+    from sketch_spark.functions.text import punct_ratio_sql, quality_sql, stopword_ratio_sql
+
+    q = quality_sql("text")
+    cols = [f"{q[k]} AS {k}" for k in ("n_chars", "n_tokens", "n_distinct_tokens", "distinct_ratio")]
+    cols += [
+        f"{stopword_ratio_sql('text')} AS stopword_ratio",
+        f"{punct_ratio_sql('text')} AS punct_ratio",
+    ]
+    return f"SELECT doc_id, {', '.join(cols)} FROM documents WHERE doc_id < 100"
+
+
 def _lm_perplexity_oracle_sql() -> str:
     from sketch_spark.operators.lm import bigram_lm_perplexity_sql
 
@@ -3122,7 +3135,7 @@ def _corpus_curation_oracle_sql() -> str:
           FROM documents d
           JOIN ({clean_corpus_sql()}) c ON c.doc_id = d.doc_id
         ), dtoks AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM cleaned
+          SELECT doc_id, {_TOKS} AS t FROM cleaned
         ), sh AS (
           SELECT DISTINCT doc_id,
                  unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
@@ -3162,7 +3175,7 @@ def _corpus_curation_oracle_sql() -> str:
         )
         SELECT s.lang, d.decile,
                CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(len(regexp_split_to_array(trim(s.text), '\\s+'))) AS BIGINT)
+               CAST(sum(len({tokens_sql("s.text")})) AS BIGINT)
                  AS n_tokens
         FROM surv s JOIN dec d ON d.doc_id = s.doc_id
         GROUP BY 1, 2
@@ -3422,17 +3435,20 @@ _COSINE_TOPK_SQL = """
     ) WHERE rank <= 5
 """
 
-# exact cross-half Jaccard pairs: the oracle for BOTH incremental_dedup
-# (batch) and streaming_incremental_dedup (same probe, micro-batched)
-_INCREMENTAL_DEDUP_SQL = """
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
+# per-doc distinct word 3-shingles of the documents: CTEs toks -> sh
+_SHINGLES3_CTE = f"""toks AS (
+      SELECT doc_id, {_TOKS} AS t FROM documents
     ), sh AS (
       SELECT DISTINCT doc_id,
              unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
                      FOR i IN generate_series(1, len(t)-2)]) AS shingle
       FROM toks WHERE len(t) >= 3
-    ), sizes AS (
+    )"""
+
+# exact cross-half Jaccard pairs: the oracle for BOTH incremental_dedup
+# (batch) and streaming_incremental_dedup (same probe, micro-batched)
+_INCREMENTAL_DEDUP_SQL = f"""
+    WITH {_SHINGLES3_CTE}, sizes AS (
       SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
     ), inter AS (
       SELECT a.doc_id AS id_new, b.doc_id AS id_old, count(*) AS ni
@@ -3448,14 +3464,16 @@ _INCREMENTAL_DEDUP_SQL = """
     WHERE ni / CAST(sa.n + sb.n - ni AS DOUBLE) >= 0.4
 """
 
-_TOKENS_CTE = (
-    "SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok{extra} "
-    "FROM documents{where}"
-)
+_TOKEN_COUNTS_SQL = f"""
+    SELECT tok AS token, CAST(count(*) AS BIGINT) AS cnt
+    FROM (SELECT unnest({_TOKS}) AS tok FROM documents)
+    GROUP BY tok HAVING count(*) >= 200
+"""
 
 
 def oracle_sql() -> dict[str, str]:
     from sketch_spark.functions.text import (
+        bpe_ish_tokens_sql,
         lang_id_ngram_sql,
         lang_id_sql,
         repetition_sql,
@@ -3468,33 +3486,28 @@ def oracle_sql() -> dict[str, str]:
             n_iter=6, damping=85, unit=10**12, seed_tmpl="({c} % 16 = 0)"
         ),
         "link_hits": _hits_oracle_sql(n_iter=5, unit=10**9),
-        "token_counts": """
-            SELECT tok AS token, CAST(count(*) AS BIGINT) AS cnt
-            FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok FROM documents)
-            WHERE tok <> ''
-            GROUP BY tok HAVING count(*) >= 200
-        """,
-        "bigram_counts": """
+        "token_counts": _TOKEN_COUNTS_SQL,
+        "bigram_counts": f"""
             WITH toks AS (
               SELECT doc_id,
-                     unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok,
-                     generate_subscripts(regexp_split_to_array(trim(text), '\\s+'), 1) AS pos
+                     unnest({_TOKS}) AS tok,
+                     generate_subscripts({_TOKS}, 1) AS pos
               FROM documents
             )
             SELECT a.tok || ' ' || b.tok AS bigram, CAST(count(*) AS BIGINT) AS cnt
             FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
             GROUP BY 1 HAVING count(*) >= 25
         """,
-        "emerging_hh": """
+        "emerging_hh": f"""
             WITH tc AS (
               SELECT tok, count(*) AS cnt
-              FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+              FROM (SELECT unnest({_TOKS}) AS tok
                     FROM documents
                     WHERE source NOT IN ('src15','src16','src17','src18','src19'))
               GROUP BY tok
             ), cc AS (
               SELECT tok, count(*) AS cnt
-              FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+              FROM (SELECT unnest({_TOKS}) AS tok
                     FROM documents
                     WHERE source IN ('src15','src16','src17','src18','src19'))
               GROUP BY tok
@@ -3504,11 +3517,11 @@ def oracle_sql() -> dict[str, str]:
             FROM tc LEFT JOIN cc USING (tok)
             WHERE tc.cnt >= 100 AND tc.cnt / 2.0 > COALESCE(cc.cnt, 0)
         """,
-        "emerging_bigrams": """
+        "emerging_bigrams": f"""
             WITH toks AS (
               SELECT doc_id, source,
-                     unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok,
-                     generate_subscripts(regexp_split_to_array(trim(text), '\\s+'), 1) AS pos
+                     unnest({_TOKS}) AS tok,
+                     generate_subscripts({_TOKS}, 1) AS pos
               FROM documents
             ), bg AS (
               SELECT a.source, a.tok || ' ' || b.tok AS bigram
@@ -3527,35 +3540,21 @@ def oracle_sql() -> dict[str, str]:
             FROM tc LEFT JOIN cc USING (bigram)
             WHERE tc.cnt >= 25 AND tc.cnt / 2.0 > COALESCE(cc.cnt, 0)
         """,
-        "distinct_tokens_by_lang": """
+        "distinct_tokens_by_lang": f"""
             SELECT lang, CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct
-            FROM (SELECT lang, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok FROM documents)
-            WHERE tok <> ''
+            FROM (SELECT lang, unnest({_TOKS}) AS tok FROM documents)
             GROUP BY lang
         """,
-        "doc_stats": """
-            SELECT doc_id,
-                   CAST(length(text) AS BIGINT) AS n_chars,
-                   CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
-                   CAST(len(list_distinct(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT) AS n_distinct_tokens,
-                   round(len(list_distinct(regexp_split_to_array(trim(text), '\\s+')))
-                         / CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE), 4) AS distinct_ratio,
-                   round(len(list_intersect(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')),
-                         ['the','a','an','and','or','of','to','in','is','are','was','were','be','been','it','this','that','for','on','with','as','at','by']))
-                         / CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS DOUBLE), 4) AS stopword_ratio,
-                   round(length(regexp_replace(text, '[A-Za-z0-9 \\t\\n\\x0B\\f\\r]', '', 'g'))
-                         / CAST(greatest(length(text), 1) AS DOUBLE), 4) AS punct_ratio
-            FROM documents WHERE doc_id < 100
-        """,
+        "doc_stats": _doc_stats_oracle_sql(),
         "repetition_stats": repetition_sql(),
         "pii_scan": _pii_oracle_sql(),
         "url_normalize": _url_oracle_sql(rollup=False),
         "url_dedup": _url_dedup_oracle_sql(),
         "domain_rollup": _url_oracle_sql(rollup=True),
-        "token_chunks": """
+        "token_chunks": f"""
             WITH c AS (
               SELECT doc_id,
-                     CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens
+                     CAST(len({_TOKS}) AS BIGINT) AS n_tokens
               FROM documents
             ), o AS (
               SELECT doc_id, n_tokens,
@@ -3572,9 +3571,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         "training_shards": _shard_manifest_oracle(),
         "nb_classifier": _nb_classifier_oracle(),
-        "decontaminate": """
+        "decontaminate": f"""
             WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
+              SELECT doc_id, {_TOKS} AS t FROM documents
             ), grams AS (
               SELECT doc_id,
                      unnest(list_distinct(
@@ -3589,12 +3588,9 @@ def oracle_sql() -> dict[str, str]:
             WHERE doc_id % 10 <> 0
             GROUP BY doc_id
         """,
-        "mg_heavy_hitters": """
+        "mg_heavy_hitters": f"""
             WITH tt AS (
-              SELECT tok
-              FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-                    FROM documents)
-              WHERE tok <> ''
+              SELECT unnest({_TOKS}) AS tok FROM documents
             )
             SELECT tok AS token, CAST(count(*) AS BIGINT) AS cnt
             FROM tt GROUP BY tok
@@ -4192,11 +4188,11 @@ def oracle_sql() -> dict[str, str]:
             FROM lineitem
             GROUP BY ROLLUP (l_returnflag, l_linestatus)
         """,
-        "bigram_except": """
+        "bigram_except": f"""
             WITH toks AS (
               SELECT doc_id, source,
-                     unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok,
-                     generate_subscripts(regexp_split_to_array(trim(text), '\\s+'), 1) AS pos
+                     unnest({_TOKS}) AS tok,
+                     generate_subscripts({_TOKS}, 1) AS pos
               FROM documents WHERE source IN ('src0', 'src1')
             ), bg AS (
               SELECT DISTINCT a.source, a.tok || ' ' || b.tok AS bigram
@@ -4221,9 +4217,9 @@ def oracle_sql() -> dict[str, str]:
                    round(quantile_cont(l_extendedprice, 0.9), 4) AS p90
             FROM lineitem
         """,
-        "ngram_jaccard_pairs": """
+        "ngram_jaccard_pairs": f"""
             WITH sh AS (
-              SELECT DISTINCT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS shingle
+              SELECT DISTINCT doc_id, unnest({_TOKS}) AS shingle
               FROM documents WHERE doc_id < 100
             ), sizes AS (
               SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1
@@ -4384,15 +4380,8 @@ def oracle_sql() -> dict[str, str]:
         # test_lsh_banding_recall_tracks_theory plants signature pairs
         # across J in {0.35..0.75} and pins measured bucket recall to
         # 1-(1-s^r)^b within binomial tolerance
-        "minhash_near_dups": """
-            WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
-            ), sh AS (
-              SELECT DISTINCT doc_id,
-                     unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                             FOR i IN generate_series(1, len(t)-2)]) AS shingle
-              FROM toks WHERE len(t) >= 3
-            ), sizes AS (
+        "minhash_near_dups": f"""
+            WITH {_SHINGLES3_CTE}, sizes AS (
               SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
             ), inter AS (
               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ni
@@ -4408,15 +4397,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # connected components via transitive-closure recursive CTE over
         # the exact pair graph; survivors = min-reachable-id == own id
-        "dedup_corpus": """
-            WITH RECURSIVE toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
-            ), sh AS (
-              SELECT DISTINCT doc_id,
-                     unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                             FOR i IN generate_series(1, len(t)-2)]) AS shingle
-              FROM toks WHERE len(t) >= 3
-            ), sizes AS (
+        "dedup_corpus": f"""
+            WITH RECURSIVE {_SHINGLES3_CTE}, sizes AS (
               SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
             ), inter AS (
               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ni
@@ -4503,20 +4485,16 @@ def oracle_sql() -> dict[str, str]:
         # probe of the same static even-half index (micro-batch
         # boundaries must not change the answer)
         "streaming_incremental_dedup": _INCREMENTAL_DEDUP_SQL,
-        "skewed_host_stats": """
+        "skewed_host_stats": f"""
             SELECT CASE WHEN doc_id % 2 = 0 THEN 'mega.example.com'
                         ELSE 'host-' || CAST(doc_id % 25 AS VARCHAR) END AS host,
                    CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(len(list_filter(
-                       regexp_split_to_array(trim(text), '\\s+'), x -> x <> ''))) AS BIGINT
-                   ) AS n_tokens
+                   CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens
             FROM documents GROUP BY 1
         """,
-        "keyed_stats_by_source": """
+        "keyed_stats_by_source": f"""
             SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(len(list_filter(
-                       regexp_split_to_array(trim(text), '\\s+'), x -> x <> ''))) AS BIGINT
-                   ) AS n_tokens
+                   CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens
             FROM documents GROUP BY source
         """,
         "bloom_semi_join": """
@@ -4530,15 +4508,14 @@ def oracle_sql() -> dict[str, str]:
                    CAST(count(*) AS BIGINT) AS n_events
             FROM events GROUP BY 1
         """,
-        "bpe_token_counts": """
+        "bpe_token_counts": f"""
             SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM (
-              SELECT unnest(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]')) AS token
-              FROM documents
+              SELECT unnest({bpe_ish_tokens_sql("text")}) AS token FROM documents
             ) GROUP BY token HAVING count(*) >= 500
         """,
-        "winnow_fingerprints": """
+        "winnow_fingerprints": f"""
             WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+              SELECT doc_id, {_TOKS} AS t
               FROM documents WHERE doc_id < 100
             ), grams AS (
               SELECT doc_id,
@@ -4568,26 +4545,16 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
         """,
         "simhash_md5": simhash_md5_sql(),
-        "top_df_tokens": """
+        "top_df_tokens": f"""
             WITH toks AS (
-              SELECT DISTINCT doc_id, tok FROM (
-                SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-                FROM documents)
-              WHERE tok <> ''
+              SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok FROM documents
             )
             SELECT tok AS token, CAST(count(*) AS BIGINT) AS df
             FROM toks GROUP BY tok
             ORDER BY df DESC, token ASC LIMIT 50
         """,
-        "leakage_safe_split": """
-            WITH RECURSIVE toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
-            ), sh AS (
-              SELECT DISTINCT doc_id,
-                     unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                             FOR i IN generate_series(1, len(t)-2)]) AS shingle
-              FROM toks WHERE len(t) >= 3
-            ), sizes AS (
+        "leakage_safe_split": f"""
+            WITH RECURSIVE {_SHINGLES3_CTE}, sizes AS (
               SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
             ), inter AS (
               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ni
@@ -4658,15 +4625,15 @@ def oracle_sql() -> dict[str, str]:
             )
             ORDER BY u ASC, doc_id ASC LIMIT 20
         """,
-        "kmv_distinct_by_lang": """
+        "kmv_distinct_by_lang": f"""
             WITH toks AS (
-              SELECT lang, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+              SELECT lang, unnest({_TOKS}) AS tok
               FROM documents
             ), u AS (
               SELECT DISTINCT lang,
                      CAST(CAST('0x' || substr(md5('1:' || tok), 1, 8)
                           AS UBIGINT) AS DOUBLE) / 4294967296.0 AS u
-              FROM toks WHERE tok <> ''
+              FROM toks
             ), r AS (
               SELECT lang, u,
                      row_number() OVER (PARTITION BY lang ORDER BY u ASC) AS rnk
@@ -4679,15 +4646,15 @@ def oracle_sql() -> dict[str, str]:
             FROM r WHERE rnk <= 256
             GROUP BY lang
         """,
-        "kmv_lang_similarity": """
+        "kmv_lang_similarity": f"""
             WITH toks AS (
-              SELECT lang, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+              SELECT lang, unnest({_TOKS}) AS tok
               FROM documents
             ), uu AS (
               SELECT DISTINCT lang AS g,
                      CAST(CAST('0x' || substr(md5('1:' || tok), 1, 8)
                           AS UBIGINT) AS DOUBLE) / 4294967296.0 AS u
-              FROM toks WHERE tok <> ''
+              FROM toks
             ), bottom AS (
               SELECT g, u FROM (
                 SELECT g, u, row_number() OVER (PARTITION BY g ORDER BY u ASC) AS rnk
@@ -4719,12 +4686,9 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(a*b) AS BIGINT) AS n_both
             FROM kept GROUP BY 1, 2
         """,
-        "tfidf_top_terms": """
+        "tfidf_top_terms": f"""
             WITH exploded AS (
-              SELECT doc_id, tok FROM (
-                SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-                FROM documents)
-              WHERE tok <> ''
+              SELECT doc_id, unnest({_TOKS}) AS tok FROM documents
             ), tf AS (
               SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
               FROM exploded GROUP BY doc_id, tok
@@ -4747,12 +4711,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # streaming==batch: the streamed snapshot must match the same
         # exact-count oracle the batch token_counts query matches
-        "streaming_token_counts": """
-            SELECT tok AS token, CAST(count(*) AS BIGINT) AS cnt
-            FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok FROM documents)
-            WHERE tok <> ''
-            GROUP BY tok HAVING count(*) >= 200
-        """,
+        "streaming_token_counts": _TOKEN_COUNTS_SQL,
         "warc_roundtrip": """
             SELECT 'https://example.org/doc/' || CAST(doc_id AS VARCHAR) AS url,
                    CAST(TIMESTAMP '2026-01-01 00:00:00'

@@ -244,10 +244,10 @@ def main() -> None:
     # (eps, delta) error report for the CMCU just built (north metric):
     # exact counts via one JVM groupBy, estimates from the merged state
     from pyspark.sql import functions as F
+    from sketch_spark.functions.text import tokens_col
 
     exact = (
-        docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-        .filter(F.col("tok") != "")
+        docs.select(F.explode(tokens_col("text")).alias("tok"))
         .groupBy("tok")
         .count()
         .collect()

@@ -1023,7 +1023,7 @@ def gram_counts(
 ) -> tuple[np.ndarray, np.ndarray] | None:
     """(distinct n-gram keys, occurrence counts) from per-occurrence
     token hashes ``h`` and their row ``parents`` — the rolling combine
-    and same-row guard of ``text.hashes_from_base`` followed by
+    and same-row guard of ``text._roll_ngrams`` followed by
     ``unique_with_counts``, in one pass and without a sort.  Keys come
     in no particular order.  ``None`` when the kernel is unavailable."""
     lib = _get()

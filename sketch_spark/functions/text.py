@@ -2,6 +2,19 @@
 path, and JVM-side (Catalyst-codegen'd) expressions for SQL-checkable
 text analysis.
 
+This module is the only one that knows what a token is: a maximal run
+of non-whitespace, whitespace being the 29 code points of ``_WS_CLASS``.
+The rule has three faces, and every other module takes its tokens from
+one of them:
+
+* Arrow: ``tokenize_batch`` (``utf8_split_whitespace``), under the
+  sketch hot path and every executor-side operator;
+* Catalyst: ``tokens_col`` / ``word_ngrams_col``;
+* DuckDB: ``tokens_sql``, a SQL fragment for the oracles.
+
+None of the faces ever yields an empty token; empty and
+whitespace-only text has zero tokens.
+
 The hot path mirrors the reference's fused scan->tokenize->hash loop
 (src/sketch.cpp:98-171) as whole-batch ops: Arrow
 tokenizes, then ``GramCounts`` hashes and counts through the compiled
@@ -26,6 +39,21 @@ from ..core.base import unique_with_counts
 from ..core.hashing import hash_strings, hash_strings_native, mix_u64
 
 _NGRAM_PRIME = np.uint64(0x9DDFEA08EB382D69)
+
+# What ``utf8_split_whitespace`` splits on, as a regex class for the two
+# SQL faces: Python's ``str.isspace`` set, i.e. the 25 Unicode
+# White_Space code points plus U+001C-U+001F.  That is the separators
+# (general category Z: U+0020, U+00A0, U+1680, U+2000-U+200A, U+2028,
+# U+2029, U+202F, U+205F, U+3000) plus the controls U+0009-U+000D,
+# U+001C-U+001F and U+0085.  Never ``\s``: Java's is ASCII-only and
+# RE2's (DuckDB) also leaves out U+000B, so neither matches Arrow or the
+# other.  Java regex and RE2 read ``\p{Z}`` and ``\x{...}`` alike;
+# ``\p{Z}`` is one table lookup in Java, where the 19 separators spelled
+# out as ranges made Catalyst's split about twice as slow.  It leans on
+# each engine's Unicode tables, so tests/test_token_faces.py runs every
+# code point through all three faces.
+_WS_CLASS = r"\p{Z}\x{9}-\x{d}\x{1c}-\x{1f}\x{85}"
+_WS_RUN = f"[{_WS_CLASS}]+"
 
 
 def tokenize_batch(arr: pa.Array | pa.ChunkedArray) -> tuple[pa.Array, np.ndarray]:
@@ -111,21 +139,27 @@ def hashes_from_base(
     rolling combine over pre-gathered unigram hashes; no re-tokenize,
     no re-hash."""
     hd, idx, parents = base
-    if len(idx) == 0:
-        return np.empty(0, dtype=np.uint64)
     h = hd[idx]
     if ngram <= 1:
         return h
-    n = len(h)
-    if n < ngram:
-        return np.empty(0, dtype=np.uint64)
-    combined = h[: n - ngram + 1].copy()
+    keys, same_row = _roll_ngrams(h, parents, ngram)
+    return keys[same_row]
+
+
+def _roll_ngrams(
+    h: np.ndarray, parents: np.ndarray, ngram: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(key per start position, same-row mask) of the order-``ngram``
+    grams over per-occurrence token hashes ``h``: the rolling combine
+    every n-gram hash in the package is made of (``native.gram_counts``
+    is its compiled twin).  A gram is real only where the mask holds,
+    i.e. its first and last token share a row; fewer than ``ngram``
+    tokens give two empty arrays."""
+    m = max(len(h) - ngram + 1, 0)
+    combined = h[:m].copy()
     for j in range(1, ngram):
-        combined = mix_u64(
-            combined * _NGRAM_PRIME ^ h[j : n - ngram + 1 + j], np.uint64(j)
-        )
-    same_row = parents[: n - ngram + 1] == parents[ngram - 1 :]
-    return combined[same_row]
+        combined = mix_u64(combined * _NGRAM_PRIME ^ h[j : m + j], np.uint64(j))
+    return combined, parents[:m] == parents[ngram - 1 : ngram - 1 + m]
 
 
 class GramCounts:
@@ -203,14 +237,10 @@ def ngram_occurrences(
     h = hd[idx]
     if ngram == 1:
         return h, flat
-    m = n - ngram + 1
-    combined = h[:m].copy()
-    for j in range(1, ngram):
-        combined = mix_u64(combined * _NGRAM_PRIME ^ h[j : m + j], np.uint64(j))
-    shifted = [flat.slice(j, m) for j in range(ngram)]
-    joined = pc.binary_join_element_wise(*shifted, " ")
-    same_row = parents[:m] == parents[ngram - 1 :]
-    return combined[same_row], joined.filter(pa.array(same_row))
+    keys, same_row = _roll_ngrams(h, parents, ngram)
+    m = len(keys)
+    joined = pc.binary_join_element_wise(*[flat.slice(j, m) for j in range(ngram)], " ")
+    return keys[same_row], joined.filter(pa.array(same_row))
 
 
 def ngram_count_df(
@@ -270,11 +300,20 @@ def ngram_count_df(
 # ---------------------------------------------------------------------------
 
 def tokens_col(text: str | Column, lowercase: bool = False) -> Column:
-    """Whitespace token array as a Catalyst expression (stays JVM-side)."""
+    """Token array as a Catalyst expression (stays JVM-side): the same
+    tokens as ``tokenize_batch``; NULL text gives NULL."""
     c = F.col(text) if isinstance(text, str) else text
     if lowercase:
         c = F.lower(c)
-    return F.split(F.trim(c), r"\s+")
+    return F.array_remove(F.split(c, _WS_RUN), "")
+
+
+def tokens_sql(expr: str, lowercase: bool = False) -> str:
+    """DuckDB SQL fragment for the token list of ``expr``: the same
+    tokens as ``tokens_col``; NULL text gives NULL."""
+    if lowercase:
+        expr = f"lower({expr})"
+    return f"list_filter(regexp_split_to_array({expr}, '{_WS_RUN}'), x -> x <> '')"
 
 
 def word_ngrams_col(text: str | Column, n: int, lowercase: bool = False) -> Column:
@@ -308,10 +347,6 @@ def word_ngrams_col(text: str | Column, n: int, lowercase: bool = False) -> Colu
     return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
-# whitespace written out explicitly: Java's \s includes \x0B (vertical
-# tab) while RE2's (DuckDB) does not — an explicit class keeps the
-# Spark expression and its SQL oracle byte-identical on any input
-_WS_CLASS = r" \t\n\x0B\f\r"
 _BPE_ISH_PATTERN = rf"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS_CLASS}]"
 
 
@@ -326,6 +361,11 @@ def bpe_ish_tokens_col(text: str | Column) -> Column:
     """
     c = F.col(text) if isinstance(text, str) else text
     return F.regexp_extract_all(c, F.lit(_BPE_ISH_PATTERN), 0)
+
+
+def bpe_ish_tokens_sql(expr: str) -> str:
+    """DuckDB expression computing exactly ``bpe_ish_tokens_col``."""
+    return f"regexp_extract_all({expr}, '{_BPE_ISH_PATTERN}')"
 
 
 def winnow_fingerprints_col(
@@ -384,15 +424,38 @@ def quality_columns(text: str | Column) -> dict[str, Column]:
     toks = tokens_col(c)
     n_chars = F.length(c)
     n_tokens = F.size(toks)
+    n_distinct = F.size(F.array_distinct(toks))
     return {
         "n_chars": n_chars.cast("long"),
         "n_tokens": n_tokens.cast("long"),
-        "avg_token_len": F.round(
-            (n_chars - (n_tokens - F.lit(1))) / n_tokens, 4
-        ),
-        "n_distinct_tokens": F.size(F.array_distinct(toks)).cast("long"),
-        "distinct_ratio": F.round(F.size(F.array_distinct(toks)) / n_tokens, 4),
+        "avg_token_len": _guarded(n_tokens, (n_chars - (n_tokens - F.lit(1))) / n_tokens),
+        "n_distinct_tokens": n_distinct.cast("long"),
+        "distinct_ratio": _guarded(n_tokens, n_distinct / n_tokens),
     }
+
+
+def quality_sql(expr: str) -> dict[str, str]:
+    """DuckDB expressions computing exactly ``quality_columns``."""
+    toks = tokens_sql(expr)
+    n, nd = f"len({toks})", f"len(list_distinct({toks}))"
+    return {
+        "n_chars": f"CAST(length({expr}) AS BIGINT)",
+        "n_tokens": f"CAST({n} AS BIGINT)",
+        "avg_token_len": _guarded_sql(n, f"(length({expr}) - ({n} - 1)) / CAST({n} AS DOUBLE)"),
+        "n_distinct_tokens": f"CAST({nd} AS BIGINT)",
+        "distinct_ratio": _guarded_sql(n, f"{nd} / CAST({n} AS DOUBLE)"),
+    }
+
+
+def _guarded(den: Column, ratio: Column) -> Column:
+    """``ratio`` rounded to 4 places, or 0.0 unless its denominator
+    ``den`` is positive: zero-token text would otherwise divide by zero,
+    which Spark's ANSI mode raises.  ``_guarded_sql`` is the DuckDB twin."""
+    return F.round(F.when(den > 0, ratio).otherwise(F.lit(0.0)), 4)
+
+
+def _guarded_sql(den: str, ratio: str) -> str:
+    return f"round(CASE WHEN {den} > 0 THEN {ratio} ELSE 0.0 END, 4)"
 
 
 _STOPWORDS = (
@@ -401,19 +464,38 @@ _STOPWORDS = (
 
 
 def punct_ratio_col(text: str | Column) -> Column:
-    """Punctuation-character ratio (chars outside [A-Za-z0-9\\s] over
-    all chars) — the remaining quality signal of the brief's
-    length/punct/stopword trio, pure Catalyst and SQL-identical."""
+    """Punctuation-character ratio (chars that are neither ASCII
+    letters, digits nor whitespace, over all chars) — the remaining
+    quality signal of the brief's length/punct/stopword trio, pure
+    Catalyst and SQL-identical."""
     c = F.col(text) if isinstance(text, str) else text
     n_punct = F.length(F.regexp_replace(c, rf"[A-Za-z0-9{_WS_CLASS}]", ""))
     return F.round(n_punct / F.greatest(F.length(c), F.lit(1)), 4)
 
 
+def punct_ratio_sql(expr: str) -> str:
+    """DuckDB expression computing exactly ``punct_ratio_col``."""
+    return (
+        f"round(length(regexp_replace({expr}, '[A-Za-z0-9{_WS_CLASS}]', '', 'g'))"
+        f" / CAST(greatest(length({expr}), 1) AS DOUBLE), 4)"
+    )
+
+
 def stopword_ratio_col(text: str | Column) -> Column:
+    """Distinct stopwords over distinct lowercased tokens."""
     toks = tokens_col(text, lowercase=True)
     stop = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_stop = F.size(F.array_intersect(toks, stop))
-    return F.round(n_stop / F.size(F.array_distinct(toks)), 4)
+    n_distinct = F.size(F.array_distinct(toks))
+    return _guarded(n_distinct, n_stop / n_distinct)
+
+
+def stopword_ratio_sql(expr: str) -> str:
+    """DuckDB expression computing exactly ``stopword_ratio_col``."""
+    toks = f"list_distinct({tokens_sql(expr, lowercase=True)})"
+    stop = ", ".join(f"'{w}'" for w in _STOPWORDS)
+    n = f"len({toks})"
+    return _guarded_sql(n, f"len(list_intersect({toks}, [{stop}])) / CAST({n} AS DOUBLE)")
 
 
 def repetition_columns(text: str | Column, ns: tuple[int, ...] = (2, 3)) -> dict[str, Column]:
@@ -432,18 +514,15 @@ def repetition_columns(text: str | Column, ns: tuple[int, ...] = (2, 3)) -> dict
     toks = tokens_col(text)
     n_tokens = F.size(toks)
     out: dict[str, Column] = {
-        "dup_token_ratio": F.round(
-            F.lit(1.0) - F.size(F.array_distinct(toks)) / n_tokens, 4
+        "dup_token_ratio": _guarded(
+            n_tokens, F.lit(1.0) - F.size(F.array_distinct(toks)) / n_tokens
         ),
     }
     for n in ns:
         grams = word_ngrams_col(text, n)
         ng = F.size(grams)
-        out[f"dup_{n}gram_ratio"] = F.round(
-            F.when(
-                ng > 0, F.lit(1.0) - F.size(F.array_distinct(grams)) / ng
-            ).otherwise(F.lit(0.0)),
-            4,
+        out[f"dup_{n}gram_ratio"] = _guarded(
+            ng, F.lit(1.0) - F.size(F.array_distinct(grams)) / ng
         )
     srt = F.sort_array(toks)
     init = F.struct(
@@ -457,7 +536,7 @@ def repetition_columns(text: str | Column, ns: tuple[int, ...] = (2, 3)) -> dict
         )
 
     max_run = F.aggregate(srt, init, _step, lambda acc: acc["best"])
-    out["top_token_ratio"] = F.round(max_run / n_tokens, 4)
+    out["top_token_ratio"] = _guarded(n_tokens, max_run / n_tokens)
     return out
 
 
@@ -469,10 +548,11 @@ def repetition_sql(
 ) -> str:
     """DuckDB SQL computing exactly ``repetition_columns`` per row
     (ns=(2,3)); list comprehensions build the gram lists, an
-    unnest+group-by pair computes the per-doc mode count."""
+    unnest+group-by pair computes the per-doc mode count (LEFT-joined
+    back, so zero-token rows stay)."""
     return f"""
         WITH base AS (
-          SELECT {id_col}, regexp_split_to_array(trim({text_col}), '\\s+') AS toks
+          SELECT {id_col}, {tokens_sql(text_col)} AS toks
           FROM {table_expr}{where}
         ), grams AS (
           SELECT {id_col}, toks,
@@ -488,17 +568,16 @@ def repetition_sql(
           SELECT {id_col}, max(c) AS mx, sum(c) AS n FROM tc GROUP BY 1
         )
         SELECT g.{id_col},
-               round(1.0 - len(list_distinct(g.toks)) / CAST(len(g.toks) AS DOUBLE), 4)
-                 AS dup_token_ratio,
-               round(CASE WHEN len(g.bg) > 0
-                     THEN 1.0 - len(list_distinct(g.bg)) / CAST(len(g.bg) AS DOUBLE)
-                     ELSE 0.0 END, 4) AS dup_2gram_ratio,
-               round(CASE WHEN len(g.tg) > 0
-                     THEN 1.0 - len(list_distinct(g.tg)) / CAST(len(g.tg) AS DOUBLE)
-                     ELSE 0.0 END, 4) AS dup_3gram_ratio,
-               round(top.mx / CAST(top.n AS DOUBLE), 4) AS top_token_ratio
-        FROM grams g JOIN top ON g.{id_col} = top.{id_col}
+               {_guarded_sql("len(g.toks)", _dup_ratio_sql("g.toks"))} AS dup_token_ratio,
+               {_guarded_sql("len(g.bg)", _dup_ratio_sql("g.bg"))} AS dup_2gram_ratio,
+               {_guarded_sql("len(g.tg)", _dup_ratio_sql("g.tg"))} AS dup_3gram_ratio,
+               {_guarded_sql("len(g.toks)", "top.mx / CAST(top.n AS DOUBLE)")} AS top_token_ratio
+        FROM grams g LEFT JOIN top ON g.{id_col} = top.{id_col}
     """
+
+
+def _dup_ratio_sql(xs: str) -> str:
+    return f"1.0 - len(list_distinct({xs})) / CAST(len({xs}) AS DOUBLE)"
 
 
 # marker-word language ID: a deterministic n-gram-free heuristic whose
@@ -538,7 +617,7 @@ def lang_id_sql(table_expr: str = "documents", text_col: str = "text", id_col: s
     for lang, words in LANG_MARKERS.items():
         arr = ", ".join(f"'{w}'" for w in words)
         score_exprs.append(
-            f"len(list_intersect(list_distinct(regexp_split_to_array(lower({text_col}), '\\s+')), [{arr}])) AS s_{lang}"
+            f"len(list_intersect(list_distinct({tokens_sql(text_col, lowercase=True)}), [{arr}])) AS s_{lang}"
         )
     cases = []
     for lang in ["en", "es", "de", "fr"]:
@@ -629,10 +708,7 @@ def simhash_md5_col(text: str | Column, bits: int = 48) -> Column:
     DISTINCT; ties (vote sum == 0) yield a 0 bit on both sides.
     """
     hexdigits = bits // 4
-    toks = F.filter(
-        F.array_distinct(F.split(F.trim(text if isinstance(text, Column) else F.col(text)), r"\s+")),
-        lambda t: t != "",
-    )
+    toks = F.array_distinct(tokens_col(text))
     hs = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, hexdigits), 16, 10).cast("long")
     )
@@ -671,10 +747,8 @@ def simhash_md5_sql(
     hexdigits = bits // 4
     return f"""
         WITH toks AS (
-          SELECT DISTINCT {id_col}, tok FROM (
-            SELECT {id_col}, unnest(regexp_split_to_array(trim({text_col}), '\\s+')) AS tok
-            FROM {table_expr})
-          WHERE tok <> ''
+          SELECT DISTINCT {id_col}, unnest({tokens_sql(text_col)}) AS tok
+          FROM {table_expr}
         ), hs AS (
           SELECT {id_col},
                  CAST(CAST('0x' || substr(md5(tok), 1, {hexdigits}) AS UBIGINT) AS BIGINT) AS h
@@ -702,15 +776,7 @@ def document_frequencies(df, text_col: str = "text", id_col: str = "doc_id"):
     vocabulary x docs containing each token (the same cost any doc-freq
     computation pays), with map-side partial aggregation.
     """
-    toks = df.select(
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-                )
-            )
-        ).alias("token")
-    )
+    toks = df.select(F.explode(F.array_distinct(tokens_col(text_col))).alias("token"))
     return toks.groupBy("token").agg(F.count("*").alias("df"))
 
 
@@ -731,7 +797,7 @@ def normalize_text_col(text: str | Column, strip_accents: bool = True) -> Column
     c = F.lower(c)
     if strip_accents:
         c = F.translate(c, _ACCENT_FROM, _ACCENT_TO)
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
+    return F.trim(F.regexp_replace(c, _WS_RUN, " "))
 
 
 def normalize_text_sql(expr: str, strip_accents: bool = True) -> str:
@@ -739,7 +805,7 @@ def normalize_text_sql(expr: str, strip_accents: bool = True) -> str:
     c = f"lower({expr})"
     if strip_accents:
         c = f"translate({c}, '{_ACCENT_FROM}', '{_ACCENT_TO}')"
-    return f"trim(regexp_replace({c}, '\\s+', ' ', 'g'))"
+    return f"trim(regexp_replace({c}, '{_WS_RUN}', ' ', 'g'))"
 
 
 def winnow_fingerprints_df(

@@ -47,10 +47,10 @@ __all__ = [
 def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """(word, n) over whitespace words — one exchange of per-partition
     unique words (map-side combine), vocabulary-sized output."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    from ..functions.text import tokens_col
+
     return (
-        df.select(F.explode(toks).alias("word"))
-        .filter(F.col("word") != "")
+        df.select(F.explode(tokens_col(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("n"))
     )

@@ -30,7 +30,7 @@ import numpy as np
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.text import tokens_col
+from ..functions.text import tokens_col, tokens_sql
 
 __all__ = ["nb_train", "nb_score", "nb_classifier_sql"]
 
@@ -45,13 +45,6 @@ def _bucket(tok: Column, n_buckets: int, seed: int) -> Column:
         F.substring(F.md5(F.concat_ws(":", F.lit(str(seed)), tok)), 1, 8), 16, 10
     ).cast("long")
     return F.pmod(h, F.lit(n_buckets)).cast("int")
-
-
-def _tokens_nonempty(text_col: str) -> Column:
-    """Catalyst token array with empty tokens dropped — aligns the SQL
-    engine with the Arrow engine (utf8_split_whitespace never emits
-    empty tokens) for empty/whitespace-only rows."""
-    return F.filter(tokens_col(text_col), lambda x: x != F.lit(""))
 
 
 def _md5_buckets(uniq: list, n_buckets: int, seed: int, memo: dict) -> np.ndarray:
@@ -137,7 +130,7 @@ def nb_train(
     elif engine == "sql":
         toks = df.select(
             label.cast("boolean").alias("_lab"),
-            _tokens_nonempty(text_col).alias("_t"),
+            tokens_col(text_col).alias("_t"),
         )
         exploded = toks.select("_lab", F.explode("_t").alias("_tok")).select(
             "_lab", _bucket(F.col("_tok"), n_buckets, seed).alias("_bkt")
@@ -268,7 +261,7 @@ def nb_score(
     w_arr = F.array(*[F.lit(int(w)).cast("long") for w in weights])
     # stage the tokenize as its own projection: referencing it from
     # inside the fold lambda would re-evaluate it per element
-    staged = df.withColumn("_t", _tokens_nonempty(text_col))
+    staged = df.withColumn("_t", tokens_col(text_col))
     staged = staged.withColumn(
         "_wts", F.transform(F.col("_t"), lambda t: w_arr[_bucket(t, n_buckets, seed)])
     )
@@ -350,14 +343,13 @@ def nb_classifier_sql(
     return f"""
         WITH base AS (
           SELECT {id_col}, ({label_sql}) AS lab,
-                 regexp_split_to_array(trim(text), '\\s+') AS t
+                 {tokens_sql("text")} AS t
           FROM {table}
         ), tok AS (
           SELECT {id_col}, lab,
                  CAST(CAST('0x' || substr(md5('{seed}:' || u.tok), 1, 8) AS UBIGINT)
                       % {n_buckets} AS INT) AS bkt
           FROM base, unnest(t) AS u(tok)
-          WHERE u.tok <> ''
         ), counts AS (
           SELECT bkt,
                  sum(CASE WHEN lab IS TRUE THEN 1 ELSE 0 END) AS pos,

@@ -26,8 +26,16 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.hashing import derive_seeds, hash_strings, mix_u64
-from ..functions.text import tokenize_batch
+from ..core.hashing import derive_seeds, hash_strings
+from ..functions.text import (
+    _roll_ngrams,
+    token_base,
+    tokenize_batch,
+    tokens_col,
+    tokens_sql,
+    winnow_fingerprints_df,
+    word_ngrams_col,
+)
 
 __all__ = [
     "exact_dedup",
@@ -83,8 +91,6 @@ def contamination_report(
     outgrew broadcast, drop the hint and let AQE pick the shuffle
     join; semantics identical.)
     """
-    from ..functions.text import word_ngrams_col
-
     def grams(df: DataFrame) -> DataFrame:
         return df.select(
             F.col(id_col),
@@ -122,18 +128,9 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 def _shingle_hashes(texts: pa.Array, k: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """(flat shingle-hash array, doc offsets) of word k-shingles per row."""
     flat, parents = tokenize_batch(texts)
-    h = hash_strings(flat, seed=seed)
-    n = len(h)
-    if n >= k and n > 0:
-        comb = h[: n - k + 1].copy()
-        for j in range(1, k):
-            comb = mix_u64(comb * np.uint64(0x9DDFEA08EB382D69) ^ h[j : n - k + 1 + j], np.uint64(j))
-        valid = parents[: n - k + 1] == parents[k - 1 :]
-        sh = comb[valid]
-        sh_parents = parents[: n - k + 1][valid]
-    else:
-        sh = np.empty(0, dtype=np.uint64)
-        sh_parents = np.empty(0, dtype=np.int64)
+    comb, valid = _roll_ngrams(hash_strings(flat, seed=seed), parents, k)
+    sh = comb[valid]
+    sh_parents = parents[: len(valid)][valid]
     n_rows = len(texts)
     counts = np.bincount(sh_parents, minlength=n_rows) if len(sh_parents) else np.zeros(n_rows, np.int64)
     offsets = np.concatenate([[0], np.cumsum(counts)])
@@ -366,8 +363,6 @@ def verify_jaccard_pairs_from_text(
     match the hashed-shingle path's up to 63-bit shingle-hash
     collisions (the stored path hashes shingles to 63 bits before
     set ops; this text path is the more exact of the two)."""
-    from ..functions.text import word_ngrams_col
-
     # the pair set is referenced three times below (id_a ids, id_b ids,
     # and the verify join) — materialize it once or each reference
     # recomputes the entire upstream LSH candidate DAG (measured 13x on
@@ -844,8 +839,6 @@ def passage_duplicates(
     sits under the DuckDB value-hash gate (contract query
     ``passage_dups``).
     """
-    from ..functions.text import winnow_fingerprints_df
-
     # the staged (per-level materialized) winnow form: the Column form
     # re-evaluates each doubling level twice through zip_with, i.e.
     # 2^levels gram-pipeline evaluations per row (text.py docstring)
@@ -883,7 +876,7 @@ def passage_duplicates_sql(
     fingerprints, same df band, same pair threshold)."""
     return f"""
         WITH toks AS (
-          SELECT {id_col}, regexp_split_to_array(trim({text_col}), '\\s+') AS t
+          SELECT {id_col}, {tokens_sql(text_col)} AS t
           FROM {table_expr}
         ), grams AS (
           SELECT {id_col},
@@ -962,8 +955,6 @@ def duplicate_ngram_spans(
         raise ValueError("span dedup needs n >= 2 (n=1 removes every repeated token)")
     if key == "arrow":
         return _duplicate_ngram_spans_arrow(docs, text_col, id_col, n, min_count)
-    from ..functions.text import word_ngrams_col
-
     from .aggregate import ensure_min_partitions
 
     # gram construction + hashing is CPU-bound per row: spread a
@@ -1017,27 +1008,13 @@ def _ngram_hash_positions(
     """(gram hashes, batch row index, 0-based token position) for every
     in-row n-gram occurrence — rolling combine over the dictionary-
     encoded token base; gram strings never materialize."""
-    from ..functions.text import _NGRAM_PRIME, token_base
-
     hd, idx, parents = token_base(texts, seed)
-    m = len(idx)
-    if m == 0 or m < n:
-        e = np.empty(0, dtype=np.int64)
-        return np.empty(0, dtype=np.uint64), e, e
-    h = hd[idx]
-    # same rolling combine as hashes_from_base (token_hashes family),
-    # kept inline because positions must survive the same_row filter
-    combined = h[: m - n + 1].copy()
-    for j in range(1, n):
-        combined = mix_u64(combined * _NGRAM_PRIME ^ h[j : m - n + 1 + j], np.uint64(j))
-    same_row = parents[: m - n + 1] == parents[n - 1 :]
-    rows = parents[: m - n + 1][same_row]
+    combined, same_row = _roll_ngrams(hd[idx], parents, n)
+    rows = parents[: len(same_row)][same_row]
     # token position inside the row: flat index minus the row's start
-    n_rows = len(texts)
-    counts = np.bincount(parents, minlength=n_rows)
+    counts = np.bincount(parents, minlength=len(texts))
     starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-    flat_idx = np.arange(m - n + 1, dtype=np.int64)[same_row]
-    pos = flat_idx - starts[rows]
+    pos = np.flatnonzero(same_row) - starts[rows]
     return combined[same_row], rows, pos
 
 
@@ -1177,21 +1154,18 @@ def remove_duplicate_spans(
         if spans is not None
         else duplicate_ngram_spans(docs, text_col, id_col, n, min_count, key)
     )
-    from ..functions.text import tokens_col
-
     sp = spans.groupBy(id_col).agg(
         F.collect_list(
             F.struct(F.col("span_start").alias("s"), F.col("span_end").alias("e"))
         ).alias("_spans")
     )
-    toks = F.filter(tokens_col(text_col), lambda x: x != F.lit(""))
     empty = F.array().cast("array<struct<s:long,e:long>>")
     joined = (
         docs.select(id_col, text_col)
         .join(sp, id_col, "left")
         .select(
             id_col,
-            toks.alias("_t"),
+            tokens_col(text_col).alias("_t"),
             F.coalesce("_spans", empty).alias("_spans"),
         )
     )
@@ -1215,9 +1189,7 @@ def _dup_span_cte(
     """Shared DuckDB CTE chain computing the merged duplicate spans."""
     return f"""
         WITH toks AS (
-          SELECT {id_col},
-                 list_filter(regexp_split_to_array(trim({text_col}), '\\s+'),
-                             x -> x <> '') AS t
+          SELECT {id_col}, {tokens_sql(text_col)} AS t
           FROM {table_expr}
         ), gl AS (
           SELECT {id_col},

@@ -20,7 +20,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from ..functions.text import repetition_columns, tokens_col
+from ..functions.text import _guarded_sql, repetition_columns, tokens_col, tokens_sql
 
 __all__ = [
     "corpus_filter",
@@ -44,7 +44,7 @@ def default_web_rules(
     synthetic fixture so every gate exercises both branches."""
     toks = tokens_col(text_col)
     n = F.size(toks)
-    distinct_ratio = F.size(F.array_distinct(toks)) / n
+    distinct_ratio = F.when(n > 0, F.size(F.array_distinct(toks)) / n).otherwise(F.lit(0.0))
     top_ratio = repetition_columns(text_col, ns=())["top_token_ratio"]
     return {
         "too_short": n < min_tokens,
@@ -125,8 +125,10 @@ def corpus_filter_sql(
     rules_sql: dict[str, str] | None = None,
 ) -> str:
     """DuckDB oracle for ``corpus_filter`` with the default rules: the
-    signal CTE computes the same (exact, unrounded) ratios, and the
-    reasons string concatenates failed names in the same order."""
+    signal CTE computes the same ratios (``distinct_ratio`` unrounded,
+    ``top_token_ratio`` rounded as ``repetition_columns`` rounds it,
+    both 0.0 on zero-token text), and the reasons string concatenates
+    failed names in the same order."""
     rules = rules_sql or default_web_rules_sql()
     flags = ", ".join(
         f"CASE WHEN {cond} THEN '{name}' ELSE NULL END" for name, cond in rules.items()
@@ -134,7 +136,7 @@ def corpus_filter_sql(
     return f"""
         WITH base AS (
           SELECT {id_col},
-                 regexp_split_to_array(trim({text_col}), '\\s+') AS toks
+                 {tokens_sql(text_col)} AS toks
           FROM {table_expr}
         ), tc AS (
           SELECT {id_col}, tok, count(*) AS c
@@ -145,9 +147,12 @@ def corpus_filter_sql(
         ), sig AS (
           SELECT b.{id_col},
                  len(b.toks) AS n_tokens,
-                 len(list_distinct(b.toks)) / CAST(len(b.toks) AS DOUBLE) AS distinct_ratio,
-                 top.mx / CAST(top.n AS DOUBLE) AS top_token_ratio
-          FROM base b JOIN top ON b.{id_col} = top.{id_col}
+                 CASE WHEN len(b.toks) > 0
+                      THEN len(list_distinct(b.toks)) / CAST(len(b.toks) AS DOUBLE)
+                      ELSE 0.0 END AS distinct_ratio,
+                 {_guarded_sql("len(b.toks)", "top.mx / CAST(top.n AS DOUBLE)")}
+                   AS top_token_ratio
+          FROM base b LEFT JOIN top ON b.{id_col} = top.{id_col}
         ), flagged AS (
           SELECT {id_col},
                  coalesce(array_to_string(
@@ -202,7 +207,7 @@ def source_quality_report_sql(
         WITH keeps AS ({corpus_filter_sql(table_expr, id_col, text_col, rules_sql)}),
         per_doc AS (
           SELECT d.{group_col},
-                 len(regexp_split_to_array(trim(d.{text_col}), '\\s+')) AS n_tokens,
+                 len({tokens_sql(f"d.{text_col}")}) AS n_tokens,
                  CASE WHEN k.keep THEN 1 ELSE 0 END AS keep,
                  CASE WHEN row_number() OVER (PARTITION BY md5(d.{text_col})
                                               ORDER BY d.{id_col}) > 1

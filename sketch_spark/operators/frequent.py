@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core import sketch_from_bytes
 from ..core.misragries import MisraGries
-from ..functions.text import tokenize_batch
+from ..functions.text import tokenize_batch, tokens_sql
 from .aggregate import SketchSpec, build_partials, ensure_min_partitions, merge_partials
 from .emerging import _cached_sketch, broadcast_sketch
 
@@ -229,14 +229,10 @@ def vocab_coverage_sql(
 ) -> str:
     """DuckDB oracle for :func:`vocab_coverage` — the identical integer
     recurrence over the frequency-of-frequencies table."""
-    tok = f"trim({text_col})"
-    if lowercase:
-        tok = f"lower({tok})"
     ppm_list = ", ".join(str(int(p)) for p in coverages_ppm)
     return f"""
         WITH toks AS (
-          SELECT unnest(list_filter(regexp_split_to_array({tok}, '\\s+'),
-                                    x -> x <> '')) AS tok
+          SELECT unnest({tokens_sql(text_col, lowercase)}) AS tok
           FROM {table_expr}
         ), counts AS (
           SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY tok

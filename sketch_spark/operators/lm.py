@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text import word_ngrams_col
+from ..functions.text import tokens_col, tokens_sql, word_ngrams_col
 
 __all__ = ["bigram_lm_perplexity", "bigram_lm_perplexity_sql"]
 
@@ -46,9 +46,7 @@ def bigram_lm_perplexity(
         .groupBy("w1")
         .agg(F.count("*").alias("c1"))
     )
-    toks = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = docs.select(F.explode(tokens_col(text_col)).alias("tok"))
     vocab = toks.agg(F.countDistinct("tok").alias("v"))
     logp = F.log(
         (F.col("c2") + add_k) / (F.col("c1") + add_k * F.col("v"))
@@ -75,7 +73,7 @@ def bigram_lm_perplexity_sql(
     """DuckDB oracle computing exactly ``bigram_lm_perplexity``."""
     return f"""
         WITH toks AS (
-          SELECT {id_col}, regexp_split_to_array(trim({text_col}), '\\s+') AS t
+          SELECT {id_col}, {tokens_sql(text_col)} AS t
           FROM {table_expr}
         ), bg AS (
           SELECT {id_col},
@@ -88,7 +86,7 @@ def bigram_lm_perplexity_sql(
           SELECT split_part(bg, ' ', 1) AS w1, count(*) AS c1 FROM bg GROUP BY 1
         ), vocab AS (
           SELECT count(DISTINCT tok) AS v
-          FROM (SELECT unnest(t) AS tok FROM toks) WHERE tok <> ''
+          FROM (SELECT unnest(t) AS tok FROM toks)
         )
         SELECT bg.{id_col},
                CAST(count(*) AS BIGINT) AS n_bigrams,

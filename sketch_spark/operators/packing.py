@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from ..functions.text import tokens_col
+from ..functions.text import tokens_col, tokens_sql
 from .sampling import uniform_hash_col
 
 __all__ = [
@@ -213,7 +213,7 @@ def shard_manifest_sql(
           FROM {table}
         ), r AS (
           SELECT shard,
-                 len(regexp_split_to_array(trim(text), '\\s+')) AS _nt,
+                 len({tokens_sql("text")}) AS _nt,
                  md5(text) AS _dh,
                  row_number() OVER (PARTITION BY shard
                                     ORDER BY _ord ASC, {id_col} ASC) AS _rank

@@ -29,11 +29,9 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import tokens_col, tokens_sql
+
 __all__ = ["bm25_topk", "inverted_index", "hybrid_topk", "hybrid_sql", "rrf_topk", "rrf_sql"]
-
-
-def _tokens_expr(text_col: str):
-    return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
 def bm25_topk(
@@ -65,9 +63,9 @@ def bm25_topk(
     # row per TERM (the lambda-CSE rule) — 3x on 500k organic docs,
     # byte-identical output (A/B in BENCH.md)
     toks = F.col("_toks")
-    wide = docs.withColumn("_toks", _tokens_expr(text_col)).select(
+    wide = docs.withColumn("_toks", tokens_col(text_col)).select(
         F.col(id_col),
-        F.size(F.filter(toks, lambda x: x != F.lit(""))).alias("_dl"),
+        F.size(toks).alias("_dl"),
         *[
             F.size(F.filter(toks, _eq(t))).alias(f"_tf_{i}")
             for i, t in enumerate(terms)
@@ -127,10 +125,9 @@ def bm25_sql(
     return f"""
         WITH wide AS (
           SELECT {id_col},
-                 len(list_filter(t, x -> x <> '')) AS dl,
+                 len(t) AS dl,
                  {tf_cols}
-          FROM (SELECT {id_col}, regexp_split_to_array(trim(text), '\\s+') AS t
-                FROM {table})
+          FROM (SELECT {id_col}, {tokens_sql("text")} AS t FROM {table})
         ), s AS (
           SELECT count(*) AS n, avg(dl) AS avgdl, {df_cols} FROM wide
         )
@@ -163,8 +160,8 @@ def inverted_index(
 
     pairs = docs.select(
         F.col(id_col),
-        F.explode(F.array_distinct(_tokens_expr(text_col))).alias("token"),
-    ).filter(F.col("token") != "")
+        F.explode(F.array_distinct(tokens_col(text_col))).alias("token"),
+    )
     rn = F.row_number().over(W.partitionBy("token").orderBy(F.col(id_col).asc()))
     ranked = pairs.withColumn("_rn", rn)
     return (
@@ -193,13 +190,12 @@ def inverted_index_sql(
     """DuckDB oracle for ``inverted_index``."""
     return f"""
         WITH pairs AS (
-          SELECT DISTINCT {id_col},
-                 unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
+          SELECT DISTINCT {id_col}, unnest({tokens_sql("text")}) AS token
           FROM {table}
         )
         SELECT token, CAST(count(*) AS BIGINT) AS df,
                array_to_string((list_sort(list({id_col})))[1:{max_postings}], ',') AS postings
-        FROM pairs WHERE token <> ''
+        FROM pairs
         GROUP BY token HAVING count(*) >= {min_df}
     """
 
