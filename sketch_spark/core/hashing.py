@@ -2,11 +2,11 @@
 
 Design (all public-knowledge building blocks):
 
-* Token -> ``uint64`` key: an FNV-1a-style polynomial byte hash computed
-  fully vectorized over a padded byte matrix extracted straight from the
-  Arrow string buffers (no per-row Python — mirrors the reference's
-  fused byte-stream hashing loop, /root/reference/src/sketch.cpp:136-138,
-  re-expressed as numpy column sweeps instead of a per-symbol scalar XOR).
+* Token -> ``uint64`` key: an FNV-1a-style polynomial byte hash read
+  straight from the Arrow string buffers (no per-row Python — mirrors
+  the reference's fused byte-stream hashing loop, src/sketch.cpp:136-138),
+  in one compiled pass or, without the kernels, as numpy byte-column
+  sweeps.
 * ``uint64`` key -> d row hashes: Dietzfelbinger multiply-add-shift
   family ``h_j(x) = (a_j * x + b_j) >> (64 - log2(w))`` with odd ``a_j``
   — a 2-universal family, which is what the Count-Min (eps, delta)
@@ -32,7 +32,6 @@ __all__ = [
     "splitmix64",
     "derive_seeds",
     "hash_strings",
-    "hash_strings_native",
     "hash_u64",
     "mix_u64",
     "bitlen_u64",
@@ -83,10 +82,15 @@ def mix_u64(keys: np.ndarray, seed: np.uint64) -> np.ndarray:
     return z
 
 
-def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(data bytes, int32 or int64 offsets[n+1]) view of an Arrow string/binary array."""
+def _string_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(data bytes, int32 or int64 offsets[n+1]) view of a string/binary
+    array; anything that is not Arrow converts as ``pa.string()``."""
+    if not isinstance(arr, (pa.Array, pa.ChunkedArray)):
+        arr = pa.array(arr, type=pa.string())
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
+    if len(arr) == 0:  # an empty array may carry no offsets buffer
+        return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
     t = arr.type
     if pa.types.is_large_string(t) or pa.types.is_large_binary(t):
         odtype = np.int64
@@ -105,64 +109,49 @@ def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return data, offsets
 
 
-def hash_strings(
-    arr, seed: int = 0, max_len: int = 64
-) -> np.ndarray:
-    """Hash an Arrow string/binary array (or anything convertible) to uint64.
+def hash_strings(arr, seed: int = 0, max_len: int = 64) -> np.ndarray:
+    """Hash a string/binary array (Arrow, or anything ``pa.array``
+    converts to strings) to one uint64 per string: FNV-1a over the
+    first ``max_len`` bytes, then the exact byte length folded in and a
+    splitmix64 finalizer.  Tokens longer than ``max_len`` that share
+    their first ``max_len`` bytes and their length share a hash —
+    deterministic, collision risk confined to long near-identical
+    tokens.  Nulls hash as empty strings; callers drop nulls first when
+    that matters.
 
-    Fully vectorized: builds an (n, L) byte matrix from the Arrow buffers
-    and sweeps L columns of FNV-1a updates (L = min(max bytes, max_len)).
-    Tokens longer than ``max_len`` hash their first ``max_len`` bytes plus
-    the exact length — deterministic, collision risk confined to long
-    near-identical tokens.  Nulls hash as empty strings; callers drop
-    nulls first when that matters.
+    The package's one string hash: every token, n-gram base and value
+    key is hashed here.  With the compiled kernels (``core/native.py``)
+    one pass reads the Arrow buffers; without them
+    ``_hash_strings_numpy`` computes the same bits.
     """
-    if not isinstance(arr, (pa.Array, pa.ChunkedArray)):
-        arr = pa.array(arr, type=pa.string())
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    n = len(arr)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
     data, offsets = _string_buffers(arr)
+    h = native.hash_strings(data, offsets, _hash_init(seed), max_len)
+    return _hash_strings_numpy(data, offsets, seed, max_len) if h is None else h
+
+
+def _hash_strings_numpy(
+    data: np.ndarray, offsets: np.ndarray, seed: int = 0, max_len: int = 64
+) -> np.ndarray:
+    """``hash_strings`` in numpy over ``_string_buffers`` output: byte
+    column j is folded into the rows still longer than j, so memory is
+    a few arrays of length n, whatever the longest string (one URL in
+    a batch of words) is."""
     offsets = offsets.astype(np.int64, copy=False)
     lengths = offsets[1:] - offsets[:-1]
     eff_len = np.minimum(lengths, max_len)
-    L = int(eff_len.max(initial=0))
-    h = np.full(n, _FNV_OFFSET ^ np.uint64(_hash_init(seed)), dtype=np.uint64)
-    if L > 0:
-        starts = offsets[:-1]
-        pos = np.arange(L, dtype=np.int64)
-        idx = starts[:, None] + pos[None, :]
-        np.clip(idx, 0, max(len(data) - 1, 0), out=idx)
-        mat = data[idx] if len(data) else np.zeros((n, L), dtype=np.uint8)
-        mask = pos[None, :] < eff_len[:, None]
-        for j in range(L):
-            col = mask[:, j]
-            if not col.any():
-                continue
-            hn = (h ^ mat[:, j].astype(np.uint64)) * _FNV_PRIME
-            h = np.where(col, hn, h)
+    h = np.full(len(lengths), _FNV_OFFSET ^ np.uint64(_hash_init(seed)), dtype=np.uint64)
+    rows = np.flatnonzero(eff_len > 0)
+    j = 0
+    while len(rows):
+        h[rows] = (h[rows] ^ data[offsets[rows] + j]) * _FNV_PRIME
+        j += 1
+        rows = rows[eff_len[rows] > j]
     h ^= lengths.astype(np.uint64)
     return mix_u64(h, np.uint64(0))
 
 
 def _hash_init(seed: int) -> int:
     return splitmix64(seed ^ 0xA076_1D64_78BD_642F)
-
-
-def hash_strings_native(arr: pa.Array, seed: int = 0, max_len: int = 64) -> np.ndarray | None:
-    """``hash_strings`` of an Arrow string/binary array through the
-    compiled kernel in ``core/native.py``: the same bits, one pass over
-    the Arrow buffers and no padded byte matrix.  ``None`` when the
-    kernel is unavailable."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if len(arr) == 0:  # an empty array may carry no offsets buffer
-        data, offsets = np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
-    else:
-        data, offsets = _string_buffers(arr)
-    return native.hash_strings(data, offsets, _hash_init(seed), max_len)
 
 
 def hash_u64(values: np.ndarray, seed: int = 0) -> np.ndarray:

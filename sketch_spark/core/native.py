@@ -16,12 +16,14 @@ cannot be expressed as numpy whole-array ops:
 Both made the pure-python scans the multimodal path's real scale
 risks.
 
-The fused sketch pass's tokens mode adds three more: per-occurrence
-token hashing straight from the Arrow buffers (``hash_strings``), the
-rolling n-gram combine summed per distinct key (``gram_counts``), and
-the CMCU batch conservative update (``cmcu_update``).  In numpy these
-cost a padded byte matrix, a ``dictionary_encode`` and two sorts per
-order; here each is one pass.
+The sketch hot loop adds three more: string hashing straight from the
+Arrow buffers (``hash_strings``), the rolling n-gram combine summed per
+distinct key (``gram_counts``), and the CMCU batch conservative update
+(``cmcu_update``).  In numpy these cost one sweep per byte column, a
+sort per n-gram order and two sorts per update; here each is one pass.
+``hash_strings`` has exactly one caller, ``core.hashing.hash_strings``,
+which every string hash in the package goes through and which alone
+chooses between this kernel and its numpy twin.
 
 Each loop is plain C compiled once per machine at first use
 (``cc -O3 -shared -fPIC``, cached in the system temp dir keyed by the

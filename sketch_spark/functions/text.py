@@ -16,14 +16,19 @@ None of the faces ever yields an empty token; empty and
 whitespace-only text has zero tokens.
 
 The hot path mirrors the reference's fused scan->tokenize->hash loop
-(src/sketch.cpp:98-171) as whole-batch ops: Arrow
-tokenizes, then ``GramCounts`` hashes and counts through the compiled
-kernels of ``core/native.py`` (numpy when none can be built).  No
-exploded token rows ever materialize in the Spark plan (the
-anti-pattern SURVEY.md §4.1 flags), and word n-grams reuse lower-order
-token hashes via a rolling combine — the Spark-native analogue of the
-reference's incremental multi-length H3 chaining (sketch.cpp:136-138,
-sketch_pipelined.cu:51-76).
+(src/sketch.cpp:98-171) as whole-batch ops: Arrow tokenizes, then
+``core.hashing.hash_strings`` hashes every token occurrence once (the
+compiled kernel of ``core/native.py``, numpy when none can be built)
+and ``GramCounts`` counts.  Every operator hashes its tokens that way,
+``tokenize_batch`` + ``hash_strings``; word n-grams reuse the token
+hashes via one rolling combine (``_roll_ngrams``) — the Spark-native
+analogue of the reference's incremental multi-length H3 chaining
+(sketch.cpp:136-138, sketch_pipelined.cu:51-76).  No exploded token
+rows ever materialize in the Spark plan (the anti-pattern SURVEY.md
+§4.1 flags).  ``token_base``, ``hashes_from_base`` and
+``token_hashes`` hash through a ``dictionary_encode`` instead; no
+operator calls them, and they stay only for the benchmark probes and
+as the tests' reference.
 """
 
 from __future__ import annotations
@@ -36,7 +41,7 @@ from pyspark.sql import Column, functions as F
 
 from ..core import native
 from ..core.base import unique_with_counts
-from ..core.hashing import hash_strings, hash_strings_native, mix_u64
+from ..core.hashing import hash_strings, mix_u64
 
 _NGRAM_PRIME = np.uint64(0x9DDFEA08EB382D69)
 
@@ -82,33 +87,20 @@ def tokenize_batch(arr: pa.Array | pa.ChunkedArray) -> tuple[pa.Array, np.ndarra
     return flat, parents.to_numpy(zero_copy_only=False)
 
 
-def _dict_hashes(flat: pa.Array, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """(per-unique-token hashes, dictionary indices per occurrence).
-
-    The bandwidth saver for Zipf text: ``dictionary_encode`` (Arrow
-    C++ hash table) collapses occurrences to uniques, so the byte-level
-    hash kernel touches each distinct token once instead of once per
-    occurrence — ~8x less memory traffic per token on web-like
-    distributions, which is what decides multicore scaling here.
-    """
-    d = pc.dictionary_encode(flat)
-    if isinstance(d, pa.ChunkedArray):
-        d = d.combine_chunks()
-    hd = hash_strings(d.dictionary, seed=seed)
-    idx = d.indices.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    return hd, idx
-
-
 def token_base(
     arr: pa.Array | pa.ChunkedArray, seed: int, lowercase: bool = False
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(dict hashes, dict indices, parent rows): ONE tokenize + ONE
-    dictionary-encode + ONE unique-hash pass for a batch — the numpy
-    base that MinHash, SimHash and ``GramCounts``' fallback derive
-    every n-gram order from.
+    """(distinct-token hashes, dictionary index per occurrence, parent
+    rows): one tokenize, one ``dictionary_encode`` and one hash of the
+    distinct tokens.  No operator hashes through it any more (every
+    caller hashes occurrences with ``hash_strings``); it stays for the
+    ``text.tokenize_s`` / ``hashing.ngram_s`` benchmark probes and as
+    an independent reference in the tests.
     """
     flat, parents = _tokens(arr, lowercase)
-    return _base_of(flat, parents, seed)
+    d = pc.dictionary_encode(flat)
+    idx = d.indices.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    return hash_strings(d.dictionary, seed=seed), idx, parents
 
 
 def _tokens(arr: pa.Array | pa.ChunkedArray, lowercase: bool) -> tuple[pa.Array, np.ndarray]:
@@ -119,31 +111,14 @@ def _tokens(arr: pa.Array | pa.ChunkedArray, lowercase: bool) -> tuple[pa.Array,
     return tokenize_batch(arr)
 
 
-def _base_of(
-    flat: pa.Array, parents: np.ndarray, seed: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    if len(flat) == 0:
-        return (
-            np.empty(0, dtype=np.uint64),
-            np.empty(0, dtype=np.int64),
-            parents,
-        )
-    hd, idx = _dict_hashes(flat, seed)
-    return hd, idx, parents
-
-
 def hashes_from_base(
     base: tuple[np.ndarray, np.ndarray, np.ndarray], ngram: int
 ) -> np.ndarray:
-    """Per-occurrence (n-gram) hashes from a ``token_base`` — the
-    rolling combine over pre-gathered unigram hashes; no re-tokenize,
-    no re-hash."""
+    """Per-occurrence (n-gram) hashes from a ``token_base``: the rolling
+    combine over the gathered unigram hashes.  Like ``token_base``, only
+    the benchmark probes and the tests call it."""
     hd, idx, parents = base
-    h = hd[idx]
-    if ngram <= 1:
-        return h
-    keys, same_row = _roll_ngrams(h, parents, ngram)
-    return keys[same_row]
+    return _gram_keys(hd[idx], parents, ngram)
 
 
 def _roll_ngrams(
@@ -162,40 +137,40 @@ def _roll_ngrams(
     return combined, parents[:m] == parents[ngram - 1 : ngram - 1 + m]
 
 
+def _gram_keys(h: np.ndarray, parents: np.ndarray, ngram: int) -> np.ndarray:
+    """The order-``ngram`` key of every in-row gram occurrence."""
+    if ngram <= 1:
+        return h
+    keys, same_row = _roll_ngrams(h, parents, ngram)
+    return keys[same_row]
+
+
 class GramCounts:
     """(distinct key, count) per n-gram order for one batch of texts —
     the input of every hashed sketch in ``SketchSpec.feed``'s tokens
-    mode, tokenized once and derived lazily per order.
+    mode, tokenized and hashed once and derived lazily per order.
 
-    With the compiled kernels (``core/native.py``) every order, unigrams
-    included, comes from one per-occurrence hash array: one pass hashes
-    each token occurrence straight from the Arrow buffers, and one pass
-    per order rolls the n-gram combine and sums equal keys in a hash
-    table.  Without them, the numpy path derives the same keys and
-    counts from ``token_base``.  Counts are summed per 64-bit key on
-    both paths, so two token strings sharing a hash count as one key.
-    Key order differs between the paths, which no sketch update can
-    observe.
+    Every order, unigrams included, comes from one per-occurrence
+    ``hash_strings`` array.  ``native.gram_counts`` rolls the n-gram
+    combine and sums equal keys in one pass; without the compiled
+    kernels ``unique_with_counts`` sums the same rolled keys.  Counts
+    are summed per 64-bit key, so two token strings sharing a hash
+    count as one key.  Key order differs between the paths, which no
+    sketch update can observe.
     """
 
     def __init__(self, arr: pa.Array | pa.ChunkedArray, seed: int, lowercase: bool = False):
         flat, self._parents = _tokens(arr, lowercase)
-        self._hashes = hash_strings_native(flat, seed)
-        self._base = _base_of(flat, self._parents, seed) if self._hashes is None else None
+        self._hashes = hash_strings(flat, seed=seed)
         self._orders: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
     def counts(self, ngram: int = 1) -> tuple[np.ndarray, np.ndarray]:
         """(distinct uint64 keys, int64 occurrence counts) of the order-``ngram`` grams."""
         if ngram not in self._orders:
-            if self._hashes is not None:
-                self._orders[ngram] = native.gram_counts(self._hashes, self._parents, ngram)
-            elif ngram <= 1:
-                hd, idx, _ = self._base
-                self._orders[ngram] = unique_with_counts(
-                    hd, np.bincount(idx, minlength=len(hd)).astype(np.int64)
-                )
-            else:
-                self._orders[ngram] = unique_with_counts(hashes_from_base(self._base, ngram))
+            got = native.gram_counts(self._hashes, self._parents, ngram)
+            if got is None:
+                got = unique_with_counts(_gram_keys(self._hashes, self._parents, ngram))
+            self._orders[ngram] = got
         return self._orders[ngram]
 
 
@@ -205,15 +180,11 @@ def token_hashes(
     ngram: int = 1,
     lowercase: bool = False,
 ) -> np.ndarray:
-    """uint64 hash per token (or word n-gram) of every row, flattened.
-
-    Per-occurrence hashes come from a dictionary-encode + gather (each
-    distinct token hashed once); n-grams never cross row boundaries (a
-    page is the tokenization unit — FIXTURES.md §1) and their hashes
-    are built by rolling combination of the unigram hashes: O(n_tokens)
-    work per extra order instead of re-hashing materialized n-gram
-    strings.
-    """
+    """uint64 hash per token (or word n-gram) of every row, flattened,
+    through ``token_base``'s dictionary path: the tests' reference for
+    the per-occurrence keys every operator derives from
+    ``hash_strings``.  N-grams never cross row boundaries (a page is
+    the tokenization unit — FIXTURES.md §1)."""
     return hashes_from_base(token_base(arr, seed, lowercase), ngram)
 
 
@@ -224,23 +195,28 @@ def ngram_occurrences(
     lowercase: bool = False,
 ) -> tuple[np.ndarray, pa.Array]:
     """(rolling n-gram hashes, space-joined n-gram strings), aligned
-    per occurrence — the candidate-enumeration primitive for
-    multi-length emerging heavy hitters.  Hashes match the sketch-build
-    path (``token_hashes``) exactly; strings are built vectorized with
+    per occurrence.  Hashes are the sketch-build keys (``GramCounts``)
+    exactly; strings are built vectorized with
     ``binary_join_element_wise``.
     """
     flat, parents = _tokens(arr, lowercase)
     n = len(flat)
     if n == 0 or n < ngram:
         return np.empty(0, dtype=np.uint64), pa.array([], type=pa.string())
-    hd, idx = _dict_hashes(flat, seed)
-    h = hd[idx]
+    h = hash_strings(flat, seed=seed)
     if ngram == 1:
         return h, flat
     keys, same_row = _roll_ngrams(h, parents, ngram)
-    m = len(keys)
-    joined = pc.binary_join_element_wise(*[flat.slice(j, m) for j in range(ngram)], " ")
-    return keys[same_row], joined.filter(pa.array(same_row))
+    return keys[same_row], _gram_strings(flat, np.flatnonzero(same_row), ngram)
+
+
+def _gram_strings(flat: pa.Array, starts: np.ndarray, ngram: int) -> pa.Array:
+    """The space-joined order-``ngram`` gram of ``flat`` tokens starting
+    at each index of ``starts``."""
+    if ngram <= 1:
+        return flat.take(starts)
+    sep = pa.scalar(" ", flat.type)  # a plain " " fails on large_string tokens
+    return pc.binary_join_element_wise(*[flat.take(starts + j) for j in range(ngram)], sep)
 
 
 def ngram_count_df(

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..core.hashing import derive_seeds, hash_strings
 from ..functions.text import (
     _roll_ngrams,
-    token_base,
     tokenize_batch,
     tokens_col,
     tokens_sql,
@@ -599,18 +598,9 @@ def top_df_token_hashes(
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            texts = batch.column(0)
-            flat, parents = tokenize_batch(texts)
-            h = hash_strings(flat, seed=seed)
-            if not len(h):
+            uniq, counts = _token_doc_freqs(batch.column(0), seed)
+            if not len(uniq):
                 continue
-            # distinct (doc, token_hash), then per-partition df counts
-            order = np.lexsort((h, parents))
-            hs, ps = h[order], parents[order]
-            keep = np.ones(len(hs), dtype=bool)
-            if len(hs) > 1:
-                keep[1:] = (ps[1:] != ps[:-1]) | (hs[1:] != hs[:-1])
-            uniq, counts = np.unique(hs[keep], return_counts=True)
             yield pa.RecordBatch.from_pydict(
                 {
                     "th": pa.array(uniq.view(np.int64)),
@@ -628,6 +618,43 @@ def top_df_token_hashes(
         .collect()
     )
     return np.array([r["th"] for r in top], dtype=np.int64).view(np.uint64)
+
+
+def _token_doc_freqs(texts: pa.Array, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """(distinct token hash, number of rows holding it) of one batch."""
+    flat, parents = tokenize_batch(texts)
+    h = hash_strings(flat, seed=seed)
+    # distinct (doc, token_hash), then df counts
+    order = np.lexsort((h, parents))
+    hs, ps = h[order], parents[order]
+    keep = np.ones(len(hs), dtype=bool)
+    keep[1:] = (ps[1:] != ps[:-1]) | (hs[1:] != hs[:-1])
+    uniq, counts = np.unique(hs[keep], return_counts=True)
+    return uniq, counts
+
+
+def _simhash_fingerprints(texts: pa.Array, seed: int, drop: np.ndarray | None) -> np.ndarray:
+    """64-bit SimHash per row of one batch; ``drop`` holds the token
+    hashes left out of the votes (see ``simhash``)."""
+    flat, parents = tokenize_batch(texts)
+    h = hash_strings(flat, seed=seed)
+    n_rows = len(texts)
+    if drop is not None and len(h):
+        mask = ~np.isin(h, drop)
+        total = np.bincount(parents, minlength=n_rows)
+        remain = np.bincount(parents[mask], minlength=n_rows)
+        # all-head docs keep their full token set
+        mask |= ((remain == 0) & (total > 0))[parents]
+        h, parents = h[mask], parents[mask]
+    fp = np.zeros(n_rows, dtype=np.uint64)
+    if len(h):
+        # bit votes: for each of 64 bits, sum(+1/-1) per doc
+        votes = np.zeros((n_rows, 64), dtype=np.int64)
+        for bit in range(64):
+            b = ((h >> np.uint64(bit)) & np.uint64(1)).astype(np.int64) * 2 - 1
+            votes[:, bit] = np.bincount(parents, weights=b, minlength=n_rows)
+        fp = (votes > 0).astype(np.uint64) @ (np.uint64(1) << np.arange(64, dtype=np.uint64))
+    return fp
 
 
 def simhash(
@@ -661,28 +688,9 @@ def simhash(
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_ = bc.value if bc is not None else None
         for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1)
-            flat, parents = tokenize_batch(texts)
-            h = hash_strings(flat, seed=seed)
-            n_rows = len(ids)
-            if drop_ is not None and len(h):
-                mask = ~np.isin(h, drop_)
-                total = np.bincount(parents, minlength=n_rows)
-                remain = np.bincount(parents[mask], minlength=n_rows)
-                # all-head docs keep their full token set
-                mask |= ((remain == 0) & (total > 0))[parents]
-                h, parents = h[mask], parents[mask]
-            fp = np.zeros(n_rows, dtype=np.uint64)
-            if len(h):
-                # bit votes: for each of 64 bits, sum(+1/-1) per doc
-                votes = np.zeros((n_rows, 64), dtype=np.int64)
-                for bit in range(64):
-                    b = ((h >> np.uint64(bit)) & np.uint64(1)).astype(np.int64) * 2 - 1
-                    votes[:, bit] = np.bincount(parents, weights=b, minlength=n_rows)
-                fp = (votes > 0).astype(np.uint64) @ (np.uint64(1) << np.arange(64, dtype=np.uint64))
+            fp = _simhash_fingerprints(batch.column(1), seed, drop_)
             out = {
-                id_col: ids,
+                id_col: batch.column(0),
                 "simhash": pa.array((fp >> np.uint64(1)).astype(np.int64)),
             }
             for band in range(4):
@@ -1006,10 +1014,10 @@ def _ngram_hash_positions(
     texts: pa.Array, n: int, seed: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(gram hashes, batch row index, 0-based token position) for every
-    in-row n-gram occurrence — rolling combine over the dictionary-
-    encoded token base; gram strings never materialize."""
-    hd, idx, parents = token_base(texts, seed)
-    combined, same_row = _roll_ngrams(hd[idx], parents, n)
+    in-row n-gram occurrence — rolling combine over the per-occurrence
+    token hashes; gram strings never materialize."""
+    flat, parents = tokenize_batch(texts)
+    combined, same_row = _roll_ngrams(hash_strings(flat, seed=seed), parents, n)
     rows = parents[: len(same_row)][same_row]
     # token position inside the row: flat index minus the row's start
     counts = np.bincount(parents, minlength=len(texts))

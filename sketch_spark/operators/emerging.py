@@ -10,9 +10,9 @@ Distributed shape (two passes; SURVEY.md §7.2 "heavy-hitter emission
 timing"):
 
   pass 1   test_df  -> global merged CMCU            (sketch_aggregate)
-  pass 2   test_df  -> per-partition: unique tokens per batch,
-           estimate against the *broadcast* merged sketch, keep
-           est >= threshold, emit (token, partial_count)   [mapInArrow]
+  pass 2   test_df  -> per-partition: estimate each occurrence's key
+           against the *broadcast* merged sketch, keep est >= threshold,
+           count the kept strings, emit (token, partial_count) [mapInArrow]
            -> groupBy(token).sum  — shuffles ONLY candidate tokens
   pass 2'  control_df -> same candidate predicate (the broadcast sketch
            itself decides membership; no candidate list ever ships)
@@ -36,12 +36,12 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import CountMinCU, sketch_from_bytes
-from ..functions.text import tokenize_batch
+from ..core.hashing import hash_strings
+from ..functions.text import _gram_strings, _roll_ngrams, _tokens
 from .aggregate import SketchSpec, sketch_aggregate
 
 __all__ = ["emerging_heavy_hitters", "candidate_token_counts", "estimate_tokens_udf", "estimate_ngrams_udf", "broadcast_sketch"]
@@ -82,59 +82,29 @@ def candidate_token_counts(
     so the shuffle carries only candidate tokens
     (vocab-of-heavy-hitters scale, not data scale).
 
-    For ``ngram > 1`` the estimates use the same rolling-combined hash
-    family the sketch was built with (``token_hashes``), and candidate
-    *strings* are materialized only for occurrences that pass the
-    sketch filter.
+    Every order takes the same pass: the sketch is asked about each
+    occurrence's key, the key the sketch was built with
+    (``hash_strings``, rolled by ``_roll_ngrams`` for n-grams); gram
+    strings are built only for the occurrences that pass, and counted
+    exactly per string.  Two grams sharing a 64-bit key therefore pass
+    together but keep separate exact counts.
     """
-    from ..functions.text import ngram_occurrences
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
         sketch = _cached_sketch(sketch_bc)
-        acc: dict[str, int] = {}
+        parts = [pa.table({"token": pa.array([], pa.string()), "cnt": pa.array([], pa.int64())})]
         for batch in batches:
-            col = batch.column(0)
-            if ngram <= 1:
-                if lowercase:
-                    col = pc.utf8_lower(col)
-                flat, _ = tokenize_batch(col)
-                if len(flat) == 0:
-                    continue
-                vc = flat.value_counts()
-                uniq = vc.field("values")
-                cnts = vc.field("counts").to_numpy(zero_copy_only=False)
-                est = sketch.estimate_tokens(uniq)
-                keep = est >= threshold
-                if not keep.any():
-                    continue
-                kept_tokens = uniq.filter(pa.array(keep)).to_pylist()
-                kept_counts = cnts[keep]
-            else:
-                keys, strs = ngram_occurrences(col, sketch.seed, ngram, lowercase)
-                if len(keys) == 0:
-                    continue
-                uk, inv = np.unique(keys, return_inverse=True)
-                cnts = np.bincount(inv, minlength=len(uk)).astype(np.int64)
-                est = sketch.estimate_hashed(uk)
-                keep = est >= threshold
-                if not keep.any():
-                    continue
-                # representative string per kept hash = first occurrence
-                first_idx = np.full(len(uk), len(keys), dtype=np.int64)
-                np.minimum.at(first_idx, inv, np.arange(len(keys)))
-                kept_counts = cnts[keep]
-                kept_tokens = strs.take(pa.array(first_idx[keep])).to_pylist()
-            for t, c in zip(kept_tokens, kept_counts):
-                acc[t] = acc.get(t, 0) + int(c)
-        out = pa.RecordBatch.from_pydict(
-            {
-                "token": pa.array(list(acc.keys()), type=pa.string()),
-                "cnt": pa.array(list(acc.values()), type=pa.int64()),
-            }
-        )
-        yield out
+            flat, parents = _tokens(batch.column(0), lowercase)
+            keys, same_row = _roll_ngrams(hash_strings(flat, seed=sketch.seed), parents, ngram)
+            starts = np.flatnonzero(same_row)
+            starts = starts[sketch.estimate_hashed(keys[starts]) >= threshold]
+            if len(starts):
+                vc = _gram_strings(flat, starts, ngram).value_counts()
+                parts.append(
+                    pa.table({"token": vc.field("values"), "cnt": vc.field("counts").cast(pa.int64())})
+                )
+        t = pa.concat_tables(parts).group_by("token").aggregate([("cnt", "sum")])
+        yield from t.rename_columns(["token", "cnt"]).to_batches()
 
     from .aggregate import ensure_min_partitions
 

@@ -6,7 +6,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from sketch_spark.operators.emerging import emerging_heavy_hitters
+from sketch_spark.core.hashing import hash_strings
+from sketch_spark.operators.aggregate import SketchSpec, sketch_aggregate
+from sketch_spark.operators.emerging import (
+    broadcast_sketch,
+    candidate_token_counts,
+    emerging_heavy_hitters,
+)
 from sketch_spark.sources.pages import extract_text_bytes, load_pages
 
 from tests.conftest import exact_token_counts
@@ -132,6 +138,48 @@ def test_emerging_bigrams_exact_matches_brute_force(spark, split, pages_pdf):
     got = dict(zip(result["token"], result["freq"]))
     assert got == expected
     assert len(expected) > 0, "fixture produced no emerging bigrams; lower thr"
+
+
+@pytest.mark.parametrize("ngram", [1, 2])
+def test_grams_sharing_a_key_keep_their_own_exact_counts(spark, ngram):
+    """Two tokens of one length and one 64-byte prefix share a hash, and
+    so do their bigrams.  Both pass the sketch, and each is counted as
+    its own string: candidates and ``mode="exact"`` rows equal the
+    Counter answer of ``HAVING cnt >= thr AND cnt / growth > ctrl``."""
+    from collections import Counter
+
+    a, b = "a" * 64 + "X", "a" * 64 + "Y"
+    assert hash_strings([a], seed=1)[0] == hash_strings([b], seed=1)[0]
+    # one row, so one batch holds every occurrence of both keys
+    test_rows = [" ".join(["foo " + a] * 5 + ["foo " + b] * 2)]
+    ctrl_rows = ["foo " + a]
+
+    def grams(rows):
+        c = Counter()
+        for t in rows:
+            toks = t.split()
+            c.update(" ".join(toks[i : i + ngram]) for i in range(len(toks) - ngram + 1))
+        return c
+
+    tc, cc = grams(test_rows), grams(ctrl_rows)
+    thr = 3
+    test_df = spark.createDataFrame([(t,) for t in test_rows], "text string")
+    ctrl_df = spark.createDataFrame([(t,) for t in ctrl_rows], "text string")
+    params = {"depth": 4, "log2_width": 10, "seed": 1}
+    spec = SketchSpec("cmcu", "cmcu", "text", ngram=ngram, params=params)
+    sketch = sketch_aggregate(test_df, [spec]).sketch("cmcu")
+    cand = candidate_token_counts(
+        test_df, "text", broadcast_sketch(spark, sketch), thr, ngram=ngram
+    ).toPandas()
+    # the shared keys' estimates (7 and 6) pass, so every gram is a candidate
+    assert dict(zip(cand["token"], cand["cnt"])) == tc
+    result = emerging_heavy_hitters(
+        test_df, ctrl_df, "text", threshold=thr, growth=GROWTH, mode="exact",
+        ngram=ngram, prebuilt_sketch=sketch,
+    ).toPandas()
+    expected = {g: n for g, n in tc.items() if n >= thr and n / GROWTH > cc.get(g, 0)}
+    assert dict(zip(result["token"], result["freq"])) == expected
+    assert expected == ({"foo": 7, a: 5} if ngram == 1 else {"foo " + a: 5, a + " foo": 5})
 
 
 def test_bloom_semi_join(spark, sf01):

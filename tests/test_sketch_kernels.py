@@ -2,16 +2,19 @@
 
 The fused pass's tokens mode hashes every token occurrence, rolls the
 n-gram combine and runs the CMCU update in C when a compiler exists,
-and in numpy otherwise.  Both paths must leave byte-identical
-serialized states, for every hashed sketch kind and n-gram order, on
-text that exercises the tokenizer's edges: every Unicode White_Space
-code point, NULL / empty / whitespace-only rows, tokens past the
-64-byte hash prefix, rows shorter than the order, and sliced, chunked
-and ``large_string`` arrays.
+and in numpy otherwise; every other operator hashes its tokens through
+the same ``hash_strings``.  Both paths must leave byte-identical
+serialized states, for every hashed sketch kind and n-gram order, and
+byte-identical operator outputs, on text that exercises the
+tokenizer's edges: every code point of ``_WS_CLASS``, NULL / empty /
+whitespace-only rows, tokens past the 64-byte hash prefix, rows
+shorter than the order, and sliced, chunked and ``large_string``
+arrays.
 """
 
 import logging
 import tempfile
+import tracemalloc
 
 import numpy as np
 import pyarrow as pa
@@ -19,14 +22,22 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from sketch_spark.core import native, unique_with_counts
-from sketch_spark.core.hashing import hash_strings, hash_strings_native
-from sketch_spark.functions.text import GramCounts, token_hashes
+from sketch_spark.core.hashing import _hash_strings_numpy, _string_buffers, hash_strings
+from sketch_spark.functions.text import GramCounts, ngram_occurrences, token_hashes
+from sketch_spark.operators.dedup import (
+    _ngram_hash_positions,
+    _shingle_hashes,
+    _simhash_fingerprints,
+    _token_doc_freqs,
+)
 from sketch_spark.operators.aggregate import SketchSpec
 from tests.conftest import native_disabled, require_native
 
-# the Unicode White_Space property (PropList.txt), all 25 code points
+# the 29 code points of text._WS_CLASS: the Unicode White_Space
+# property (PropList.txt, 25 code points) plus U+001C-U+001F
 WHITE_SPACE = (
     [chr(c) for c in range(0x09, 0x0E)]
+    + [chr(c) for c in range(0x1C, 0x20)]
     + ["\x20", "\x85", "\xa0", "\u1680"]
     + [chr(c) for c in range(0x2000, 0x200B)]
     + ["\u2028", "\u2029", "\u202f", "\u205f", "\u3000"]
@@ -142,7 +153,72 @@ def test_native_hash_strings_matches_numpy(values, seed, start):
     require_native()
     arr = pa.array(values, pa.binary())
     for a in (arr, arr.slice(min(start, len(arr))), arr.cast(pa.large_binary())):
-        assert (hash_strings_native(a, seed) == hash_strings(a, seed)).all()
+        assert (hash_strings(a, seed) == _hash_strings_numpy(*_string_buffers(a), seed)).all()
+
+
+def _canon(x):
+    """Arrays, Arrow arrays and nested tuples as comparable values."""
+    if isinstance(x, tuple):
+        return tuple(_canon(v) for v in x)
+    if isinstance(x, np.ndarray):
+        return x.dtype.str, x.tobytes()
+    if isinstance(x, (pa.Array, pa.ChunkedArray)):
+        return x.to_pylist()
+    return x
+
+
+def _operator_outputs(col) -> dict:
+    """What each operator that hashes tokens derives from one batch."""
+    out = {f"shingles{k}": _shingle_hashes(col, k, seed=5) for k in (1, 3)}
+    out |= {f"positions{n}": _ngram_hash_positions(col, n, seed=5) for n in (1, 2, 3)}
+    out |= {f"occurrences{n}": ngram_occurrences(col, 5, n, lowercase=n == 2) for n in (1, 2, 3)}
+    hashes, dfs = out["doc_freqs"] = _token_doc_freqs(col, seed=5)
+    head = hashes[np.argsort(-dfs, kind="stable")[:3]]
+    out["simhash"] = _simhash_fingerprints(col, 5, None)
+    out["simhash_drop_top_df"] = _simhash_fingerprints(col, 5, head)
+    spec = SketchSpec("hll", "hll", "text", mode="value", params=PARAMS["hll"])
+    hll = spec.make()
+    spec.feed(hll, col)
+    out["value_mode_hll"] = hll.to_bytes()
+    return {k: _canon(v) for k, v in out.items()}
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    rows=st.lists(_row, max_size=12),
+    layout=st.sampled_from(["plain", "sliced", "chunked"]),
+    large=st.booleans(),
+)
+def test_operator_hashes_native_equal_fallback(rows, layout, large):
+    """MinHash shingles, SimHash (with and without the top-df drop) and
+    its df counts, the dup-span positions, ``ngram_occurrences`` and a
+    value-mode HLL, on both hash paths."""
+    require_native()
+    col = _layout(rows, layout, pa.large_string() if large else pa.string())
+    nat = _operator_outputs(col)
+    with native_disabled():
+        assert _operator_outputs(col) == nat
+
+
+def test_fallback_hash_memory_is_set_by_the_batch_not_its_longest_token():
+    """One 200-byte URL in a batch of about 1 M short tokens must not
+    widen the numpy fallback's working set to the URL's length."""
+    rng = np.random.default_rng(0)
+    vocab = np.array([f"w{i}" for i in range(5000)], dtype=object)
+    batch = pa.array(vocab[np.minimum(rng.zipf(1.3, 1_000_000), 5000) - 1], pa.string())
+    with_url = pa.concat_arrays([batch, pa.array(["u" * 200])])
+
+    def peak(arr) -> int:
+        tracemalloc.start()
+        try:
+            hash_strings(arr, seed=1)
+            return tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    with native_disabled():
+        short, long = peak(batch), peak(with_url)
+    assert long <= 1.5 * short, (short, long)
 
 
 def test_native_kernels_reject_malformed_buffers():
