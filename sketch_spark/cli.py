@@ -95,7 +95,7 @@ def cmd_build(args) -> None:
     merged.write.mode("overwrite").parquet(os.path.join(args.out, "states"))
     meta = (
         spark.read.parquet(os.path.join(args.out, "states"))
-        .select(*group_cols, "spec", "n_rows", "n_values", "wall_ms")
+        .select(*group_cols, "spec", "n_rows", "n_values")
         .collect()
     )
     metrics = [r.asDict() for r in meta]
@@ -119,7 +119,7 @@ def cmd_build_ckpt(args) -> None:
 
 
 def cmd_estimate(args) -> None:
-    from .core import sketch_from_bytes
+    from .operators.aggregate import SketchResult
 
     spark = _spark("sketch-estimate")
     from pyspark.sql import functions as F
@@ -127,13 +127,13 @@ def cmd_estimate(args) -> None:
     rows = (
         spark.read.parquet(os.path.join(args.states, "states"))
         .filter(F.col("spec") == F.lit(args.spec))
+        .select("spec", "state", "n_rows", "n_values")
         .collect()
     )
     if not rows:
         raise SystemExit(f"no state rows for spec {args.spec!r}")
-    sk = sketch_from_bytes(rows[0]["state"])
-    for r in rows[1:]:
-        sk.merge(sketch_from_bytes(r["state"]))
+    # every group's state for the spec merges into one sketch
+    sk = SketchResult([r.asDict() for r in rows], []).sketch(args.spec)
     if not hasattr(sk, "estimate_tokens"):
         raise SystemExit(
             f"spec {args.spec!r} ({type(sk).__name__}) is not token-estimable; "

@@ -83,9 +83,18 @@ class _CountMinBase(Sketch):
     def estimate_hashed(self, keys: np.ndarray) -> np.ndarray:
         if len(keys) == 0:
             return np.empty(0, dtype=np.int64)
-        idx = self._indices(keys)
-        ests = self.table[np.arange(self.depth)[:, None], idx]
-        return ests.min(axis=0)
+        # bucket_indices row by row: n-length temporaries, never (depth, n)
+        shift = np.uint64(64 - self.log2_width)
+        a = self._a | np.uint64(1)
+        h = np.empty(len(keys), dtype=np.uint64)
+        est = None
+        for j in range(self.depth):
+            np.multiply(keys, a[j], out=h)
+            h += self._b[j]
+            h >>= shift
+            row = self.table[j].take(h.view(np.int64))
+            est = row if est is None else np.minimum(est, row, out=est)
+        return est
 
     def estimate_tokens(self, tokens) -> np.ndarray:
         return self.estimate_hashed(self.hash_tokens(tokens))

@@ -28,9 +28,8 @@ Scale properties this shape buys:
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -275,7 +274,6 @@ _PARTIAL_FIELDS = [
     ("state", pa.binary()),
     ("n_rows", pa.int64()),
     ("n_values", pa.int64()),
-    ("wall_ms", pa.float64()),
 ]
 
 
@@ -305,16 +303,72 @@ def _partial_schema(group_cols: list[str], df: DataFrame) -> pa.Schema:
     return pa.schema(fields)
 
 
-def _norm_group_val(v):
-    """Arrow/pandas group-key scalar -> plain python (None for NA)."""
-    try:
-        if pd.isna(v):
-            return None
-    except (TypeError, ValueError):
-        pass
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    return v.item() if hasattr(v, "item") else v
+_NAN = float("nan")
+
+
+def _group_key(vals: Iterable) -> tuple:
+    """Hashable group key.  Every NaN becomes the one ``_NAN`` object: a
+    fresh NaN never equals itself, so a dict would split NaN keys into
+    one group per row, where Spark's groupBy keeps one NaN group."""
+    return tuple(_NAN if isinstance(v, float) and v != v else v for v in vals)
+
+
+def _group_slices(tbl: pa.Table, group_cols: list[str]) -> list[tuple[tuple, pa.Table]]:
+    """(key, rows) per distinct key of ``tbl``, grouped once: Arrow
+    hash-groups the row indices, one ``take`` lays every group out
+    contiguously, and each group is a zero-copy slice of it.  Null keys
+    form one real group and NaN stays apart from null (SQL groupBy
+    semantics); rows keep their input order inside a group; int64 keys
+    above 2^53 stay exact.
+
+    Arrow groups per-column dictionary codes, not the key columns: on
+    pyarrow 16 a multi-column ``group_by`` whose keys hold a null splits
+    one key into several groups (single-column grouping is exact).  The
+    codes are null-free int32; the key values are read back from each
+    group's first row."""
+    if tbl.num_rows == 0:
+        return []
+    codes = [
+        pc.dictionary_encode(tbl.column(c), null_encoding="encode").combine_chunks().indices
+        for c in group_cols
+    ]
+    names = [f"k{j}" for j in range(len(codes))]
+    idx = pa.table(codes + [pa.array(np.arange(tbl.num_rows))], names=names + ["i"])
+    lists = (
+        idx.group_by(names, use_threads=False)
+        .aggregate([("i", "list")])
+        .column("i_list")
+        .combine_chunks()
+    )
+    taken = tbl.take(lists.values)
+    offsets = lists.offsets.to_numpy()
+    firsts = taken.select(group_cols).take(pa.array(offsets[:-1]))
+    keys = zip(*(firsts.column(c).to_pylist() for c in group_cols))
+    return [
+        (_group_key(k), taken.slice(lo, hi - lo))
+        for k, lo, hi in zip(keys, offsets[:-1], offsets[1:])
+    ]
+
+
+def _merge_state_rows(
+    rows: Iterable[dict], keys: list[str], acc: dict[tuple, list] | None = None
+) -> dict[tuple, list]:
+    """The one fold of partial-state rows: merge every row dict into
+    ``acc`` = {(row[k] for k in keys): [sketch, n_rows, n_values]} and
+    return it.  Fields other than ``keys``, state, n_rows and n_values
+    are ignored; passing ``acc`` back in folds incrementally."""
+    acc = {} if acc is None else acc
+    for r in rows:
+        key = _group_key(r[c] for c in keys)
+        sk = sketch_from_bytes(r["state"])
+        m = acc.get(key)
+        if m is None:
+            acc[key] = [sk, r["n_rows"], r["n_values"]]
+        else:
+            m[0].merge(sk)
+            m[1] += r["n_rows"]
+            m[2] += r["n_values"]
+    return acc
 
 
 def build_partials(
@@ -350,7 +404,6 @@ def build_partials(
     arrow_schema = out_schema
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        t0 = time.perf_counter()
         states: dict[tuple, dict[str, Sketch]] = {}
         counts: dict[tuple, list[int]] = {}
 
@@ -367,36 +420,7 @@ def build_partials(
 
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
-            if not group_cols:
-                groups = [((), tbl)]
-            else:
-                # low-cardinality grouping: one mask filter per group value.
-                # use_na_sentinel=False keeps null keys as a real group
-                # (SQL groupBy semantics) instead of factorize's silent
-                # -1 drop.  Columns factorize INDEPENDENTLY on ArrowDtype
-                # series (no float64 coercion: nullable int64 keys keep
-                # exact values above 2^53) and combine via row-unique
-                # codes; NA group values normalize to None so the output
-                # Arrow batch carries a proper null key.
-                keyarrs = [tbl.column(c) for c in group_cols]
-                key_df = pa.table(keyarrs, names=group_cols).to_pandas(
-                    types_mapper=pd.ArrowDtype
-                )
-                col_codes, col_uniques = [], []
-                for c in group_cols:
-                    cc, cu = pd.factorize(key_df[c], use_na_sentinel=False)
-                    col_codes.append(cc)
-                    col_uniques.append(list(cu))
-                stacked = np.stack(col_codes, axis=1)
-                uniq_rows, inv = np.unique(stacked, axis=0, return_inverse=True)
-                groups = []
-                for gi, urow in enumerate(uniq_rows):
-                    mask = pa.array(inv == gi)
-                    gkey = tuple(
-                        _norm_group_val(col_uniques[j][int(rj)])
-                        for j, rj in enumerate(urow)
-                    )
-                    groups.append((gkey, tbl.filter(mask)))
+            groups = [((), tbl)] if not group_cols else _group_slices(tbl, group_cols)
             for gkey, gtbl in groups:
                 sk = bucket(gkey)
                 counts[gkey]["rows"] += gtbl.num_rows
@@ -405,7 +429,6 @@ def build_partials(
                     nv = spec.feed(sk[spec.name], gtbl.column(spec.column), cache=batch_cache)
                     counts[gkey][spec.name] += nv
 
-        wall = (time.perf_counter() - t0) * 1e3
         if not states:
             yield pa.RecordBatch.from_pylist([], schema=arrow_schema)
             return
@@ -418,7 +441,6 @@ def build_partials(
                     state=sk[spec.name].to_bytes(),
                     n_rows=counts[gkey]["rows"],
                     n_values=counts[gkey][spec.name],
-                    wall_ms=wall / max(1, len(states) * len(specs)),
                 )
                 rows.append(row)
         yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
@@ -460,13 +482,12 @@ def _schema_ddl(schema: pa.Schema) -> str:
 
 def _fold_states(group_cols: list[str]):
     """mapInArrow fold: merge every partial state in this partition,
-    keyed by (group..., spec) — binary states never leave Arrow, and
-    never round-trip through pandas pickling."""
+    keyed by (group..., spec), one Arrow batch at a time — binary states
+    never leave Arrow, and never round-trip through pandas pickling."""
     keys = list(group_cols) + ["spec"]
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[tuple, Sketch] = {}
-        meta: dict[tuple, list] = {}
+        acc: dict[tuple, list] = {}
         key_fields = None
         for batch in batches:
             if key_fields is None:
@@ -474,40 +495,14 @@ def _fold_states(group_cols: list[str]):
                 # INPUT Arrow type: from_pylist would re-infer int64 and
                 # desync from the declared mapInArrow schema
                 key_fields = [batch.schema.field(c) for c in keys]
-            rows = pa.Table.from_batches([batch]).to_pylist()
-            for r in rows:
-                key = tuple(r[c] for c in keys)
-                sk = sketch_from_bytes(r["state"])
-                if key in acc:
-                    acc[key].merge(sk)
-                    m = meta[key]
-                    m[0] += r["n_rows"]
-                    m[1] += r["n_values"]
-                    m[2] += r["wall_ms"]
-                else:
-                    acc[key] = sk
-                    meta[key] = [r["n_rows"], r["n_values"], r["wall_ms"]]
+            _merge_state_rows(batch.to_pylist(), keys, acc)
         if not acc:
             return
-        out = []
-        for key, sk in acc.items():
-            row = dict(zip(keys, key))
-            row.update(
-                state=sk.to_bytes(),
-                n_rows=meta[key][0],
-                n_values=meta[key][1],
-                wall_ms=meta[key][2],
-            )
-            out.append(row)
-        out_schema = pa.schema(
-            list(key_fields)
-            + [
-                pa.field("state", pa.binary()),
-                pa.field("n_rows", pa.int64()),
-                pa.field("n_values", pa.int64()),
-                pa.field("wall_ms", pa.float64()),
-            ]
-        )
+        out = [
+            dict(zip(keys, key), state=sk.to_bytes(), n_rows=n_rows, n_values=n_values)
+            for key, (sk, n_rows, n_values) in acc.items()
+        ]
+        out_schema = pa.schema(key_fields + [pa.field(n, t) for n, t in _PARTIAL_FIELDS[1:]])
         yield pa.RecordBatch.from_pylist(out, schema=out_schema)
 
     return fold
@@ -536,7 +531,7 @@ def merge_partials(
     keys = group_cols + ["spec"]
     schema_ddl = ", ".join(
         [f"{f.name} {f.dataType.simpleString()}" for f in partials.select(*keys).schema.fields]
-        + ["state binary", "n_rows long", "n_values long", "wall_ms double"]
+        + ["state binary", "n_rows long", "n_values long"]
     )
     if fanout is None:
         n_parts = partials.rdd.getNumPartitions()
@@ -625,7 +620,7 @@ def keyed_sketch_aggregate(
     duplicate rows share a salt; pass ``row_id_col`` (a stable unique
     id column, e.g. doc_id/url) to fan duplicate-row skew out too,
     deterministically — then ONE vectorized ``build_partials`` pass per
-    partition (per-batch factorize grouping, shared tokenize base; no
+    partition (each batch grouped once by Arrow, shared tokenize; no
     per-group pandas calls: an applyInPandas stage here would pay ~1 ms
     x (keys x S) groups, the same trap the LSH pair stage hit), then
     the keyed tree merge.  Per-task state memory is (distinct keys in
@@ -648,8 +643,8 @@ def keyed_sketch_aggregate(
     real scale it must be anyway; pass ``partitions`` explicitly for
     wide sketches over very many keys.
 
-    Returns a DataFrame (key_cols..., spec, state, n_rows, n_values,
-    wall_ms) — one row per (key, spec).
+    Returns a DataFrame (key_cols..., spec, state, n_rows, n_values) —
+    one row per (key, spec).
     """
     key_cols = list(key_cols)
     value_cols = sorted({s.column for s in specs})
@@ -771,23 +766,21 @@ def keyed_distinct_estimates(
 
 
 class SketchResult:
-    """Merged sketches plus per-run metrics, keyed by (group..., spec)."""
+    """Merged sketches plus per-run metrics, keyed by (group..., spec).
 
-    def __init__(self, rows: list[dict], group_cols: list[str]):
+    ``rows`` are partial-state rows (group..., spec, state, n_rows,
+    n_values); rows sharing a key merge, other fields are ignored."""
+
+    def __init__(self, rows: Iterable[dict], group_cols: list[str]):
         self.group_cols = group_cols
-        self.metrics: dict[tuple, dict] = {}
-        self._sketches: dict[tuple, Sketch] = {}
-        for r in rows:
-            key = tuple(r[c] for c in group_cols) + (r["spec"],)
-            self._sketches[key] = sketch_from_bytes(r["state"])
-            self.metrics[key] = {
-                "n_rows": r["n_rows"],
-                "n_values": r["n_values"],
-                "wall_ms": r["wall_ms"],
-            }
+        acc = _merge_state_rows(rows, list(group_cols) + ["spec"])
+        self._sketches: dict[tuple, Sketch] = {k: m[0] for k, m in acc.items()}
+        self.metrics: dict[tuple, dict] = {
+            k: {"n_rows": m[1], "n_values": m[2]} for k, m in acc.items()
+        }
 
     def sketch(self, spec_name: str, *group_vals) -> Sketch:
-        return self._sketches[tuple(group_vals) + (spec_name,)]
+        return self._sketches[_group_key(group_vals) + (spec_name,)]
 
     def keys(self):
         return list(self._sketches)
@@ -825,7 +818,7 @@ def sketch_aggregate(
         for spec in specs:
             if (spec.name,) not in result._sketches:
                 result._sketches[(spec.name,)] = spec.make()
-                result.metrics[(spec.name,)] = {"n_rows": 0, "n_values": 0, "wall_ms": 0.0}
+                result.metrics[(spec.name,)] = {"n_rows": 0, "n_values": 0}
     return result
 
 
@@ -897,17 +890,20 @@ def distinct_overlap_estimates(
 
 
 def _fd_merged_state(
-    df: DataFrame, vec_col: str, d: int | None, ell: int
+    df: DataFrame, vec_col: str, d: int | None, ell: int, group_cols: list[str] | None = None
 ) -> tuple[DataFrame, int]:
-    """Shared FD preamble: infer d if needed, build per-partition FD
-    partials in one Arrow pass, tree-merge — (merged 1-row frame, d)."""
+    """Shared FD preamble: infer d if needed, build per-partition (and
+    per-group) FD partials in one Arrow pass, tree-merge — (merged
+    frame, d)."""
+    group_cols = list(group_cols or [])
     if d is None:
         row = df.select(F.size(vec_col).alias("_d")).filter(F.col("_d") > 0).head()
         if row is None:
             raise ValueError("cannot infer d from an empty/all-null vector column")
         d = int(row["_d"])
     spec = SketchSpec("fd", "fd", vec_col, mode="vector", params={"d": d, "ell": ell})
-    return merge_partials(build_partials(df.select(vec_col), [spec]), []), d
+    partials = build_partials(df.select(*group_cols, vec_col), [spec], group_cols)
+    return merge_partials(partials, group_cols), d
 
 
 def fd_spectrum(
@@ -942,21 +938,7 @@ def fd_spectrum(
     subspace monitoring; output gains the group columns.
     """
     group_cols = list(group_cols or [])
-    if not group_cols:
-        merged, d = _fd_merged_state(df, vec_col, d, ell)
-    else:
-        if d is None:
-            row = df.select(F.size(vec_col).alias("_d")).filter(F.col("_d") > 0).head()
-            if row is None:
-                raise ValueError("cannot infer d from an empty/all-null vector column")
-            d = int(row["_d"])
-        spec = SketchSpec(
-            "fd", "fd", vec_col, mode="vector", params={"d": d, "ell": ell}
-        )
-        partials = build_partials(
-            df.select(*(group_cols + [vec_col])), [spec], group_cols
-        )
-        merged = merge_partials(partials, group_cols)
+    merged, d = _fd_merged_state(df, vec_col, d, ell, group_cols)
     gschema = merged.select(*group_cols).schema if group_cols else None
 
     def unpack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -9,9 +9,13 @@ wave of buckets runs as one Spark job whose partials are grouped by
 bucket; the merged per-bucket states land in the checkpoint directory
 as one parquet file per bucket via an atomic tmp+rename, carrying:
 
-  bucket, spec, state(binary), n_rows, n_values, wall_ms,
+  bucket, spec, state(binary), n_rows, n_values,
   input_fingerprint (order-independent XOR of row key hashes),
-  completed_at_epoch
+  fp_rows, completed_at_epoch
+
+``result`` reads only (spec, state, n_rows, n_values), so bucket files
+with extra columns (older files carry a per-row timing column) still
+load.
 
 Resume lists completed buckets from the directory and processes only
 the remainder; the fingerprint lets a resume detect that a bucket's
@@ -28,13 +32,11 @@ from __future__ import annotations
 import os
 import time
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..core import sketch_from_bytes
 from .aggregate import SketchResult, SketchSpec, build_partials, merge_partials
 
 __all__ = ["CheckpointedSketchJob", "SimulatedFailure"]
@@ -93,7 +95,6 @@ class CheckpointedSketchJob:
             self._run_wave(wave)
 
     def _run_wave(self, buckets: list[int]) -> None:
-        t0 = time.perf_counter()
         sub = self._with_bucket(self.df).filter(F.col("_bucket").isin(buckets))
         # fingerprint spec rides along as one extra "sketch": an
         # order-independent XOR of key hashes per bucket
@@ -107,7 +108,6 @@ class CheckpointedSketchJob:
         )
         merged = merge_partials(partials, ["_bucket"], two_level=False)
         rows = [r.asDict() for r in merged.join(fingerprints, "_bucket", "left").collect()]
-        wall = (time.perf_counter() - t0) * 1e3
         by_bucket: dict[int, list[dict]] = {}
         for r in rows:
             by_bucket.setdefault(int(r["_bucket"]), []).append(r)
@@ -124,7 +124,6 @@ class CheckpointedSketchJob:
                         "state": s.make().to_bytes(),
                         "n_rows": 0,
                         "n_values": 0,
-                        "wall_ms": 0.0,
                         "fp": 0,
                         "fp_rows": 0,
                     }
@@ -137,12 +136,10 @@ class CheckpointedSketchJob:
                     "state": pa.array([r["state"] for r in brows], pa.binary()),
                     "n_rows": pa.array([r["n_rows"] for r in brows], pa.int64()),
                     "n_values": pa.array([r["n_values"] for r in brows], pa.int64()),
-                    "wall_ms": pa.array([float(r["wall_ms"]) for r in brows], pa.float64()),
                     "input_fingerprint": pa.array(
                         [int(r.get("fp") or 0) for r in brows], pa.int64()
                     ),
                     "fp_rows": pa.array([int(r.get("fp_rows") or 0) for r in brows], pa.int64()),
-                    "wave_wall_ms": pa.array([wall] * len(brows), pa.float64()),
                     "completed_at_epoch": pa.array([now] * len(brows), pa.float64()),
                 }
             )
@@ -156,31 +153,17 @@ class CheckpointedSketchJob:
         missing = set(range(self.n_buckets)) - done
         if missing:
             raise RuntimeError(f"job incomplete: buckets {sorted(missing)} missing")
-        tables = [pq.read_table(self._bucket_path(b)) for b in sorted(done)]
-        allt = pa.concat_tables(tables).to_pylist()
         if validate_lineage:
             self.validate_lineage()
-        merged: dict[str, object] = {}
-        metrics: dict[str, dict] = {}
-        for r in allt:
-            sk = sketch_from_bytes(r["state"])
-            if r["spec"] not in merged:
-                merged[r["spec"]] = sk
-                metrics[r["spec"]] = {
-                    "n_rows": r["n_rows"],
-                    "n_values": r["n_values"],
-                    "wall_ms": r["wall_ms"],
-                }
-            else:
-                merged[r["spec"]].merge(sk)
-                m = metrics[r["spec"]]
-                m["n_rows"] += r["n_rows"]
-                m["n_values"] += r["n_values"]
-                m["wall_ms"] += r["wall_ms"]
-        result = SketchResult([], [])
-        result._sketches = {(k,): v for k, v in merged.items()}
-        result.metrics = {(k,): v for k, v in metrics.items()}
-        return result
+        cols = ["spec", "state", "n_rows", "n_values"]
+        return SketchResult(
+            (
+                r
+                for b in sorted(done)
+                for r in pq.read_table(self._bucket_path(b), columns=cols).to_pylist()
+            ),
+            [],
+        )
 
     def validate_lineage(self) -> None:
         """Recompute bucket fingerprints from the current input and

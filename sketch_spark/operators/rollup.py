@@ -19,8 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..core import sketch_from_bytes
-from .aggregate import SketchSpec, build_partials, merge_partials
+from .aggregate import SketchResult, SketchSpec, build_partials, merge_partials
 
 __all__ = ["build_sketch_rollup", "query_sketch_rollup", "rollup_emerging_heavy_hitters"]
 
@@ -60,13 +59,10 @@ def query_sketch_rollup(
         df = df.filter(F.col("bucket") >= start)
     if end is not None:
         df = df.filter(F.col("bucket") <= end)
-    rows = df.select("state").collect()
+    rows = df.select("spec", "state", "n_rows", "n_values").collect()
     if not rows:
         raise KeyError(f"no rollup states for {spec_name} in [{start}, {end}]")
-    acc = sketch_from_bytes(bytes(rows[0]["state"]))
-    for r in rows[1:]:
-        acc.merge(sketch_from_bytes(bytes(r["state"])))
-    return acc
+    return SketchResult([r.asDict() for r in rows], []).sketch(spec_name)
 
 
 def rollup_emerging_heavy_hitters(

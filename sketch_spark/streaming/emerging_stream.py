@@ -22,9 +22,9 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ..operators.aggregate import SketchSpec, build_partials, merge_partials
+from ..operators.aggregate import SketchSpec
 from ..operators.emerging import emerging_heavy_hitters
-from .sketch_stream import commit_epoch, epoch_applied
+from .sketch_stream import _fold_epoch, commit_epoch, epoch_applied, read_state
 
 
 def streaming_emerging_hh(
@@ -71,23 +71,12 @@ def streaming_emerging_hh(
     seen_dir = os.path.join(state_dir, "seen")
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        import shutil
-
         spark = batch_df.sparkSession
         # replay guard: at-least-once re-delivery must not double-fold
         if epoch_applied(state_dir, epoch_id):
             return
         # 1. fold this batch's partials into the persistent state
-        partials = build_partials(batch_df, [spec], spread_small_inputs=False)
-        merged = merge_partials(partials, two_level=False)
-        prev_path = os.path.join(state_dir, "current")
-        new = merged
-        if os.path.exists(prev_path):
-            prev = spark.read.parquet(prev_path)
-            new = merge_partials(prev.unionByName(merged), two_level=False)
-        tmp = os.path.join(state_dir, f"epoch-{epoch_id}")
-        new.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(prev_path)
+        _fold_epoch(batch_df, [spec], state_dir, epoch_id, [], spread_small_inputs=False)
         # accumulate raw test rows for the exact second pass — written
         # to an EPOCH-NAMED directory in overwrite mode so a replayed
         # epoch rewrites the same files instead of appending duplicates
@@ -100,15 +89,11 @@ def streaming_emerging_hh(
             os.path.join(seen_dir, f"epoch={epoch_id}")
         )
         commit_epoch(state_dir, epoch_id)
-        shutil.rmtree(tmp, ignore_errors=True)
 
         if snapshot_every > 1 and epoch_id % snapshot_every != 0:
             return
         # 2. snapshot the emerging set against the accumulated sketch
-        from ..core import sketch_from_bytes
-
-        state_row = spark.read.parquet(prev_path).filter("spec = 'cmcu'").first()
-        sketch = sketch_from_bytes(bytes(state_row["state"]))
+        sketch = read_state(spark, state_dir, "cmcu")
         # partition discovery over seen/epoch=N adds an `epoch` column;
         # the exact pass only needs the text
         seen = spark.read.parquet(seen_dir).select(text_col)

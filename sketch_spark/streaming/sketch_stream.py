@@ -16,8 +16,7 @@ import shutil
 
 from pyspark.sql import DataFrame
 
-from ..core import sketch_from_bytes
-from ..operators.aggregate import SketchSpec, build_partials, merge_partials
+from ..operators.aggregate import SketchResult, SketchSpec, build_partials, merge_partials
 
 
 def epoch_applied(state_dir: str, epoch_id: int) -> bool:
@@ -40,6 +39,33 @@ def commit_epoch(state_dir: str, epoch_id: int) -> None:
     os.replace(tmp, marker)
 
 
+def _fold_epoch(
+    batch_df: DataFrame,
+    specs: list[SketchSpec],
+    state_dir: str,
+    epoch_id: int,
+    group_cols: list[str],
+    spread_small_inputs: bool = True,
+) -> None:
+    """Fold one micro-batch into ``<state_dir>/current``: build and
+    merge its partials, merge them with the current states, stage the
+    result under ``epoch-<id>`` and swap it in.  The caller guards the
+    epoch (``epoch_applied``) and commits it (``commit_epoch``)."""
+    spark = batch_df.sparkSession
+    partials = build_partials(batch_df, specs, group_cols, spread_small_inputs=spread_small_inputs)
+    merged = merge_partials(partials, group_cols, two_level=False)
+    prev_path = os.path.join(state_dir, "current")
+    new = merged
+    if os.path.exists(prev_path):
+        prev = spark.read.parquet(prev_path).select(*merged.columns)
+        new = merge_partials(prev.unionByName(merged), group_cols, two_level=False)
+    tmp = os.path.join(state_dir, f"epoch-{epoch_id}")
+    new.write.mode("overwrite").parquet(tmp)
+    # atomic-ish swap: rewrite current from the epoch result
+    spark.read.parquet(tmp).write.mode("overwrite").parquet(prev_path)
+    shutil.rmtree(tmp, ignore_errors=True)  # staging dir, no longer needed
+
+
 def streaming_sketch_query(
     stream_df: DataFrame,
     specs: list[SketchSpec],
@@ -60,7 +86,6 @@ def streaming_sketch_query(
     the current global state back with ``read_state``.
     """
     group_cols = list(group_cols or [])
-    spark = stream_df.sparkSession
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         # foreachBatch is at-least-once: a crash after the state swap
@@ -69,19 +94,8 @@ def streaming_sketch_query(
         # The epoch marker makes the fold idempotent per epoch.
         if epoch_applied(state_dir, epoch_id):
             return
-        partials = build_partials(batch_df, specs, group_cols)
-        merged = merge_partials(partials, group_cols, two_level=False)
-        prev_path = os.path.join(state_dir, "current")
-        new = merged
-        if os.path.exists(prev_path):
-            prev = batch_df.sparkSession.read.parquet(prev_path)
-            new = merge_partials(prev.unionByName(merged), group_cols, two_level=False)
-        tmp = os.path.join(state_dir, f"epoch-{epoch_id}")
-        new.write.mode("overwrite").parquet(tmp)
-        # atomic-ish swap: rewrite current from the epoch result
-        batch_df.sparkSession.read.parquet(tmp).write.mode("overwrite").parquet(prev_path)
+        _fold_epoch(batch_df, specs, state_dir, epoch_id, group_cols)
         commit_epoch(state_dir, epoch_id)
-        shutil.rmtree(tmp, ignore_errors=True)  # staging dir, no longer needed
 
     writer = (
         stream_df.writeStream.foreachBatch(fold)
@@ -96,9 +110,10 @@ def streaming_sketch_query(
 def read_state(spark, state_dir: str, spec_name: str, *group_vals):
     """Load the merged sketch for ``spec_name`` from the state table."""
     df = spark.read.parquet(os.path.join(state_dir, "current"))
+    # the partial-state layout: group columns, then spec, state, ...
+    group_cols = df.columns[: df.columns.index("spec")]
     rows = df.filter(df.spec == spec_name).collect()
-    for r in rows:
-        key = tuple(r[c] for c in df.columns if c not in ("spec", "state", "n_rows", "n_values", "wall_ms"))
-        if key == tuple(group_vals):
-            return sketch_from_bytes(r["state"])
-    raise KeyError(f"no state for {spec_name} {group_vals}")
+    try:
+        return SketchResult([r.asDict() for r in rows], group_cols).sketch(spec_name, *group_vals)
+    except KeyError:
+        raise KeyError(f"no state for {spec_name} {group_vals}") from None

@@ -307,3 +307,20 @@ def test_cmcu_native_updates_a_deserialized_table(stream):
         toks = list(exact)
         assert (cu.estimate_tokens(toks) >= np.array([exact[t] for t in toks])).all()
         assert cu.total == len(stream)
+
+
+@pytest.mark.parametrize("cls,depth,log2_width", [(CountMinCU, 4, 14), (CountMin, 1, 4), (CountMin, 7, 20)])
+def test_estimate_hashed_equals_2d_gather(cls, depth, log2_width):
+    """The row-at-a-time estimate against the (depth, n) gather over
+    ``bucket_indices`` it replaced."""
+    from sketch_spark.core.hashing import bucket_indices
+
+    rng = np.random.default_rng(5)
+    keys = rng.integers(0, 2**64, 50_000, dtype=np.uint64)
+    sk = cls(depth=depth, log2_width=log2_width, seed=9)
+    sk.update_hashed(keys[:20_000], rng.integers(1, 5, 20_000))
+    idx = bucket_indices(keys, sk._a, sk._b, sk.log2_width)
+    want = sk.table[np.arange(sk.depth)[:, None], idx].min(axis=0)
+    got = sk.estimate_hashed(keys)
+    assert got.dtype == want.dtype and np.array_equal(got, want)
+    assert len(sk.estimate_hashed(keys[:0])) == 0

@@ -54,7 +54,7 @@ def test_sketch_aggregate_estimates_vs_exact(spark, pages_dir, pages_pdf):
 
     m = res.metrics[("cmcu",)]
     assert m["n_rows"] == len(pages)
-    assert m["n_values"] > 0 and m["wall_ms"] > 0
+    assert m["n_values"] > 0
 
 
 def test_repartition_invariance(spark, pages_dir):
