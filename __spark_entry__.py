@@ -20,34 +20,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W
 
 from sketch_spark.functions.text import tokens_col, tokens_sql
+from sketch_spark.session import ship_package
 
 _TOKS = tokens_sql("text")
 
 
-_SHIPPED_SESSIONS: set[int] = set()
-
-
-def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship sketch_spark to this session's executors via addPyFile.
-
-    The driver constructs its own SparkSession; without this, executors
-    would need the repo on their PYTHONPATH by accident of cwd.  Safe
-    to call repeatedly (guarded per session).
-    """
-    key = id(spark.sparkContext)
-    if key in _SHIPPED_SESSIONS:
-        return
-    try:
-        from sketch_spark.session import package_zip
-
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # e.g. file already registered — executors are covered
-    _SHIPPED_SESSIONS.add(key)
-
-
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_shipped(spark)
+    # the session may come from outside get_spark: ship the package once
+    ship_package(spark.sparkContext)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 

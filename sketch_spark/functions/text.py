@@ -127,14 +127,21 @@ def _roll_ngrams(
     """(key per start position, same-row mask) of the order-``ngram``
     grams over per-occurrence token hashes ``h``: the rolling combine
     every n-gram hash in the package is made of (``native.gram_counts``
-    is its compiled twin).  A gram is real only where the mask holds,
-    i.e. its first and last token share a row; fewer than ``ngram``
-    tokens give two empty arrays."""
+    is its compiled twin).  A gram is real only where the mask
+    (``_same_row``) holds; fewer than ``ngram`` tokens give two empty
+    arrays."""
     m = max(len(h) - ngram + 1, 0)
     combined = h[:m].copy()
     for j in range(1, ngram):
         combined = mix_u64(combined * _NGRAM_PRIME ^ h[j : m + j], np.uint64(j))
-    return combined, parents[:m] == parents[ngram - 1 : ngram - 1 + m]
+    return combined, _same_row(parents, ngram)
+
+
+def _same_row(parents: np.ndarray, ngram: int) -> np.ndarray:
+    """Mask over gram start positions: the order-``ngram`` gram starting
+    there has its first and last token in one row."""
+    m = max(len(parents) - ngram + 1, 0)
+    return parents[:m] == parents[ngram - 1 : ngram - 1 + m]
 
 
 def _gram_keys(h: np.ndarray, parents: np.ndarray, ngram: int) -> np.ndarray:
@@ -228,44 +235,25 @@ def ngram_count_df(
     out_col: str | None = None,
 ):
     """Exact word n-gram counts as a DataFrame (out_col, cnt) via Arrow
-    map-side combine: each partition tokenizes with the vectorized
-    kernels, value-counts its grams, and folds batches with one Arrow
-    ``group_by`` — the shuffle then carries per-partition UNIQUE grams
-    (vocab-scale), not per-occurrence rows.  ~6x faster than the
-    codegen explode+hash-agg on Zipf text (BENCH.md) and the identical
-    exact semantics (the DuckDB oracle is unchanged).
+    map-side combine: each batch is tokenized with the vectorized
+    kernels, its in-row grams are joined into strings (never hashed)
+    and value-counted, and ``_map_side_combine`` folds the batches —
+    the shuffle then carries per-partition UNIQUE grams (vocab-scale),
+    not per-occurrence rows.  ~6x faster than the codegen
+    explode+hash-agg on Zipf text (BENCH.md) and the identical exact
+    semantics (the DuckDB oracle is unchanged).
     """
-    from pyspark.sql import functions as F  # noqa: F811 (module-level F is fine)
+    from ..operators.aggregate import _map_side_combine
 
     out_col = out_col or ("token" if n == 1 else f"ngram{n}")
 
-    def run(batches):
-        parts = []
-        for b in batches:
-            _, strs = ngram_occurrences(b.column(0), seed=1, ngram=n, lowercase=lowercase)
-            if len(strs) == 0:
-                continue
-            vc = strs.value_counts()
-            parts.append(
-                pa.table({"g": vc.field("values"), "c": vc.field("counts").cast(pa.int64())})
-            )
-        if not parts:
-            yield pa.RecordBatch.from_pydict(
-                {out_col: pa.array([], pa.string()), "cnt": pa.array([], pa.int64())}
-            )
-            return
-        t = (
-            pa.concat_tables(parts)
-            .group_by("g")
-            .aggregate([("c", "sum")])
-            .rename_columns([out_col, "cnt"])
-        )
-        yield from t.to_batches()
+    def count(batch: pa.RecordBatch) -> pa.Table:
+        flat, parents = _tokens(batch.column(0), lowercase)
+        grams = flat if n == 1 else _gram_strings(flat, np.flatnonzero(_same_row(parents, n)), n)
+        vc = grams.value_counts()
+        return pa.table({out_col: vc.field("values"), "cnt": vc.field("counts")})
 
-    from ..operators.aggregate import ensure_min_partitions
-
-    partial = ensure_min_partitions(df.select(text_col)).mapInArrow(run, f"{out_col} string, cnt long")
-    out = partial.groupBy(out_col).agg(F.sum("cnt").alias("cnt"))
+    out = _map_side_combine(df.select(text_col), count, out_col, {"cnt": "sum"})
     if min_count is not None:
         out = out.filter(F.col("cnt") >= min_count)
     return out

@@ -160,6 +160,52 @@ def ensure_min_partitions(df: DataFrame) -> DataFrame:
     return df
 
 
+# a partition's buffered per-batch tables are re-folded past this many bytes
+_COMBINE_BYTES = 512 << 20
+
+
+def _map_side_combine(
+    df: DataFrame,
+    per_batch,
+    key: str,
+    aggs: dict[str, str],
+    key_type: str = "string",
+) -> DataFrame:
+    """The one exact count of kept keys: ``per_batch(batch)`` turns each
+    Arrow batch of ``df`` into a table of ``key`` plus the long columns
+    of ``aggs`` ({column: "sum" | "max"}), usually already combined
+    within the batch.  Each partition buffers those tables, folds them
+    with one Arrow ``group_by`` on the single key column whenever the
+    buffer passes ``_COMBINE_BYTES`` and once at its end, and Spark's
+    ``groupBy(key)`` finishes the job: the shuffle carries one row per
+    (partition, kept key), never the occurrences."""
+    bound = _COMBINE_BYTES  # read on the driver: the closure carries it to the workers
+    names = [f"{c}_{a}" for c, a in aggs.items()]
+
+    def fold(tables: list[pa.Table]) -> pa.Table:
+        t = pa.concat_tables(tables).group_by(key).aggregate(list(aggs.items()))
+        return t.select([key, *names]).rename_columns([key, *aggs])
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: list[pa.Table] = []
+        size = 0
+        for batch in batches:
+            t = per_batch(batch)
+            if t.num_rows == 0:
+                continue
+            acc.append(t)
+            size += t.nbytes
+            if size > bound:
+                acc = [fold(acc)]
+                size = acc[0].nbytes
+        if acc:
+            yield from fold(acc).to_batches()
+
+    ddl = ", ".join([f"{key} {key_type}"] + [f"{c} long" for c in aggs])
+    partial = ensure_min_partitions(df).mapInArrow(run, ddl)
+    return partial.groupBy(key).agg(*[getattr(F, a)(c).alias(c) for c, a in aggs.items()])
+
+
 @dataclass(frozen=True)
 class SketchSpec:
     """One sketch to build: which column, which algorithm, how to feed it.
@@ -277,30 +323,24 @@ _PARTIAL_FIELDS = [
 ]
 
 
-_SPARK_TO_ARROW = {
-    "string": pa.string(),
-    "bigint": pa.int64(),
-    "int": pa.int32(),
-    "smallint": pa.int16(),
-    "double": pa.float64(),
-    "float": pa.float32(),
-    "boolean": pa.bool_(),
-    "timestamp": pa.timestamp("us"),
-    "date": pa.date32(),
-}
+# the Spark types a group key column of a partial row may have
+_GROUP_TYPES = frozenset(
+    {"string", "bigint", "int", "smallint", "double", "float", "boolean", "timestamp", "date"}
+)
 
 
-def _partial_schema(group_cols: list[str], df: DataFrame) -> pa.Schema:
-    fields = []
-    if group_cols:
-        spark_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        for c in group_cols:
-            st = spark_types[c]
-            if st not in _SPARK_TO_ARROW:
-                raise TypeError(f"unsupported group column type {st} for {c}")
-            fields.append(pa.field(c, _SPARK_TO_ARROW[st]))
-    fields += [pa.field(n, t) for n, t in _PARTIAL_FIELDS]
-    return pa.schema(fields)
+def _ddl(df: DataFrame, cols: list[str]) -> list[str]:
+    """``name type`` of each of ``cols``, read from ``df``'s Spark schema."""
+    return [f"{f.name} {f.dataType.simpleString()}" for f in df.select(*cols).schema.fields]
+
+
+def _partial_ddl(df: DataFrame, group_cols: list[str]) -> str:
+    """The Spark DDL of partial-state rows keyed by ``group_cols`` of ``df``."""
+    keys = _ddl(df, group_cols)
+    for k in keys:
+        if k.split(" ", 1)[1] not in _GROUP_TYPES:
+            raise TypeError(f"unsupported group column type {k}")
+    return ", ".join(keys + ["spec string", "state binary", "n_rows long", "n_values long"])
 
 
 _NAN = float("nan")
@@ -400,8 +440,7 @@ def build_partials(
         narrow = narrow.coalesce(coalesce_to)
     elif spread_small_inputs:
         narrow = ensure_min_partitions(narrow)
-    out_schema = _partial_schema(group_cols, df)
-    arrow_schema = out_schema
+    ddl = _partial_ddl(df, group_cols)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         states: dict[tuple, dict[str, Sketch]] = {}
@@ -418,7 +457,10 @@ def build_partials(
             # empty inputs still yield a well-formed zero sketch
             bucket(())
 
+        key_fields = []
         for batch in batches:
+            # group keys keep the INPUT Arrow types (see _fold_states)
+            key_fields = [batch.schema.field(c) for c in group_cols]
             tbl = pa.Table.from_batches([batch])
             groups = [((), tbl)] if not group_cols else _group_slices(tbl, group_cols)
             for gkey, gtbl in groups:
@@ -430,7 +472,6 @@ def build_partials(
                     counts[gkey][spec.name] += nv
 
         if not states:
-            yield pa.RecordBatch.from_pylist([], schema=arrow_schema)
             return
         rows = []
         for gkey, sk in states.items():
@@ -443,41 +484,10 @@ def build_partials(
                     n_values=counts[gkey][spec.name],
                 )
                 rows.append(row)
-        yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+        schema = pa.schema(key_fields + [pa.field(n, t) for n, t in _PARTIAL_FIELDS])
+        yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    ddl = _schema_ddl(arrow_schema)
     return narrow.mapInArrow(run, ddl)
-
-
-_ARROW_TO_DDL = {
-    pa.string(): "string",
-    pa.large_string(): "string",
-    pa.binary(): "binary",
-    pa.int64(): "long",
-    pa.int32(): "int",
-    pa.float64(): "double",
-    pa.bool_(): "boolean",
-    pa.timestamp("us"): "timestamp",
-    pa.timestamp("ns"): "timestamp",
-    pa.date32(): "date",
-}
-
-
-def _schema_ddl(schema: pa.Schema) -> str:
-    parts = []
-    for f in schema:
-        t = _ARROW_TO_DDL.get(f.type)
-        if t is None:
-            if pa.types.is_timestamp(f.type):
-                t = "timestamp"
-            elif pa.types.is_integer(f.type):
-                t = "long"
-            elif pa.types.is_floating(f.type):
-                t = "double"
-            else:
-                raise TypeError(f"unsupported group column type {f.type}")
-        parts.append(f"{f.name} {t}")
-    return ", ".join(parts)
 
 
 def _fold_states(group_cols: list[str]):
@@ -528,11 +538,7 @@ def merge_partials(
     ``max_states_per_reducer`` states.
     """
     group_cols = list(group_cols or [])
-    keys = group_cols + ["spec"]
-    schema_ddl = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in partials.select(*keys).schema.fields]
-        + ["state binary", "n_rows long", "n_values long"]
-    )
+    schema_ddl = _partial_ddl(partials, group_cols)
     if fanout is None:
         n_parts = partials.rdd.getNumPartitions()
         fanout = max(1, -(-n_parts // max_states_per_reducer))
@@ -939,7 +945,6 @@ def fd_spectrum(
     """
     group_cols = list(group_cols or [])
     merged, d = _fd_merged_state(df, vec_col, d, ell, group_cols)
-    gschema = merged.select(*group_cols).schema if group_cols else None
 
     def unpack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -977,15 +982,10 @@ def fd_spectrum(
                 )
                 yield pa.RecordBatch.from_pydict(cols)
 
-    gddl = (
-        "".join(
-            f"{f.name} {f.dataType.simpleString()}, " for f in (gschema.fields if gschema else [])
-        )
-    )
-    return merged.mapInArrow(
-        unpack,
-        gddl + "component long, singular_value double, err_bound double, n_rows long",
-    )
+    ddl = _ddl(merged, group_cols) + [
+        "component long", "singular_value double", "err_bound double", "n_rows long"
+    ]
+    return merged.mapInArrow(unpack, ", ".join(ddl))
 
 
 def _fd_scores(batches: Iterator[pa.RecordBatch], v: np.ndarray) -> Iterator[pa.RecordBatch]:

@@ -1049,42 +1049,17 @@ def _duplicate_ngram_spans_arrow(
     """
     from typing import Iterator as _It
 
-    from .aggregate import ensure_min_partitions
+    from .aggregate import _map_side_combine, ensure_min_partitions
 
     src = ensure_min_partitions(docs.select(id_col, text_col))
 
-    def count_run(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
-        acc: list[pa.Table] = []
-        acc_rows = 0
+    def count(batch: pa.RecordBatch) -> pa.Table:
+        hs, _, _ = _ngram_hash_positions(batch.column(0), n, seed)
+        uniq, counts = np.unique(hs, return_counts=True)
+        return pa.table({"h": pa.array(uniq.view(np.int64)), "c": pa.array(counts)})
 
-        def fold() -> pa.Table:
-            t = pa.concat_tables(acc).group_by("h").aggregate([("c", "sum")])
-            return t.rename_columns(["h", "c"])
-
-        for batch in batches:
-            hs, _, _ = _ngram_hash_positions(batch.column(0), n, seed)
-            if not len(hs):
-                continue
-            uniq, counts = np.unique(hs, return_counts=True)
-            acc.append(
-                pa.table(
-                    {"h": pa.array(uniq.view(np.int64)), "c": pa.array(counts.astype(np.int64))}
-                )
-            )
-            acc_rows += len(uniq)
-            if acc_rows > 32_000_000:  # bound the fold buffer (~0.5 GB)
-                folded = fold()
-                acc, acc_rows = [folded], len(folded)
-        if acc:
-            yield from fold().to_batches()
-
-    partial = src.select(text_col).mapInArrow(count_run, "h long, c long")
-    dup = (
-        partial.groupBy("h")
-        .agg(F.sum("c").alias("c"))
-        .filter(F.col("c") >= min_count)
-        .select("h")
-    )
+    counts = _map_side_combine(src.select(text_col), count, "h", {"c": "sum"}, key_type="long")
+    dup = counts.filter(F.col("c") >= min_count).select("h")
     dup = dup.persist()
     n_dup = dup.count()
 

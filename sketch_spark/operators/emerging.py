@@ -6,19 +6,20 @@ report token x iff (1) its CMCU estimate over the *test* stream reaches
 occurrence count in the *control* stream; reported frequency is the
 pre-scaling estimate.
 
-Distributed shape (two passes; SURVEY.md §7.2 "heavy-hitter emission
-timing"):
+Distributed shape (one sketch job, one candidate job; SURVEY.md §7.2
+"heavy-hitter emission timing"):
 
-  pass 1   test_df  -> global merged CMCU            (sketch_aggregate)
-  pass 2   test_df  -> per-partition: estimate each occurrence's key
-           against the *broadcast* merged sketch, keep est >= threshold,
-           count the kept strings, emit (token, partial_count) [mapInArrow]
-           -> groupBy(token).sum  — shuffles ONLY candidate tokens
-  pass 2'  control_df -> same candidate predicate (the broadcast sketch
-           itself decides membership; no candidate list ever ships)
-           -> exact control counts of candidates
-  final    left join (candidates ⨝ control counts)  + filter
-           est/growth > control_count               [broadcast join]
+  sketch     test_df -> global merged CMCU               (sketch_aggregate)
+  candidates test_df ∪ control_df, each row tagged by window
+             -> per batch: estimate each occurrence's key against the
+             *broadcast* merged sketch, keep est >= threshold, build
+             gram strings for the kept occurrences only and count them
+             per window, each carrying the estimate that admitted it
+             -> groupBy(token): sum, sum, max        [_map_side_combine]
+             — the shuffle carries ONLY candidate tokens, and the
+             broadcast sketch itself decides membership in both windows
+  final      drop tokens never seen in the test window, then filter
+             est/growth > control_count
 
 Because the final sketch estimate dominates every prefix estimate, the
 candidate set is a superset of the reference's streaming upserts; the
@@ -31,20 +32,19 @@ the sketch acting as a pre-filter (SQL-oracle-checkable end to end).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import CountMinCU, sketch_from_bytes
 from ..core.hashing import hash_strings
 from ..functions.text import _gram_strings, _roll_ngrams, _tokens
-from .aggregate import SketchSpec, sketch_aggregate
+from .aggregate import SketchSpec, _map_side_combine, sketch_aggregate
 
-__all__ = ["emerging_heavy_hitters", "candidate_token_counts", "estimate_tokens_udf", "estimate_ngrams_udf", "broadcast_sketch"]
+__all__ = ["emerging_heavy_hitters", "candidate_token_counts", "estimate_tokens_udf", "broadcast_sketch"]
 
 # per-executor deserialized sketch cache (uuid -> object); broadcasts
 # carry (uuid, blob) so workers deserialize each state exactly once
@@ -69,6 +69,51 @@ def _cached_sketch(sketch_bc):
     return sk
 
 
+def _window_candidates(
+    tagged: DataFrame, sketch_bc, threshold: int, lowercase: bool, ngram: int
+) -> DataFrame:
+    """(token, test_count, control_count, est) over a (text, in_test)
+    frame: exact per-window counts of the tokens (or word n-grams)
+    whose global-sketch estimate reaches ``threshold``, and that
+    estimate.
+
+    The sketch is asked about each occurrence's key, the key it was
+    built with (``hash_strings``, rolled by ``_roll_ngrams`` for
+    n-grams); gram strings are built only for the occurrences that
+    pass, and counted exactly per string.  Two grams sharing a 64-bit
+    key therefore pass together but keep separate exact counts; one
+    string has one key, so all its occurrences carry one estimate.
+    """
+
+    def count(batch: pa.RecordBatch) -> pa.Table:
+        sketch = _cached_sketch(sketch_bc)
+        flat, parents = _tokens(batch.column(0), lowercase)
+        keys, same_row = _roll_ngrams(hash_strings(flat, seed=sketch.seed), parents, ngram)
+        starts = np.flatnonzero(same_row)
+        est = sketch.estimate_hashed(keys[starts])
+        keep = est >= threshold
+        starts, est = starts[keep], est[keep]
+        grams = pc.dictionary_encode(_gram_strings(flat, starts, ngram))
+        codes = grams.indices.to_numpy(zero_copy_only=False)
+        in_test = batch.column(1).to_numpy(zero_copy_only=False)[parents[starts]]
+        n = len(grams.dictionary)
+        gram_est = np.zeros(n, np.int64)
+        gram_est[codes] = est
+        return pa.table({
+            "token": grams.dictionary,
+            "test_count": np.bincount(codes[in_test], minlength=n),
+            "control_count": np.bincount(codes[~in_test], minlength=n),
+            "est": gram_est,
+        })
+
+    aggs = {"test_count": "sum", "control_count": "sum", "est": "max"}
+    return _map_side_combine(tagged, count, "token", aggs)
+
+
+def _tagged(df: DataFrame, text_col: str, in_test: bool) -> DataFrame:
+    return df.select(F.col(text_col), F.lit(in_test).alias("_in_test"))
+
+
 def candidate_token_counts(
     df: DataFrame,
     text_col: str,
@@ -80,54 +125,10 @@ def candidate_token_counts(
     """(token, cnt) exact counts of tokens (or word n-grams) whose
     global-sketch estimate reaches ``threshold`` — map-side combined,
     so the shuffle carries only candidate tokens
-    (vocab-of-heavy-hitters scale, not data scale).
-
-    Every order takes the same pass: the sketch is asked about each
-    occurrence's key, the key the sketch was built with
-    (``hash_strings``, rolled by ``_roll_ngrams`` for n-grams); gram
-    strings are built only for the occurrences that pass, and counted
-    exactly per string.  Two grams sharing a 64-bit key therefore pass
-    together but keep separate exact counts.
-    """
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sketch = _cached_sketch(sketch_bc)
-        parts = [pa.table({"token": pa.array([], pa.string()), "cnt": pa.array([], pa.int64())})]
-        for batch in batches:
-            flat, parents = _tokens(batch.column(0), lowercase)
-            keys, same_row = _roll_ngrams(hash_strings(flat, seed=sketch.seed), parents, ngram)
-            starts = np.flatnonzero(same_row)
-            starts = starts[sketch.estimate_hashed(keys[starts]) >= threshold]
-            if len(starts):
-                vc = _gram_strings(flat, starts, ngram).value_counts()
-                parts.append(
-                    pa.table({"token": vc.field("values"), "cnt": vc.field("counts").cast(pa.int64())})
-                )
-        t = pa.concat_tables(parts).group_by("token").aggregate([("cnt", "sum")])
-        yield from t.rename_columns(["token", "cnt"]).to_batches()
-
-    from .aggregate import ensure_min_partitions
-
-    partial = ensure_min_partitions(df.select(text_col)).mapInArrow(run, "token string, cnt long")
-    return partial.groupBy("token").agg(F.sum("cnt").alias("cnt"))
-
-
-def estimate_ngrams_udf(sketch_bc, ngram: int, lowercase: bool = False):
-    """pandas UDF: n-gram string column -> sketch estimate (the string
-    is re-tokenized and rolling-hashed exactly like the build path)."""
-
-    @F.pandas_udf("long")
-    def est(grams: pd.Series) -> pd.Series:
-        from ..functions.text import ngram_occurrences
-
-        sketch = _cached_sketch(sketch_bc)
-        arr = pa.array(grams.fillna("").tolist(), type=pa.string())
-        keys, _ = ngram_occurrences(arr, sketch.seed, ngram, lowercase)
-        # each input row is exactly one n-gram -> one key per row
-        vals = sketch.estimate_hashed(keys)
-        return pd.Series(np.asarray(vals, dtype=np.int64))
-
-    return est
+    (vocab-of-heavy-hitters scale, not data scale).  The one-window
+    case of the emerging candidate pass."""
+    cand = _window_candidates(_tagged(df, text_col, True), sketch_bc, threshold, lowercase, ngram)
+    return cand.select("token", F.col("test_count").alias("cnt"))
 
 
 def estimate_tokens_udf(sketch_bc):
@@ -227,24 +228,16 @@ def emerging_heavy_hitters(
         sketch = prebuilt_sketch
     bc = broadcast_sketch(spark, sketch)
 
-    cand = candidate_token_counts(test_df, text_col, bc, threshold, lowercase, ngram)
-    cand = cand.withColumnRenamed("cnt", "test_count")
-    est_udf = (
-        estimate_tokens_udf(bc) if ngram <= 1 else estimate_ngrams_udf(bc, ngram, lowercase)
-    )
-    cand = cand.withColumn("est", est_udf(F.col("token")))
-
-    ctrl = candidate_token_counts(control_df, text_col, bc, threshold, lowercase, ngram)
-    ctrl = ctrl.withColumnRenamed("cnt", "control_count")
-
-    joined = cand.join(F.broadcast(ctrl), "token", "left").withColumn(
-        "control_count", F.coalesce(F.col("control_count"), F.lit(0))
-    )
+    both = _tagged(test_df, text_col, True).unionByName(_tagged(control_df, text_col, False))
+    cand = _window_candidates(both, bc, threshold, lowercase, ngram)
+    # the test window's candidates only: a control-only key that passes
+    # the sketch is no emerging token
+    cand = cand.filter(F.col("test_count") > 0)
     if mode == "reference":
         # the reference stores est/GROWTH back into an int
         # (sketch.cpp:181 `heavy_hitter.second /= GROWTH`) before the
         # comparison — truncate (floor: est >= 0) to match exactly
-        out = joined.filter(
+        out = cand.filter(
             (F.col("est") >= threshold)
             & (F.floor(F.col("est") / F.lit(growth)) > F.col("control_count"))
         ).select(
@@ -254,7 +247,7 @@ def emerging_heavy_hitters(
             "control_count",
         )
     elif mode == "exact":
-        out = joined.filter(
+        out = cand.filter(
             (F.col("test_count") >= threshold)
             & (F.col("test_count") / F.lit(growth) > F.col("control_count"))
         ).select(

@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core import sketch_from_bytes
 from ..core.misragries import MisraGries
-from ..functions.text import tokenize_batch, tokens_sql
-from .aggregate import SketchSpec, build_partials, ensure_min_partitions, merge_partials
+from ..functions.text import _tokens, tokens_sql
+from .aggregate import SketchSpec, _map_side_combine, build_partials, merge_partials
 from .emerging import _cached_sketch, broadcast_sketch
 
 __all__ = ["misra_gries_summary", "frequent_tokens_exact", "build_mg",
@@ -81,39 +81,17 @@ def _exact_candidate_counts(
     df: DataFrame, text_col: str, mg_bc, lowercase: bool
 ) -> DataFrame:
     """Exact counts of tokens present in the broadcast MG state: per
-    batch Arrow value_counts filtered by summary membership, partial
-    dicts combined map-side — only candidate tokens ever shuffle."""
+    batch Arrow value_counts filtered by summary membership, combined
+    map-side — only candidate tokens ever shuffle."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def count(batch: pa.RecordBatch) -> pa.Table:
         mg: MisraGries = _cached_sketch(mg_bc)
-        members = pa.array(list(mg.counters), type=pa.string())
-        acc: dict[str, int] = {}
-        for batch in batches:
-            col = batch.column(0)
-            if lowercase:
-                col = pc.utf8_lower(col)
-            flat, _ = tokenize_batch(col)
-            if len(flat) == 0:
-                continue
-            vc = flat.value_counts()
-            uniq = vc.field("values")
-            cnts = vc.field("counts").to_numpy(zero_copy_only=False)
-            keep = pc.is_in(uniq, value_set=members).to_numpy(zero_copy_only=False)
-            if not keep.any():
-                continue
-            for t, c in zip(uniq.filter(pa.array(keep)).to_pylist(), cnts[keep]):
-                acc[t] = acc.get(t, 0) + int(c)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "token": pa.array(list(acc.keys()), pa.string()),
-                "cnt": pa.array(list(acc.values()), pa.int64()),
-            }
-        )
+        flat, _ = _tokens(batch.column(0), lowercase)
+        vc = flat.value_counts()
+        keep = pc.is_in(vc.field("values"), value_set=pa.array(list(mg.counters), pa.string()))
+        return pa.table({"token": vc.field("values"), "cnt": vc.field("counts")}).filter(keep)
 
-    partial = ensure_min_partitions(df.select(text_col)).mapInArrow(
-        run, "token string, cnt long"
-    )
-    return partial.groupBy("token").agg(F.sum("cnt").alias("cnt"))
+    return _map_side_combine(df.select(text_col), count, "token", {"cnt": "sum"})
 
 
 def frequent_tokens_exact(

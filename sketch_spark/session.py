@@ -9,7 +9,9 @@ DuckDB oracle compares timestamps as UTC-naive).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -38,6 +40,21 @@ def package_zip(dest_dir: str | None = None) -> str:
                 rel = os.path.join("sketch_spark", os.path.relpath(full, pkg_root))
                 zf.write(full, rel)
     return zpath
+
+
+def ship_package(sc) -> None:
+    """``addPyFile`` the package zip once per SparkContext.
+
+    Spark registers the file by name, so a second zip of a changed tree
+    under the same name would fail every later task; the zip therefore
+    ships once, from one temp dir that lives until the process exits.
+    """
+    if getattr(sc, "_sketch_spark_shipped", False):
+        return
+    dest = tempfile.mkdtemp(prefix="sketch_spark_zip_")
+    atexit.register(shutil.rmtree, dest, True)
+    sc.addPyFile(package_zip(dest))
+    sc._sketch_spark_shipped = True
 
 
 def get_spark(
@@ -81,5 +98,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addPyFile(package_zip())
+    ship_package(spark.sparkContext)
     return spark

@@ -1,12 +1,13 @@
 """Streaming emerging heavy hitters: the flagship query maintained
 continuously over a page stream.
 
-Shape (the streaming restatement of operators/emerging.py's two-pass
-batch plan): each micro-batch folds its CMCU partials into the
-persistent state table (same mergeable-state machinery as
-``streaming_sketch_query``), then re-evaluates the emerging predicate
-against the CURRENT accumulated test sketch and writes one HH snapshot
-per epoch.  Because the accumulated sketch dominates every prefix,
+Shape (the streaming restatement of operators/emerging.py's batch
+plan, sketch job then one candidate job): each micro-batch folds its
+CMCU partials into the persistent state table (same mergeable-state
+machinery as ``streaming_sketch_query``), then re-evaluates the
+emerging predicate against the CURRENT accumulated test sketch in one
+candidate job over every page seen so far and the control window,
+and writes one HH snapshot per epoch.  Because the accumulated sketch dominates every prefix,
 each snapshot's candidate set is a superset of a streaming upsert's —
 the same superset-correctness argument as the batch operator
 (SURVEY.md §7.2), now applied per epoch.

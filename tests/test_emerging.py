@@ -1,6 +1,8 @@
 """End-to-end emerging heavy hitters vs brute force (SURVEY.md §5.2 L3)
 plus the input_hint byte-identical text-extraction invariant."""
 
+import math
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -205,3 +207,105 @@ def test_bloom_semi_join(spark, sf01):
     n_approx = approx.count()
     assert n_approx >= len(a)
     assert n_approx <= len(a) * 1.01 + 50  # FPR-bounded superset
+
+
+# mixed-case Unicode vocabulary: lowercase=True folds the case variants
+_VOCAB = [
+    "Alpha", "ALPHA", "alpha", "École", "ÉCOLE", "Straße", "naïve", "NAÏVE",
+    "beta", "Gamma", "ΔΈΛΤΑ", "δέλτα", "über", "Über", "omega", "zeta",
+]
+
+
+def _zipf_rows(seed: int, n: int, hot: list[str]) -> list[str]:
+    """Zipf-drawn words from ``_VOCAB`` plus words of ``hot``, mixed
+    ASCII and no-break-space separators."""
+    rng = np.random.default_rng(seed)
+    words = _VOCAB + hot
+    rows = []
+    for _ in range(n):
+        idx = np.minimum(rng.zipf(1.6, int(rng.integers(3, 12))) - 1, len(words) - 1)
+        seps = rng.choice([" ", "\u00a0", "  "], len(idx))
+        rows.append("".join(words[i] + s for i, s in zip(idx, seps)).strip())
+    return rows
+
+
+def _gram_counts(rows: list[str], ngram: int, lowercase: bool):
+    from collections import Counter
+
+    c = Counter()
+    for t in rows:
+        toks = (t.lower() if lowercase else t).split()
+        c.update(" ".join(toks[i : i + ngram]) for i in range(len(toks) - ngram + 1))
+    return c
+
+
+@pytest.mark.parametrize("ngram", [1, 2])
+@pytest.mark.parametrize("mode", ["reference", "exact"])
+def test_one_pass_matches_brute_force(spark, mode, ngram):
+    """The one candidate job over both windows answers exactly what the
+    definitions say: in reference mode freq is the prebuilt sketch's
+    estimate of the gram's key (a narrow sketch, so estimates
+    overshoot), in exact mode the exact count, with the sketch prebuilt
+    or built by the query; lowercase folds Unicode case."""
+    import pyarrow as pa
+
+    from sketch_spark.functions.text import ngram_occurrences
+
+    test_rows = _zipf_rows(1, 400, ["rising", "Rising"])
+    ctrl_rows = _zipf_rows(2, 300, [])
+    thr, log2_width = (12, 4) if ngram == 1 else (6, 6)
+    growth = 1.5
+    geometry = {"depth": 2, "log2_width": log2_width, "seed": 7}
+    test_df = spark.createDataFrame([(t,) for t in test_rows], "text string")
+    ctrl_df = spark.createDataFrame([(t,) for t in ctrl_rows], "text string")
+    spec = SketchSpec("cmcu", "cmcu", "text", lowercase=True, ngram=ngram, params=geometry)
+    sketch = sketch_aggregate(test_df, [spec]).sketch("cmcu")
+
+    def run(prebuilt):
+        return emerging_heavy_hitters(
+            test_df, ctrl_df, "text", threshold=thr, growth=growth, mode=mode,
+            lowercase=True, ngram=ngram, prebuilt_sketch=prebuilt, **geometry,
+        ).toPandas()
+
+    tc = _gram_counts(test_rows, ngram, True)
+    cc = _gram_counts(ctrl_rows, ngram, True)
+    grams = sorted(tc)
+    keys, _ = ngram_occurrences(pa.array(grams), sketch.seed, ngram)
+    est = dict(zip(grams, sketch.estimate_hashed(keys).tolist()))
+    if mode == "reference":
+        expected = {
+            g: (est[g], tc[g], cc.get(g, 0))
+            for g in grams
+            if est[g] >= thr and math.floor(est[g] / growth) > cc.get(g, 0)
+        }
+        assert any(est[g] > tc[g] for g in expected)
+        results, cols = [run(sketch)], ["freq", "test_count", "control_count"]
+    else:
+        expected = {
+            g: (tc[g], cc.get(g, 0))
+            for g in grams
+            if tc[g] >= thr and tc[g] / growth > cc.get(g, 0)
+        }
+        # exact rows do not depend on which sketch pre-filtered them
+        results, cols = [run(sketch), run(None)], ["freq", "control_count"]
+    assert expected and any(cc.get(g, 0) > 0 for g in expected)
+    for result in results:
+        got = {t: tuple(v) for t, *v in result[["token", *cols]].itertuples(index=False)}
+        assert got == expected
+
+
+def test_control_only_token_passing_the_sketch_is_absent(spark):
+    """A control-window token whose key collides with a test heavy
+    hitter passes the sketch in the control window, but it has no
+    test occurrence, so it is no emerging token in either mode."""
+    a, b = "a" * 64 + "X", "a" * 64 + "Y"
+    assert hash_strings([a], seed=1)[0] == hash_strings([b], seed=1)[0]
+    test_df = spark.createDataFrame([(" ".join([a] * 5),)], "text string")
+    ctrl_df = spark.createDataFrame([(b,)], "text string")
+    for mode in ("reference", "exact"):
+        result = emerging_heavy_hitters(
+            test_df, ctrl_df, "text", threshold=3, growth=GROWTH, mode=mode,
+            log2_width=10,
+        ).toPandas()
+        assert list(result["token"]) == [a], mode
+        assert list(result["control_count"]) == [0], mode

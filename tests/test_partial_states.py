@@ -156,3 +156,13 @@ def test_resume_from_bucket_file_with_timing_column(spark, pages_dir, tmp_path):
     res = job.result(validate_lineage=True)
     assert res.sketch("hll").to_bytes() == whole.result().sketch("hll").to_bytes()
     assert res.metrics[("hll",)]["n_rows"] == df.count()
+
+
+def test_unsupported_group_column_type_raises_at_plan_time(spark):
+    """A group key type a partial row cannot carry fails when the plan
+    is built, before any task runs."""
+    df = spark.createDataFrame([(1.5, [1])], "x double, arr array<int>")
+    df = df.selectExpr("x", "arr", "CAST(x AS DECIMAL(10, 2)) AS dec")
+    for col in ("arr", "dec"):
+        with pytest.raises(TypeError, match="unsupported group column type"):
+            build_partials(df, [KLL], group_cols=[col])

@@ -226,3 +226,24 @@ def test_streaming_dedup_index_scan_partition_pruned(spark, tmp_path):
     keys = spark.read.parquet(os.path.join(root, "keys")).filter(F.col("epoch") < 1)
     plan = _plan(keys)
     assert "PartitionFilters" in plan and "epoch" in plan.split("PartitionFilters")[1][:80]
+
+
+def test_emerging_one_candidate_stage(spark, sf001):
+    """Emerging heavy hitters counts both windows in ONE python stage:
+    no second candidate job, no join of candidates with control counts,
+    and no estimate UDF over the candidate strings — in exact mode (the
+    contract query) and in reference mode alike."""
+    import __spark_entry__ as em
+    from sketch_spark.operators.emerging import emerging_heavy_hitters
+
+    docs = spark.read.parquet(os.path.join(sf001, "documents.parquet"))
+    ctrl = F.col("source").isin(["src15", "src16", "src17", "src18", "src19"])
+    reference = emerging_heavy_hitters(
+        docs.filter(~ctrl), docs.filter(ctrl), "text", threshold=100, growth=2.0,
+        mode="reference", depth=4, log2_width=14, seed=1,
+    )
+    for df in (em.q_emerging_hh(spark, sf001), reference):
+        plan = _plan(df)
+        assert plan.count("MapInArrow") == 1, plan
+        for marker in ("ArrowEvalPython", "BroadcastHashJoin", "SortMergeJoin"):
+            assert marker not in plan, marker

@@ -174,3 +174,45 @@ def test_keyed_salted_aggregation_matches_grouped(spark, pages_dir, pages_pdf):
 
     est = sketch_from_bytes(bytes(k[hot])).estimate()
     assert abs(est - exact) / exact < 3 * 1.04 / (2**6) + 0.02
+
+
+def test_map_side_combine_bound_keeps_sums(spark, monkeypatch):
+    """With a one-byte buffer bound every batch re-folds the partition's
+    buffer; string and int64 keys still sum (and max) to what the
+    unbounded fold and pandas give, int64 keys above 2^53 included."""
+    import pyarrow as pa
+
+    from sketch_spark.operators import aggregate
+
+    rng = np.random.default_rng(5)
+    n = 3000
+    keys = rng.integers(0, 40, n)
+    pdf = pd.DataFrame({
+        "s": [f"k{k}é" for k in keys],
+        "i": (keys + 2**53).astype(np.int64),
+        "v": rng.integers(0, 1000, n).astype(np.int64),
+    })
+    df = spark.createDataFrame(pdf).repartition(3)
+
+    def run(key: str, key_type: str) -> dict:
+        def per_batch(batch: pa.RecordBatch) -> pa.Table:
+            t = pa.Table.from_batches([batch])
+            return pa.table({key: t[key], "total": t["v"], "top": t["v"]})
+
+        aggs = {"total": "sum", "top": "max"}
+        out = aggregate._map_side_combine(df.select(key, "v"), per_batch, key, aggs, key_type)
+        return {r[key]: (r["total"], r["top"]) for r in out.collect()}
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
+    try:
+        for key, key_type in (("s", "string"), ("i", "long")):
+            g = pdf.groupby(key)["v"]
+            want = {k: (int(t), int(m)) for (k, t), m in zip(g.sum().items(), g.max())}
+            unbounded = run(key, key_type)
+            monkeypatch.setattr(aggregate, "_COMBINE_BYTES", 1)
+            bounded = run(key, key_type)
+            monkeypatch.undo()
+            assert bounded == unbounded == want, key
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
