@@ -71,6 +71,15 @@ class Sketch:
         output); sketches that aggregate their input skip that here."""
         self.update_hashed(keys, counts)
 
+    @classmethod
+    def update_hashed_segments(cls, sketches: list["Sketch"], keys: np.ndarray, offsets) -> None:
+        """``sketches[i].update_hashed`` with the keys of
+        ``offsets[i]:offsets[i + 1]``, for every i: one call per batch
+        for the per-key sketches of one spec.  Kinds that can hash a
+        whole batch at once override it."""
+        for sk, lo, hi in zip(sketches, offsets[:-1], offsets[1:]):
+            sk.update_hashed(keys[lo:hi])
+
     # --- shared machinery --------------------------------------------------
     def to_bytes(self) -> bytes:
         arrays = self._arrays()

@@ -5,6 +5,13 @@ the rank (leading-zero count + 1) of each hashed key's suffix bits;
 merge is element-wise ``max`` — an exact homomorphism, so merged state
 is identical regardless of partition order (tested).
 
+Wire format (HLL++'s sparse representation, Heule/Nunkesser/Hall, EDBT
+2013): ``to_bytes`` writes the non-zero registers as one sorted uint32
+array of ``register << 8 | rank`` pairs whenever that is no larger than
+the dense ``m``-byte array, so a host with 3 URLs ships ~130 bytes, not
+16.5 KB at p=14.  ``from_bytes`` reads both layouts, legacy dense blobs
+included; in memory the registers are always dense.
+
 Estimator: classic alpha_m * m^2 / sum(2^-M) with the small-range
 linear-counting correction; 64-bit hashing makes the large-range
 correction unnecessary at any realistic cardinality.  Relative standard
@@ -42,20 +49,47 @@ class HyperLogLog(Sketch):
         return {"p": self.p, "seed": self.seed}
 
     def _arrays(self) -> dict[str, np.ndarray]:
-        return {"registers": self.registers}
+        # a pair costs 4 bytes and a dense register 1, and the sparse
+        # header is never longer than the dense one
+        nz = np.flatnonzero(self.registers)
+        if 4 * len(nz) > self.m:
+            return {"registers": self.registers}
+        return {"pairs": (nz.astype(np.uint32) << np.uint32(8)) | self.registers[nz]}
+
+    def _set_array(self, name: str, arr: np.ndarray) -> None:
+        if name == "registers":
+            self.registers = arr
+            return
+        idx = arr >> np.uint32(8)
+        if len(idx) and int(idx.max()) >= self.m:
+            raise ValueError(f"hll: sparse register index past m={self.m}")
+        self.registers[idx] = (arr & np.uint32(0xFF)).astype(np.uint8)
 
     def hash_tokens(self, tokens) -> np.ndarray:
         return hash_strings(tokens, seed=self.seed)
 
-    def update_hashed(self, keys: np.ndarray, counts=None) -> None:
-        if len(keys) == 0:
-            return
+    def _bucket_rank(self, keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(register index, rank) of every key."""
         h = mix_u64(keys, self._hash_seed)
         bucket = (h >> np.uint64(64 - self.p)).astype(np.int64)
         suffix_bits = 64 - self.p
         suffix = h & np.uint64((1 << suffix_bits) - 1)
         rank = (suffix_bits - bitlen_u64(suffix) + 1).astype(np.uint8)
-        np.maximum.at(self.registers, bucket, rank)
+        return bucket, rank
+
+    def update_hashed(self, keys: np.ndarray, counts=None) -> None:
+        self.update_hashed_segments([self], keys, [0, len(keys)])
+
+    @classmethod
+    def update_hashed_segments(cls, sketches, keys, offsets) -> None:
+        """One hash and rank pass over the whole batch, then one
+        scatter-max per segment (the sketches share p and seed)."""
+        if len(keys) == 0:
+            return
+        bucket, rank = sketches[0]._bucket_rank(keys)
+        for sk, lo, hi in zip(sketches, offsets[:-1], offsets[1:]):
+            if hi > lo:
+                np.maximum.at(sk.registers, bucket[lo:hi], rank[lo:hi])
 
     def update_tokens(self, tokens, counts=None) -> None:
         self.update_hashed(self.hash_tokens(tokens))

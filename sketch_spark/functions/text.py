@@ -169,16 +169,30 @@ class GramCounts:
     def __init__(self, arr: pa.Array | pa.ChunkedArray, seed: int, lowercase: bool = False):
         flat, self._parents = _tokens(arr, lowercase)
         self._hashes = hash_strings(flat, seed=seed)
-        self._orders: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._rows = len(arr)
+        self._orders: dict[tuple, list[tuple[np.ndarray, np.ndarray]]] = {}
 
     def counts(self, ngram: int = 1) -> tuple[np.ndarray, np.ndarray]:
         """(distinct uint64 keys, int64 occurrence counts) of the order-``ngram`` grams."""
-        if ngram not in self._orders:
-            got = native.gram_counts(self._hashes, self._parents, ngram)
-            if got is None:
-                got = unique_with_counts(_gram_keys(self._hashes, self._parents, ngram))
-            self._orders[ngram] = got
-        return self._orders[ngram]
+        return self.segments(ngram, [0, self._rows])[0]
+
+    def segments(self, ngram: int, offsets) -> list[tuple[np.ndarray, np.ndarray]]:
+        """``counts(ngram)`` of each row range ``offsets[i]:offsets[i + 1]``
+        (grams never cross rows, so a range's grams are a slice of the
+        batch's tokens)."""
+        key = (ngram, np.asarray(offsets, np.int64).tobytes())
+        if key not in self._orders:
+            cuts = np.searchsorted(self._parents, offsets)
+            self._orders[key] = [
+                self._count(self._hashes[a:b], self._parents[a:b], ngram)
+                for a, b in zip(cuts[:-1], cuts[1:])
+            ]
+        return self._orders[key]
+
+    @staticmethod
+    def _count(h: np.ndarray, parents: np.ndarray, ngram: int) -> tuple[np.ndarray, np.ndarray]:
+        got = native.gram_counts(h, parents, ngram)
+        return unique_with_counts(_gram_keys(h, parents, ngram)) if got is None else got
 
 
 def token_hashes(

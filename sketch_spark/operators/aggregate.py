@@ -245,61 +245,60 @@ class SketchSpec:
         cache: dict | None = None,
     ) -> int:
         """Update ``sketch`` with one Arrow column batch; returns #values.
+        The one-segment case of :meth:`feed_segments`."""
+        return self.feed_segments([sketch], col, [0, len(col)], cache)[0]
 
-        ``cache`` (scoped to one batch by the caller) de-duplicates
-        tokenize+hash work across specs sharing (column, lowercase,
-        seed) — the reference's "all configs in one scan"
+    def feed_segments(
+        self,
+        sketches: list[Sketch],
+        col: pa.ChunkedArray | pa.Array,
+        offsets,
+        cache: dict | None = None,
+    ) -> list[int]:
+        """Update ``sketches[i]`` with rows ``offsets[i]:offsets[i + 1]``
+        of one Arrow column batch; returns #values per segment.
+
+        The column is tokenized, hashed or converted once for the whole
+        batch and each sketch is fed its slice of the result — the same
+        bytes as feeding each row range on its own, for a fixed cost
+        per batch instead of per segment (the keyed build's many small
+        groups).  ``cache`` (scoped to one batch by the caller)
+        de-duplicates tokenize+hash work across specs sharing (column,
+        lowercase, seed) — the reference's "all configs in one scan"
         (sketch.cpp:140-162) made literal: N sketches over the same
         text column tokenize it once.
         """
+        if isinstance(col, pa.ChunkedArray):
+            # a batch's column is one chunk: take it as is, since
+            # combining copies it (~6 ms per spec on a text batch)
+            col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+        offsets = np.asarray(offsets, dtype=np.int64)
+        spans = list(zip(sketches, offsets[:-1], offsets[1:]))
         if self.mode == "numeric":
-            v = col.to_numpy(zero_copy_only=False)
-            v = np.asarray(v, dtype=np.float64)
-            sketch.update_values(v)
-            return len(v)
+            v = np.asarray(col.to_numpy(zero_copy_only=False), dtype=np.float64)
+            for sk, lo, hi in spans:
+                sk.update_values(v[lo:hi])
+            return [int(hi - lo) for _, lo, hi in spans]
         if self.mode == "vector":
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            col = col.drop_null()  # null LISTS are skipped ...
-            if len(col) == 0:
-                return 0
-            vals = col.flatten()  # ... valid slots only, rebased to 0
-            if vals.null_count:
-                # a null ELEMENT inside a vector would flow through as
-                # NaN and poison/crash the SVD compaction — reject loud
-                raise ValueError("vector mode: null element inside a vector")
-            widths = np.diff(col.offsets.to_numpy(zero_copy_only=False))
-            if len(widths) and (widths != widths[0]).any():
-                raise ValueError("vector mode needs fixed-length vectors")
-            flat = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.float64)
-            mat = flat.reshape(len(col), -1)
-            sketch.update_values(mat)
-            return len(mat)
+            return self._feed_vectors(spans, col)
         if self.mode == "tokens_str":
-            key = ("tokstr", self.column, self.lowercase)
-            if cache is not None and key in cache:
-                uniq, cnts = cache[key]
-            else:
-                c = pc.utf8_lower(col) if self.lowercase else col
-                flat, _ = tokenize_batch(c)
-                if len(flat) == 0:
-                    uniq, cnts = [], np.empty(0, dtype=np.int64)
-                else:
-                    vc = flat.value_counts()
-                    uniq = vc.field("values").to_pylist()
-                    cnts = vc.field("counts").to_numpy(zero_copy_only=False).astype(np.int64)
+            key = ("tokstr", self.column, self.lowercase, offsets.tobytes())
+            segs = cache.get(key) if cache is not None else None
+            if segs is None:
+                flat, parents = tokenize_batch(pc.utf8_lower(col) if self.lowercase else col)
+                cuts = np.searchsorted(parents, offsets)
+                segs = [_token_counts(flat.slice(a, b - a)) for a, b in zip(cuts[:-1], cuts[1:])]
                 if cache is not None:
-                    cache[key] = (uniq, cnts)
-            if len(uniq):
-                sketch.update_tokens(uniq, cnts)
-            return int(cnts.sum()) if len(uniq) else 0
+                    cache[key] = segs
+            for (sk, _, _), (uniq, cnts) in zip(spans, segs):
+                if len(uniq):
+                    sk.update_tokens(uniq, cnts)
+            return [int(cnts.sum()) for _, cnts in segs]
         if self.mode == "value":
-            if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
-                keys = hash_strings(col, seed=self._seed())
-            else:
-                keys = hash_u64(col.to_numpy(zero_copy_only=False), seed=self._seed())
-            sketch.update_hashed(keys)
-            return len(keys)
+            if sketches:
+                keys = _value_keys(col, self._seed())
+                type(sketches[0]).update_hashed_segments(sketches, keys, offsets)
+            return [int(hi - lo) for _, lo, hi in spans]
         # one tokenization per (column, lowercase, seed) and batch: every
         # n-gram order of every spec derives its keys and counts from it
         key = ("tokens", self.column, self.lowercase, self._seed())
@@ -308,11 +307,60 @@ class SketchSpec:
             grams = GramCounts(col, seed=self._seed(), lowercase=self.lowercase)
             if cache is not None:
                 cache[key] = grams
-        uk, c = grams.counts(self.ngram)
-        if len(uk) == 0:
-            return 0
-        sketch._update_unique(uk, c)
-        return int(c.sum())
+        out = []
+        for (sk, _, _), (uk, c) in zip(spans, grams.segments(self.ngram, offsets)):
+            if len(uk):
+                sk._update_unique(uk, c)
+            out.append(int(c.sum()))
+        return out
+
+    @staticmethod
+    def _feed_vectors(spans: list, col: pa.Array) -> list[int]:
+        """Vector mode: null lists are skipped; a null element or ragged
+        lengths raise (a NaN would poison the SVD compaction)."""
+        valid = col.drop_null()
+        vals = valid.flatten()  # valid slots only, rebased to 0
+        if vals.null_count:
+            raise ValueError("vector mode: null element inside a vector")
+        widths = np.diff(valid.offsets.to_numpy(zero_copy_only=False))
+        if len(widths) and (widths != widths[0]).any():
+            raise ValueError("vector mode needs fixed-length vectors")
+        flat = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.float64)
+        mat = flat.reshape(len(valid), -1) if len(valid) else flat
+        # segment bounds in valid rows
+        seen = np.concatenate([[0], np.cumsum(col.is_valid().to_numpy(zero_copy_only=False))])
+        out = []
+        for sk, lo, hi in spans:
+            a, b = seen[lo], seen[hi]
+            if b > a:
+                sk.update_values(mat[a:b])
+            out.append(int(b - a))
+        return out
+
+
+def _token_counts(flat: pa.Array) -> tuple[list, np.ndarray]:
+    """(distinct token strings, int64 counts) in first-seen order."""
+    if len(flat) == 0:
+        return [], np.empty(0, dtype=np.int64)
+    vc = flat.value_counts()
+    cnts = vc.field("counts").to_numpy(zero_copy_only=False).astype(np.int64)
+    return vc.field("values").to_pylist(), cnts
+
+
+def _value_keys(col: pa.Array, seed: int) -> np.ndarray:
+    """One uint64 key per row of a value-mode column.  Strings hash
+    with nulls as ''; numbers hash by their Arrow type, so an integer
+    keeps its key whether or not its batch holds a null (a null reads
+    as the NaN key)."""
+    if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+        return hash_strings(col, seed=seed)
+    if col.null_count == 0 or pa.types.is_floating(col.type):
+        return hash_u64(col.to_numpy(zero_copy_only=False), seed=seed)
+    keys = np.full(len(col), hash_u64(np.array([np.nan]), seed=seed)[0], dtype=np.uint64)
+    keys[col.is_valid().to_numpy(zero_copy_only=False)] = hash_u64(
+        col.drop_null().to_numpy(zero_copy_only=False), seed=seed
+    )
+    return keys
 
 
 _PARTIAL_FIELDS = [
@@ -353,13 +401,15 @@ def _group_key(vals: Iterable) -> tuple:
     return tuple(_NAN if isinstance(v, float) and v != v else v for v in vals)
 
 
-def _group_slices(tbl: pa.Table, group_cols: list[str]) -> list[tuple[tuple, pa.Table]]:
-    """(key, rows) per distinct key of ``tbl``, grouped once: Arrow
-    hash-groups the row indices, one ``take`` lays every group out
-    contiguously, and each group is a zero-copy slice of it.  Null keys
-    form one real group and NaN stays apart from null (SQL groupBy
-    semantics); rows keep their input order inside a group; int64 keys
-    above 2^53 stay exact.
+def _group_slices(
+    tbl: pa.Table, group_cols: list[str]
+) -> tuple[list[tuple], pa.Table, np.ndarray]:
+    """(keys, taken, offsets): ``tbl``'s rows grouped once — Arrow
+    hash-groups the row indices and one ``take`` lays every group out
+    contiguously, group i being rows ``offsets[i]:offsets[i + 1]`` of
+    ``taken``.  Null keys form one real group and NaN stays apart from
+    null (SQL groupBy semantics); rows keep their input order inside a
+    group; int64 keys above 2^53 stay exact.
 
     Arrow groups per-column dictionary codes, not the key columns: on
     pyarrow 16 a multi-column ``group_by`` whose keys hold a null splits
@@ -367,7 +417,7 @@ def _group_slices(tbl: pa.Table, group_cols: list[str]) -> list[tuple[tuple, pa.
     codes are null-free int32; the key values are read back from each
     group's first row."""
     if tbl.num_rows == 0:
-        return []
+        return [], tbl, np.zeros(1, dtype=np.int64)
     codes = [
         pc.dictionary_encode(tbl.column(c), null_encoding="encode").combine_chunks().indices
         for c in group_cols
@@ -381,13 +431,10 @@ def _group_slices(tbl: pa.Table, group_cols: list[str]) -> list[tuple[tuple, pa.
         .combine_chunks()
     )
     taken = tbl.take(lists.values)
-    offsets = lists.offsets.to_numpy()
+    offsets = lists.offsets.to_numpy().astype(np.int64)
     firsts = taken.select(group_cols).take(pa.array(offsets[:-1]))
-    keys = zip(*(firsts.column(c).to_pylist() for c in group_cols))
-    return [
-        (_group_key(k), taken.slice(lo, hi - lo))
-        for k, lo, hi in zip(keys, offsets[:-1], offsets[1:])
-    ]
+    keys = [_group_key(k) for k in zip(*(firsts.column(c).to_pylist() for c in group_cols))]
+    return keys, taken, offsets
 
 
 def _merge_state_rows(
@@ -462,14 +509,19 @@ def build_partials(
             # group keys keep the INPUT Arrow types (see _fold_states)
             key_fields = [batch.schema.field(c) for c in group_cols]
             tbl = pa.Table.from_batches([batch])
-            groups = [((), tbl)] if not group_cols else _group_slices(tbl, group_cols)
-            for gkey, gtbl in groups:
-                sk = bucket(gkey)
-                counts[gkey]["rows"] += gtbl.num_rows
-                batch_cache: dict = {}
-                for spec in specs:
-                    nv = spec.feed(sk[spec.name], gtbl.column(spec.column), cache=batch_cache)
-                    counts[gkey][spec.name] += nv
+            if group_cols:
+                gkeys, tbl, offsets = _group_slices(tbl, group_cols)
+            else:  # the global pass is one segment
+                gkeys, offsets = [()], np.array([0, tbl.num_rows])
+            buckets = [bucket(k) for k in gkeys]
+            for k, n in zip(gkeys, np.diff(offsets)):
+                counts[k]["rows"] += int(n)
+            batch_cache: dict = {}
+            for spec in specs:
+                col = tbl.column(spec.column)
+                nvs = spec.feed_segments([b[spec.name] for b in buckets], col, offsets, batch_cache)
+                for k, nv in zip(gkeys, nvs):
+                    counts[k][spec.name] += nv
 
         if not states:
             return
@@ -626,7 +678,8 @@ def keyed_sketch_aggregate(
     duplicate rows share a salt; pass ``row_id_col`` (a stable unique
     id column, e.g. doc_id/url) to fan duplicate-row skew out too,
     deterministically — then ONE vectorized ``build_partials`` pass per
-    partition (each batch grouped once by Arrow, shared tokenize; no
+    partition (each batch grouped once by Arrow, each spec's column
+    hashed or tokenized once per batch and fed per group slice; no
     per-group pandas calls: an applyInPandas stage here would pay ~1 ms
     x (keys x S) groups, the same trap the LSH pair stage hit), then
     the keyed tree merge.  Per-task state memory is (distinct keys in
@@ -640,14 +693,17 @@ def keyed_sketch_aggregate(
     whose exact bytes depend on the fan-out.
 
     Memory math (size ``partitions`` for it): a task holds ~
-    total_keys x salt / partitions states concurrently, each
-    state_size bytes — for 10^6 hosts x HLL p=14 (~16 KB) budget to
-    ~200 MB/task means partitions ~ total_keys x salt x state_size /
-    200MB (~600 for that example).  The default
-    max(defaultParallelism, spark.sql.shuffle.partitions, salt) is
-    right when shuffle.partitions is sized to the cluster, which at
-    real scale it must be anyway; pass ``partitions`` explicitly for
-    wide sketches over very many keys.
+    total_keys x salt / partitions states concurrently.  In memory an
+    HLL is always dense (2^p bytes: 16 KB at p=14), so for 10^6 hosts
+    x HLL p=14 a ~200 MB/task budget means partitions ~ total_keys x
+    salt x 16 KB / 200MB (~600 for that example).  On the wire (the
+    partial rows, the shuffle, the fold's input) an HLL state grows
+    with the registers it has set: ~130 bytes + 4 per set register,
+    capped by the dense 16.5 KB — a host with 3 URLs ships ~140 bytes.
+    The default max(defaultParallelism, spark.sql.shuffle.partitions,
+    salt) is right when shuffle.partitions is sized to the cluster,
+    which at real scale it must be anyway; pass ``partitions``
+    explicitly for wide sketches over very many keys.
 
     Returns a DataFrame (key_cols..., spec, state, n_rows, n_values) —
     one row per (key, spec).
@@ -669,7 +725,7 @@ def state_estimate_col():
     estimate (HLL/Bloom cardinality, CM/CMCU total-aware sketches
     return their ``estimate()``), so per-key estimates over 10^6+ keys
     are extracted EXECUTOR-side from the merged state rows — the driver
-    never collects states (the 11 MB/s driver-serde trap, BENCH.md).
+    never collects or decodes a state per key.
     Cost is per STATE row (key-scale), never per data row.
     """
 

@@ -90,6 +90,94 @@ def test_hll_roundtrip():
     assert back.estimate() == h.estimate()
 
 
+def _hll_with(p: int, n_set: int, seed: int) -> HyperLogLog:
+    """An HLL with exactly ``n_set`` non-zero registers, ranks 1..60."""
+    h = HyperLogLog(p=p, seed=1)
+    rng = np.random.default_rng(seed)
+    regs = rng.choice(h.m, size=n_set, replace=False)
+    h.registers[regs] = rng.integers(1, 61, size=n_set, dtype=np.uint8)
+    return h
+
+
+def _dense_blob(h: HyperLogLog) -> bytes:
+    """The dense layout every HLL state had before the sparse one."""
+    import json
+    import struct
+
+    header = json.dumps(
+        {
+            "kind": "hll",
+            "params": {"p": h.p, "seed": h.seed},
+            "arrays": [{"name": "registers", "dtype": "uint8", "shape": [h.m]}],
+            "extra": {},
+        }
+    ).encode()
+    return b"SKS1" + struct.pack("<I", len(header)) + header + h.registers.tobytes()
+
+
+@st.composite
+def _hll_counts(draw):
+    """p in 4..18 and a register count: empty, one, or next to the
+    sparse/dense crossover at m/4, or anywhere."""
+    p = draw(st.integers(4, 18))
+    m = 1 << p
+    n = draw(
+        st.one_of(
+            st.sampled_from([0, 1, m // 4 - 1, m // 4, m // 4 + 1, m]),
+            st.integers(0, m),
+        )
+    )
+    return p, n, draw(st.integers(0, 2**32 - 1))
+
+
+@settings(max_examples=60, deadline=None)
+@given(a=_hll_counts(), b_frac=st.floats(0, 1))
+def test_hll_wire_format_sparse_and_dense(a, b_frac):
+    p, n, seed = a
+    h = _hll_with(p, n, seed)
+    blob = h.to_bytes()
+    back = HyperLogLog.from_bytes(blob)
+    assert (back.registers == h.registers).all()
+    assert back.estimate() == h.estimate()
+    dense = _dense_blob(h)
+    assert len(blob) <= len(dense)
+    if 4 * n <= h.m:
+        assert b'"pairs"' in blob
+    # the legacy dense layout still decodes
+    assert (HyperLogLog.from_bytes(dense).registers == h.registers).all()
+    # sparse (+) dense merges equal the dense merge, in either order
+    other = _hll_with(p, int(b_frac * h.m), seed + 1)
+    want = np.maximum(h.registers, other.registers)
+    for x, y in ((blob, _dense_blob(other)), (dense, other.to_bytes())):
+        assert (HyperLogLog.from_bytes(x).merge(HyperLogLog.from_bytes(y)).registers == want).all()
+        assert (HyperLogLog.from_bytes(y).merge(HyperLogLog.from_bytes(x)).registers == want).all()
+    merged = HyperLogLog.from_bytes(blob).merge(HyperLogLog.from_bytes(other.to_bytes()))
+    assert (HyperLogLog.from_bytes(merged.to_bytes()).registers == want).all()
+
+
+def test_hll_legacy_blob_merges_with_updates():
+    """A hand-built dense ``registers`` blob decodes, merges and keeps
+    being updated like a fresh sketch."""
+    h = HyperLogLog(p=12, seed=3)
+    h.update_tokens([f"a{i}" for i in range(40)])
+    legacy = HyperLogLog.from_bytes(_dense_blob(h))
+    legacy.update_tokens([f"b{i}" for i in range(40)])
+    h.update_tokens([f"b{i}" for i in range(40)])
+    assert (legacy.registers == h.registers).all()
+    assert legacy.to_bytes() == h.to_bytes()
+    assert len(h.to_bytes()) < 1000
+
+
+def test_hll_sparse_blob_with_bad_index_raises():
+    h = HyperLogLog(p=4)
+    h.registers[3] = 2
+    blob = h.to_bytes()
+    assert blob.endswith(np.array([3 << 8 | 2], np.uint32).tobytes())
+    bad = blob[:-4] + np.array([16 << 8 | 2], np.uint32).tobytes()
+    with pytest.raises(ValueError):
+        HyperLogLog.from_bytes(bad)
+
+
 # --------------------------------------------------------------------------
 # Bloom
 # --------------------------------------------------------------------------

@@ -14,6 +14,16 @@ _ALPHABET = (
 )
 
 
+def test_tokenize_batch_null_rows_keep_parent_alignment():
+    from sketch_spark.functions.text import tokenize_batch
+
+    flat, parents = tokenize_batch(pa.array(["a b", None, "c d"]))
+    assert flat.to_pylist() == ["a", "b", "c", "d"]
+    # parents refer to ORIGINAL row positions: the null row yields zero
+    # tokens, it does not shift later rows' attribution
+    assert parents.tolist() == [0, 0, 2, 2]
+
+
 @settings(max_examples=60, deadline=None)
 @given(st.lists(st.text(alphabet=_ALPHABET, max_size=24), max_size=8))
 def test_tokenize_batch_matches_python_split(rows):
