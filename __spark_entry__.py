@@ -1656,16 +1656,15 @@ def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup / similarity surface
 # ---------------------------------------------------------------------------
 def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """store_shingles=False IS the 100-TB plan (VERDICT r2 #6): the
-    driver-gated query runs the scale path — signatures carry no
-    shingle arrays and verification re-reads text for candidates only —
-    and still hash-matches the exact all-pairs Jaccard oracle."""
+    """MinHash-LSH near-dup pairs: signatures carry no shingle arrays
+    and verification re-reads text for the candidates only — and the
+    pairs still hash-match the exact all-pairs Jaccard oracle."""
     from sketch_spark.operators.dedup import minhash_near_duplicates
 
     docs = _read(spark, sf_dir, "documents")
     return minhash_near_duplicates(
         docs, "doc_id", "text", num_perm=64, bands=16, shingle_k=3, threshold=0.4,
-        seed=1, store_shingles=False,
+        seed=1,
     )
 
 
@@ -1774,7 +1773,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     return leakage_safe_split(
         docs, {"train": 0.9, "val": 0.05, "test": 0.05},
-        threshold=0.4, store_shingles=False,
+        threshold=0.4,
     ).select("doc_id", "cluster", "split")
 
 
@@ -1919,7 +1918,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned = clean_corpus(docs).localCheckpoint(eager=True)
     surv = dedup_corpus(
         cleaned, "doc_id", "text", threshold=0.4, num_perm=64, bands=16,
-        shingle_k=3, seed=1, store_shingles=False,
+        shingle_k=3, seed=1,
     )
     # read twice (LM fit + manifest join): checkpoint per CLAUDE.md
     surv = surv.select("doc_id", "lang", "text").localCheckpoint(eager=True)
@@ -2061,27 +2060,25 @@ def q_passage_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dup_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr-style duplicate-span report: maximal token spans
     covered by 10-grams occurring >= 2x corpus-wide (Lee et al. 2022's
-    'deduplicating training data' pass at n-gram granularity).  Runs
-    the Arrow corpus-scale path (rolling gram hashes from the
-    dictionary-encoded token base — no gram strings, unique-hash-only
-    exchange, broadcast-membership second pass; 12x the Catalyst form
-    at 500k organic docs, BENCH.md); the DuckDB oracle groups by gram
-    STRING, so the hash-green row also certifies the scale path's
-    equivalence."""
+    'deduplicating training data' pass at n-gram granularity).  Gram
+    hashes roll over per-occurrence token hashes — no gram strings,
+    unique-hash-only exchange, broadcast-membership second pass; the
+    DuckDB oracle groups by gram STRING, so the hash-green row also
+    certifies the hashed path's equivalence."""
     from sketch_spark.operators.dedup import duplicate_ngram_spans
 
     docs = _read(spark, sf_dir, "documents")
-    return duplicate_ngram_spans(docs, n=10, min_count=2, key="arrow")
+    return duplicate_ngram_spans(docs, n=10, min_count=2)
 
 
 def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus with every duplicated 10-gram span cut out: (doc_id,
     clean_text, n_tokens, n_removed), clean text byte-checked against
-    the DuckDB reconstruction; spans come from the Arrow scale path."""
+    the DuckDB reconstruction."""
     from sketch_spark.operators.dedup import remove_duplicate_spans
 
     docs = _read(spark, sf_dir, "documents")
-    return remove_duplicate_spans(docs, n=10, min_count=2, key="arrow")
+    return remove_duplicate_spans(docs, n=10, min_count=2)
 
 
 def q_fd_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2705,7 +2702,7 @@ def q_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     out = dedup_corpus(
         docs, "doc_id", "text", threshold=0.4, num_perm=64, bands=16,
-        shingle_k=3, seed=1, store_shingles=False,
+        shingle_k=3, seed=1,
     )
     return out.select("doc_id", "lang")
 

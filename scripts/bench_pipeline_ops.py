@@ -89,17 +89,17 @@ def main() -> None:
     )
 
     timed(
-        "dup_span_report_n10_arrow",
-        lambda: duplicate_ngram_spans(docs, n=10, min_count=2, key="arrow").count(),
+        "dup_span_report_n10",
+        lambda: duplicate_ngram_spans(docs, n=10, min_count=2).count(),
         args.rows,
     )
     # aggregate n_removed so the optimizer cannot eliminate the span
     # subtree under a bare count (left join with unique keys preserves
     # row count, so .count() alone measures nothing)
     timed(
-        "dup_span_removal_n10_arrow",
+        "dup_span_removal_n10",
         lambda: int(
-            remove_duplicate_spans(docs, n=10, min_count=2, key="arrow")
+            remove_duplicate_spans(docs, n=10, min_count=2)
             .agg(F.sum("n_removed").alias("s"))
             .collect()[0]["s"]
         ),

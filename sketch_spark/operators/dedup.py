@@ -45,7 +45,6 @@ __all__ = [
     "read_minhash_index",
     "incremental_near_duplicates",
     "near_duplicates_against_keys",
-    "verify_jaccard_pairs",
     "verify_jaccard_pairs_from_text",
     "minhash_near_duplicates",
     "dedup_corpus",
@@ -143,23 +142,16 @@ def minhash_signatures(
     num_perm: int = 64,
     shingle_k: int = 3,
     seed: int = 1,
-    keep_shingles: bool = True,
 ) -> DataFrame:
-    """Per-document MinHash signature over word k-shingles.
+    """(id, sig): per-document MinHash signature over word k-shingles.
 
     One Arrow pass; permutations are the standard (a*x+b mod p) family
     applied to the 64-bit shingle hashes, min-reduced per doc — all
-    numpy, no per-row Python.  ``keep_shingles`` additionally emits the
-    distinct shingle hashes (for exact Jaccard verification of LSH
-    candidates; drop it at scale when verification joins re-read text).
+    numpy, no per-row Python.
     """
     a = derive_seeds(seed, "mh-a", num_perm) | np.uint64(1)
     b = derive_seeds(seed, "mh-b", num_perm)
     SENTINEL = np.int64(np.iinfo(np.int64).max)
-
-    out_schema = f"{id_col} long, sig array<long>" + (
-        ", shingles array<long>" if keep_shingles else ""
-    )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -179,36 +171,20 @@ def minhash_signatures(
                     col = np.minimum.reduceat(v, safe_starts)
                     col[empty_doc] = SENTINEL
                     sigs[:, j] = col
-            cols = {
-                id_col: ids,
-                "sig": pa.ListArray.from_arrays(
-                    np.arange(n_docs + 1, dtype=np.int32) * num_perm,
-                    pa.array(sigs.ravel(), type=pa.int64()),
-                ),
-            }
-            if keep_shingles:
-                # distinct shingles per doc: lexsort + adjacent dedup
-                parents = np.repeat(
-                    np.arange(n_docs, dtype=np.int64), offsets[1:] - starts
-                )
-                order = np.lexsort((sh, parents))
-                ps, ss = parents[order], sh[order]
-                keep = np.ones(len(ss), dtype=bool)
-                if len(ss) > 1:
-                    keep[1:] = (ps[1:] != ps[:-1]) | (ss[1:] != ss[:-1])
-                ps, ss = ps[keep], ss[keep]
-                u_counts = np.bincount(ps, minlength=n_docs)
-                u_offsets = np.concatenate([[0], np.cumsum(u_counts)]).astype(np.int32)
-                cols["shingles"] = pa.ListArray.from_arrays(
-                    u_offsets,
-                    pa.array((ss >> np.uint64(1)).astype(np.int64), type=pa.int64()),
-                )
-            yield pa.RecordBatch.from_pydict(cols)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    id_col: ids,
+                    "sig": pa.ListArray.from_arrays(
+                        np.arange(n_docs + 1, dtype=np.int32) * num_perm,
+                        pa.array(sigs.ravel(), type=pa.int64()),
+                    ),
+                }
+            )
 
     from .aggregate import ensure_min_partitions
 
     return ensure_min_partitions(df.select(id_col, text_col)).mapInArrow(
-        run, out_schema
+        run, f"{id_col} long, sig array<long>"
     )
 
 
@@ -319,30 +295,6 @@ def lsh_candidate_pairs(
     )
 
 
-def verify_jaccard_pairs(
-    pairs: DataFrame,
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard over the stored distinct-shingle sets for each
-    candidate pair; keeps pairs with J >= threshold.  Shingle arrays are
-    only joined for candidates (bucket-mates), so the join is tiny
-    relative to the corpus."""
-    sh = sig_df.select(F.col(id_col), "shingles")
-    j = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        j.withColumn("jaccard", F.round(inter / F.greatest(union, F.lit(1)), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def verify_jaccard_pairs_from_text(
     pairs: DataFrame,
     df: DataFrame,
@@ -351,17 +303,15 @@ def verify_jaccard_pairs_from_text(
     threshold: float = 0.5,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """Exact Jaccard verification that RE-READS text for just the
-    candidate docs instead of carrying stored shingle arrays through
-    the pipeline — the scale path (store_shingles=False): shingle
-    serde volume drops ~20x and only candidate-touched rows ever
-    re-tokenize (a left-semi join prunes the text scan).  ``pairs``
-    rows must be distinct (both callers emit groupBy-deduped pairs):
-    the single-join verify re-groups by (id_a, id_b).  Shingles are
-    the space-joined word k-grams (Catalyst), so the Jaccard values
-    match the hashed-shingle path's up to 63-bit shingle-hash
-    collisions (the stored path hashes shingles to 63 bits before
-    set ops; this text path is the more exact of the two)."""
+    """(id_a, id_b, jaccard): exact Jaccard verification of candidate
+    pairs, J >= ``threshold``.  Text is RE-READ for just the candidate
+    docs rather than carried as shingle arrays through the pipeline:
+    only candidate-touched rows re-tokenize (a left-semi join prunes
+    the text scan).  ``pairs`` rows must be distinct (both callers emit
+    groupBy-deduped pairs): the single-join verify re-groups by
+    (id_a, id_b).  Shingles are the space-joined word k-grams
+    (Catalyst), so the values are exact set Jaccard over gram strings,
+    free of hash collisions."""
     # the pair set is referenced three times below (id_a ids, id_b ids,
     # and the verify join) — materialize it once or each reference
     # recomputes the entire upstream LSH candidate DAG (measured 13x on
@@ -434,37 +384,29 @@ def minhash_near_duplicates(
     shingle_k: int = 3,
     threshold: float = 0.5,
     seed: int = 1,
-    store_shingles: bool = True,
 ) -> DataFrame:
     """End-to-end near-dup pairs: minhash -> LSH buckets (with
     signature-estimate pre-filter at threshold - 0.15 slack) -> exact
-    Jaccard verify.  Output: (id_a, id_b, jaccard), id_a < id_b.
+    Jaccard verify over the candidates' re-read text
+    (``verify_jaccard_pairs_from_text``).  Output: (id_a, id_b,
+    jaccard), id_a < id_b.
 
     ``bands="auto"`` picks the band count from (threshold, num_perm)
-    via the S-curve tuner (``operators.tuning.choose_lsh_params``).
-
-    ``store_shingles=False`` is the 100TB path: signatures carry no
-    shingle arrays (the dominant serde volume) and verification
-    re-reads text for just the candidate docs
-    (``verify_jaccard_pairs_from_text``) — identical output, tested."""
+    via the S-curve tuner (``operators.tuning.choose_lsh_params``)."""
     if bands == "auto":
         from .tuning import choose_lsh_params
 
         bands, _ = choose_lsh_params(threshold, num_perm)
+    # materialize once: the candidate plan reads the signature table
+    # from parallel stages (band keys + both signature joins), which
+    # otherwise each recompute the Arrow pass (measured 2x+ end-to-end
+    # at 100k docs); a local checkpoint leaves no cached table behind
     sigs = minhash_signatures(
-        df, id_col, text_col, num_perm, shingle_k, seed, keep_shingles=store_shingles
-    )
-    # persist AND materialize: the downstream plan references the
-    # signature table five times from parallel stages, and an
-    # unmaterialized cache lets those stages race and each recompute
-    # the expensive Arrow pass (measured 2x+ end-to-end at 100k docs)
-    sigs = sigs.persist()
-    sigs.count()
+        df, id_col, text_col, num_perm, shingle_k, seed
+    ).localCheckpoint(eager=True)
     pairs = lsh_candidate_pairs(
         sigs, id_col, bands, est_threshold=max(0.0, threshold - 0.15)
     )
-    if store_shingles:
-        return verify_jaccard_pairs(pairs, sigs, id_col, threshold)
     return verify_jaccard_pairs_from_text(
         pairs, df, id_col, text_col, threshold, shingle_k
     )
@@ -480,7 +422,6 @@ def dedup_corpus(
     shingle_k: int = 3,
     seed: int = 1,
     pairs: DataFrame | None = None,
-    store_shingles: bool = True,
 ) -> DataFrame:
     """The end-to-end training-data dedup step: drop exact and near
     duplicates, keeping one representative (smallest id) per duplicate
@@ -497,8 +438,7 @@ def dedup_corpus(
     """
     if pairs is None:
         pairs = minhash_near_duplicates(
-            df, id_col, text_col, num_perm, bands, shingle_k, threshold, seed,
-            store_shingles=store_shingles,
+            df, id_col, text_col, num_perm, bands, shingle_k, threshold, seed
         )
     pairs = pairs.select("id_a", "id_b")
     labels = propagate_min_labels(pairs)
@@ -791,10 +731,11 @@ def simhash_near_duplicates(
     the flagged bucket cap.  Output: (id_a, id_b, hamming, capped).
     """
     # the fingerprint table feeds candidate generation AND both
-    # verify joins — persist AND materialize so parallel stages don't
-    # race an empty cache and recompute the Arrow pass
-    sim = simhash(df, id_col, text_col, seed, drop_top_df, df_sample_fraction).persist()
-    sim.count()
+    # verify joins — materialize it once so parallel stages don't each
+    # recompute the Arrow pass (a local checkpoint caches nothing)
+    sim = simhash(
+        df, id_col, text_col, seed, drop_top_df, df_sample_fraction
+    ).localCheckpoint(eager=True)
     pairs = simhash_candidate_pairs(sim, id_col, max_bucket)
     a = sim.select(
         F.col(id_col).alias("id_a"),
@@ -916,13 +857,17 @@ def passage_duplicates_sql(
 # ---------------------------------------------------------------------------
 # duplicate n-gram SPAN removal (ExactSubstr-style, Lee et al. 2022)
 # ---------------------------------------------------------------------------
+# dup-set size (8-byte hashes: 128 MB) up to which span pass 2 probes a
+# sorted broadcast; a larger dup set goes through a shuffle semi join
+_SPAN_BROADCAST_CAP = 16_000_000
+
+
 def duplicate_ngram_spans(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 10,
     min_count: int = 2,
-    key: str = "hash",
 ) -> DataFrame:
     """(doc_id, span_start, span_end, span_tokens): maximal token spans
     covered by word ``n``-grams that occur >= ``min_count`` times in the
@@ -938,48 +883,86 @@ def duplicate_ngram_spans(
     positions: a new span starts when pos > prev_pos + n).  Positions
     are 0-based over whitespace tokens.
 
-    Three key modes (identical output up to 64-bit hash collisions —
-    equivalence pytest-pinned):
-      "gram"  — pure Catalyst, gram STRINGS as keys; the oracle form.
-      "hash"  — pure Catalyst, xxhash64 keys (8-byte shuffle rows).
-      "arrow" — the corpus-scale path (default for big runs; measured
-        960 s -> 75 s at 500k organic docs / 550M grams, BENCH.md):
-        rolling n-gram hashes from the dictionary-encoded token base
-        (no gram strings EVER materialize), a unique-hash-only
-        exchange for the duplicated set, then a SECOND streaming pass
-        that re-derives positions and emits only the hits — against a
-        sorted broadcast of the dup set when it fits
-        (``broadcast_cap``), else a shuffle semi join.  The occurrence
-        stream never shuffles in broadcast mode.
-
-    Pure-Catalyst plan shape (gram/hash modes):
-      1. posexplode of the gram array: token-scale (doc, pos, key).
-      2. dup set via groupBy count: partial agg below the exchange, so
-         the shuffle carries each partition's UNIQUE grams.
-      3. hits = occurrences semi-joined against the dup set.
-      4. island merge: one window over (doc, pos) on HITS only.
+    Plan (960 s -> 75 s against a posexplode-of-gram-strings form at
+    500k organic docs / 550M grams, BENCH.md):
+      1. Every token occurrence is hashed once (``hash_strings``) and
+         the n-gram hashes roll over those (``_roll_ngrams``): no gram
+         string ever materializes.  Pass 1 counts gram hashes through
+         ``_map_side_combine``, so the exchange carries each
+         partition's unique 8-byte hashes with partial counts — never
+         the occurrence stream.
+      2. Pass 2 re-derives (row, position) per gram from a fresh scan
+         and emits ONLY the hits: one MapInArrow against a sorted
+         broadcast of the dup set when it holds <=
+         ``_SPAN_BROADCAST_CAP`` hashes (the occurrence stream never
+         shuffles), else a shuffle semi join on the hash
+         (boilerplate-heavy corpora whose dup set itself is huge).
+      3. Island merge: one window over (doc, pos) on the hits only.
+    The output equals the DuckDB gram-string oracle up to 64-bit
+    gram-hash collisions.
     """
     if n < 2:
         raise ValueError("span dedup needs n >= 2 (n=1 removes every repeated token)")
-    if key == "arrow":
-        return _duplicate_ngram_spans_arrow(docs, text_col, id_col, n, min_count)
-    from .aggregate import ensure_min_partitions
+    from .aggregate import _map_side_combine, ensure_min_partitions
 
-    # gram construction + hashing is CPU-bound per row: spread a
-    # single-split small-file scan first (no-op on a well-split corpus)
-    occ = ensure_min_partitions(docs.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.posexplode(word_ngrams_col(text_col, n)).alias("pos", "gram"),
-    )
-    key_col = F.xxhash64("gram") if key == "hash" else F.col("gram")
-    occ = occ.select(id_col, "pos", key_col.alias("_k"))
-    dup = (
-        occ.groupBy("_k")
-        .agg(F.count("*").alias("_c"))
-        .filter(F.col("_c") >= min_count)
-        .select("_k")
-    )
-    hits = occ.join(dup, "_k", "left_semi").select(id_col, "pos")
+    seed = 1
+    src = ensure_min_partitions(docs.select(id_col, text_col))
+
+    def count(batch: pa.RecordBatch) -> pa.Table:
+        hs, _, _ = _ngram_hash_positions(batch.column(0), n, seed)
+        uniq, counts = np.unique(hs, return_counts=True)
+        return pa.table({"h": pa.array(uniq.view(np.int64)), "c": pa.array(counts)})
+
+    counts = _map_side_combine(src.select(text_col), count, "h", {"c": "sum"}, key_type="long")
+    dup = counts.filter(F.col("c") >= min_count).select("h").localCheckpoint(eager=True)
+    n_dup = dup.count()
+
+    if n_dup <= _SPAN_BROADCAST_CAP:
+        # Arrow-backed transfer: row-based collect() of a multi-million
+        # row dup set pays per-Row python overhead; toPandas streams
+        # Arrow batches
+        dup_arr = np.sort(dup.toPandas()["h"].to_numpy(np.int64))
+        bc = docs.sparkSession.sparkContext.broadcast(dup_arr)
+
+        def hit_run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            d = bc.value
+            if len(d) == 0:
+                return
+            for batch in batches:
+                ids = batch.column(0)
+                hs, rows, pos = _ngram_hash_positions(batch.column(1), n, seed)
+                if not len(hs):
+                    continue
+                sh = hs.view(np.int64)
+                loc = np.minimum(np.searchsorted(d, sh), len(d) - 1)
+                hit = d[loc] == sh
+                if not hit.any():
+                    continue
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        id_col: ids.take(pa.array(rows[hit])),
+                        "pos": pa.array(pos[hit]),
+                    }
+                )
+
+        hits = src.mapInArrow(hit_run, f"{id_col} long, pos long")
+    else:
+        def occ_run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                ids = batch.column(0)
+                hs, rows, pos = _ngram_hash_positions(batch.column(1), n, seed)
+                if not len(hs):
+                    continue
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        id_col: ids.take(pa.array(rows)),
+                        "pos": pa.array(pos),
+                        "h": pa.array(hs.view(np.int64)),
+                    }
+                )
+
+        occ = src.mapInArrow(occ_run, f"{id_col} long, pos long, h long")
+        hits = occ.join(dup, "h", "left_semi").select(id_col, "pos")
     return _merge_hit_spans(hits, id_col, n)
 
 
@@ -1026,100 +1009,12 @@ def _ngram_hash_positions(
     return combined[same_row], rows, pos
 
 
-def _duplicate_ngram_spans_arrow(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    min_count: int,
-    seed: int = 1,
-    broadcast_cap: int = 16_000_000,
-) -> DataFrame:
-    """The corpus-scale ExactSubstr span pass (see
-    ``duplicate_ngram_spans(key="arrow")``).
-
-    Pass 1 folds each partition's gram-hash counts Arrow-side in
-    bounded chunks, so the exchange carries unique 8-byte hashes with
-    partial counts — never the occurrence stream and never a string.
-    Pass 2 re-derives (row, position) per gram from a fresh scan and
-    emits ONLY hits: against a sorted numpy broadcast of the dup set
-    when |dup| <= ``broadcast_cap`` (128 MB at the default — zero
-    occurrence shuffle), else via a shuffle semi join on the hash
-    (boilerplate-heavy corpora where the dup set itself is huge).
-    """
-    from typing import Iterator as _It
-
-    from .aggregate import _map_side_combine, ensure_min_partitions
-
-    src = ensure_min_partitions(docs.select(id_col, text_col))
-
-    def count(batch: pa.RecordBatch) -> pa.Table:
-        hs, _, _ = _ngram_hash_positions(batch.column(0), n, seed)
-        uniq, counts = np.unique(hs, return_counts=True)
-        return pa.table({"h": pa.array(uniq.view(np.int64)), "c": pa.array(counts)})
-
-    counts = _map_side_combine(src.select(text_col), count, "h", {"c": "sum"}, key_type="long")
-    dup = counts.filter(F.col("c") >= min_count).select("h")
-    dup = dup.persist()
-    n_dup = dup.count()
-
-    if n_dup <= broadcast_cap:
-        # Arrow-backed transfer: row-based collect() of a multi-million
-        # row dup set pays per-Row python overhead; toPandas streams
-        # Arrow batches
-        dup_arr = np.sort(dup.toPandas()["h"].to_numpy(np.int64))
-        dup.unpersist()
-        bc = docs.sparkSession.sparkContext.broadcast(dup_arr)
-
-        def hit_run(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
-            d = bc.value
-            if len(d) == 0:
-                return
-            for batch in batches:
-                ids = batch.column(0)
-                hs, rows, pos = _ngram_hash_positions(batch.column(1), n, seed)
-                if not len(hs):
-                    continue
-                sh = hs.view(np.int64)
-                loc = np.minimum(np.searchsorted(d, sh), len(d) - 1)
-                hit = d[loc] == sh
-                if not hit.any():
-                    continue
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        id_col: ids.take(pa.array(rows[hit])),
-                        "pos": pa.array(pos[hit]),
-                    }
-                )
-
-        hits = src.mapInArrow(hit_run, f"{id_col} long, pos long")
-    else:
-        def occ_run(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
-            for batch in batches:
-                ids = batch.column(0)
-                hs, rows, pos = _ngram_hash_positions(batch.column(1), n, seed)
-                if not len(hs):
-                    continue
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        id_col: ids.take(pa.array(rows)),
-                        "pos": pa.array(pos),
-                        "h": pa.array(hs.view(np.int64)),
-                    }
-                )
-
-        occ = src.mapInArrow(occ_run, f"{id_col} long, pos long, h long")
-        hits = occ.join(dup, "h", "left_semi").select(id_col, "pos")
-    return _merge_hit_spans(hits, id_col, n)
-
-
 def remove_duplicate_spans(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 10,
     min_count: int = 2,
-    key: str = "hash",
     spans: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, clean_text, n_tokens, n_removed): documents with every
@@ -1135,7 +1030,7 @@ def remove_duplicate_spans(
     spans = (
         spans
         if spans is not None
-        else duplicate_ngram_spans(docs, text_col, id_col, n, min_count, key)
+        else duplicate_ngram_spans(docs, text_col, id_col, n, min_count)
     )
     sp = spans.groupBy(id_col).agg(
         F.collect_list(
@@ -1212,7 +1107,8 @@ def duplicate_ngram_spans_sql(
     min_count: int = 2,
 ) -> str:
     """DuckDB oracle for ``duplicate_ngram_spans`` (gram-string keyed —
-    the hash-keyed Spark path matches it up to xxhash64 collisions)."""
+    the hash-keyed Spark path matches it up to 64-bit gram-hash
+    collisions)."""
     return (
         _dup_span_cte(table_expr, text_col, id_col, n, min_count)
         + f"""
@@ -1302,9 +1198,7 @@ def write_minhash_index(
             raise ValueError(
                 f"index at {path} was built with different parameters: {stored}"
             )
-    sigs = minhash_signatures(
-        df, id_col, text_col, num_perm, shingle_k, seed, keep_shingles=False
-    )
+    sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_k, seed)
     keys = lsh_band_keys(sigs, id_col, bands)
     keys.write.mode(mode).partitionBy("band").parquet(os.path.join(path, "keys"))
     os.makedirs(path, exist_ok=True)
@@ -1344,7 +1238,7 @@ def incremental_near_duplicates(
     (band, bucket) with a ``capped`` flag (degenerate boilerplate
     buckets, same treatment as ``lsh_candidate_pairs``).  Exact Jaccard
     verification re-reads TEXT for the candidate ids only, from the
-    union of both corpora (the ``store_shingles=False`` scale path).
+    union of both corpora (``verify_jaccard_pairs_from_text``).
     """
     spark = new_df.sparkSession
     old_keys, meta = read_minhash_index(spark, index_path)
@@ -1377,7 +1271,6 @@ def near_duplicates_against_keys(
         meta["num_perm"],
         meta["shingle_k"],
         meta["seed"],
-        keep_shingles=False,
     )
     new_keys = lsh_band_keys(sigs, id_col, meta["bands"]).withColumnRenamed(
         id_col, "id_new"
@@ -1461,7 +1354,8 @@ def boilerplate_lines(
     cookie-banner / nav-menu / copyright-footer lines that repeat across
     otherwise-unique pages; this finds exactly those.
 
-    Key modes (same discipline as :func:`duplicate_ngram_spans`):
+    Key modes (``key`` sets the type of ``line_key``, so
+    :func:`remove_boilerplate_lines` given ``lines=`` must use the same):
       "gram" — line STRINGS as keys (the oracle form; output column
         ``line_key`` carries the line itself).
       "hash" — xxhash64 keys: the corpus-scale path, the document-

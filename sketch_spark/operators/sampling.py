@@ -99,7 +99,6 @@ def leakage_safe_split(
     num_perm: int = 64,
     bands: int | str = 16,
     shingle_k: int = 3,
-    store_shingles: bool = True,
 ) -> DataFrame:
     """Dedup-AWARE train/val/test split: every near-duplicate cluster
     lands wholly in one split, so eval can never contain a near-copy
@@ -122,8 +121,7 @@ def leakage_safe_split(
 
     if pairs is None:
         pairs = minhash_near_duplicates(
-            df, id_col, text_col, num_perm, bands, shingle_k, threshold, seed,
-            store_shingles=store_shingles,
+            df, id_col, text_col, num_perm, bands, shingle_k, threshold, seed
         )
     labels = propagate_min_labels(pairs.select("id_a", "id_b")).withColumnRenamed(
         "id", id_col

@@ -90,9 +90,7 @@ def init_near_dedup_index(
         "seed": seed,
         "bands": bands,
     }
-    sigs = minhash_signatures(
-        base_df, id_col, text_col, num_perm, shingle_k, seed, keep_shingles=False
-    )
+    sigs = minhash_signatures(base_df, id_col, text_col, num_perm, shingle_k, seed)
     keys = lsh_band_keys(sigs, id_col, bands)
     keys.write.mode("overwrite").parquet(os.path.join(root, "keys", "epoch=0"))
     base_df.select(id_col, text_col).write.mode("overwrite").parquet(
@@ -254,7 +252,6 @@ def make_near_dedup_fold(
                 meta["shingle_k"],
                 threshold,
                 meta["seed"],
-                store_shingles=False,
             ).localCheckpoint(eager=True)
             within.write.mode("overwrite").parquet(
                 os.path.join(root, "pairs_within", f"epoch={epoch}")
@@ -289,7 +286,6 @@ def make_near_dedup_fold(
                 meta["num_perm"],
                 meta["shingle_k"],
                 meta["seed"],
-                keep_shingles=False,
             )
             lsh_band_keys(sigs, id_col, meta["bands"]).write.mode(
                 "overwrite"

@@ -58,6 +58,28 @@ def test_lsh_pairs_no_pandas_groups(spark, sf001):
     assert "MapInArrow" in plan
 
 
+def test_span_pass2_one_map_in_arrow_no_occurrence_shuffle(spark, sf001):
+    """At the default broadcast cap, span pass 2 is ONE MapInArrow that
+    probes the broadcast dup set: the only exchange below it is the
+    round-robin spread of the scan, and the only one above it is the
+    hit stream's hash exchange on the doc id (window + span groupBy).
+    No join, so the occurrence stream never shuffles."""
+    from sketch_spark.operators.dedup import duplicate_ngram_spans
+
+    docs = spark.read.parquet(os.path.join(sf001, "documents.parquet"))
+    lines = _plan(duplicate_ngram_spans(docs, n=3, min_count=2)).splitlines()
+    arrow = [i for i, line in enumerate(lines) if "MapInArrow" in line]
+    assert len(arrow) == 1, "\n".join(lines)
+    assert not any("Join" in line for line in lines), "\n".join(lines)
+    for i, line in enumerate(lines):
+        if "Exchange" not in line:
+            continue
+        if i > arrow[0]:
+            assert "RoundRobinPartitioning" in line, line
+        else:
+            assert "hashpartitioning(doc_id" in line, line
+
+
 def test_bloom_prefilter_below_join(spark, sf001):
     import __spark_entry__ as em
 

@@ -1,32 +1,13 @@
 """Round-2 regression tests not yet moved to their subject files: ADVICE
 fixes (reference-mode truncation, tie-boundary top-k) and VERDICT
-anti-pattern fixes (blocked exact cosine pairs, capped simhash buckets,
-Catalyst-only binary_metadata)."""
+anti-pattern fixes (blocked exact cosine pairs, Catalyst-only
+binary_metadata)."""
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import functions as F
-
-
-def test_minhash_null_text_attribution(spark):
-    # with a null-text row between twins, dedup must still pair the
-    # twins (pre-fix, drop_null shifted attribution so doc 2's shingles
-    # were credited to doc 1)
-    rows = [
-        (0, "alpha beta gamma delta epsilon zeta"),
-        (1, None),
-        (2, "alpha beta gamma delta epsilon zeta"),
-        (3, "totally different words here now ok"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    from sketch_spark.operators.dedup import minhash_near_duplicates
-
-    pairs = minhash_near_duplicates(
-        df, threshold=0.9, num_perm=32, bands=8, shingle_k=2
-    ).toPandas()
-    assert set(zip(pairs.id_a, pairs.id_b)) == {(0, 2)}
 
 
 def test_emerging_reference_mode_growth_truncation(spark):
@@ -46,24 +27,6 @@ def test_emerging_reference_mode_growth_truncation(spark):
     toks = set(out.token)
     assert "above" in toks  # floor(202/2)=101 > 100
     assert "boundary" not in toks  # floor(201/2)=100, not > 100
-
-
-def test_simhash_candidate_pairs_capped(spark):
-    from sketch_spark.operators.dedup import simhash, simhash_candidate_pairs
-
-    # adversarial corpus: identical text -> every doc lands in the same
-    # bucket of every band
-    df = spark.createDataFrame(
-        [(i, "same text every row") for i in range(30)], "doc_id long, text string"
-    )
-    sim = simhash(df, "doc_id", "text", seed=1)
-    capped = simhash_candidate_pairs(sim, "doc_id", max_bucket=10).toPandas()
-    # bounded: at most C(10,2) pairs, all flagged
-    assert len(capped) == 45
-    assert capped.capped.all()
-    full = simhash_candidate_pairs(sim, "doc_id", max_bucket=1000).toPandas()
-    assert len(full) == 30 * 29 // 2
-    assert not full.capped.any()
 
 
 def test_exact_cosine_pairs_blocked_matches_broadcast(spark):
@@ -153,47 +116,6 @@ def test_winnow_fingerprints_shared_substring_guarantee(spark):
     assert not (got[0] & got[2])
     assert got[3] == set()
     assert len(got[4]) == 1
-
-
-def test_simhash_near_duplicates_end_to_end(spark):
-    """Full-64-bit Hamming verify (low bit recovered from band0) matches
-    brute force on the candidate-reachable set."""
-    import numpy as np
-
-    from sketch_spark.operators.dedup import simhash, simhash_near_duplicates
-
-    rng = np.random.default_rng(13)
-    vocab = [f"tok{i}" for i in range(400)]
-    rows = []
-    for i in range(40):
-        base = list(rng.choice(vocab, size=30, replace=False))
-        twin = base.copy()
-        twin[0] = str(rng.choice(vocab))  # small perturbation
-        rows.append((2 * i, " ".join(base)))
-        rows.append((2 * i + 1, " ".join(twin)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    got = simhash_near_duplicates(df, "doc_id", "text", max_hamming=3, seed=1).toPandas()
-    got_pairs = set(zip(got.id_a, got.id_b))
-
-    # brute force over full 64-bit fingerprints
-    sim = simhash(df, "doc_id", "text", seed=1).toPandas()
-    fp = {
-        r.doc_id: (int(np.uint64(r.simhash)) << 1) | (int(r.band0) & 1)
-        for r in sim.itertuples()
-    }
-    ids = sorted(fp)
-    brute = {
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if bin(fp[a] ^ fp[b]).count("1") <= 3
-    }
-    assert got_pairs == brute  # pigeonhole recall 1.0, exact verify
-    assert len(brute) > 0  # fixture actually produced close twins
-    ham = dict(zip(zip(got.id_a, got.id_b), got.hamming))
-    for (a, b), h in ham.items():
-        assert h == bin(fp[a] ^ fp[b]).count("1")
 
 
 def test_word_ngrams_col_matches_arrow_kernel(spark):

@@ -10,99 +10,6 @@ import pytest
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r3 #1 — SimHash candidate density on Zipf corpora (head-drop)
-# ---------------------------------------------------------------------------
-def _zipf_corpus(n_docs=3000, seed=7, vocab=5000, doc_len=200, n_exact=10, n_append=20):
-    """Organic Zipf(1.07) docs + planted twins: exact copies and
-    one-token-appended near-identical copies."""
-    rng = np.random.default_rng(seed)
-    texts = []
-    for _ in range(n_docs):
-        ids = rng.zipf(1.07, size=doc_len * 2)
-        ids = ids[ids <= vocab][:doc_len]
-        texts.append(" ".join(f"w{t}" for t in ids))
-    rows = [{"doc_id": i, "text": t} for i, t in enumerate(texts)]
-    exact, appended = [], []
-    for j in range(n_exact):
-        rows.append({"doc_id": n_docs + j, "text": rows[j * 11]["text"]})
-        exact.append((j * 11, n_docs + j))
-    for j in range(n_append):
-        rows.append(
-            {"doc_id": n_docs + n_exact + j, "text": rows[j * 7 + 1]["text"] + f" uniquetwin{j}"}
-        )
-        appended.append((j * 7 + 1, n_docs + n_exact + j))
-    return pd.DataFrame(rows), exact, appended
-
-
-def test_simhash_head_drop_cuts_zipf_candidate_density(spark):
-    """VERDICT r2 #1: on an organic Zipf corpus the 64-bit SimHash
-    candidate graph densifies (head tokens dominate every doc's bit
-    votes — measured 1.5M candidate pairs at just 3k docs here, 13.6M
-    at 500k in BENCH.md); drop_top_df must cut candidate volume >=10x
-    (measured ~2400x on this corpus) while still finding planted
-    exact/near-identical twins.  Head-drop makes per-bit vote margins
-    thin (that IS the discrimination), so one-token-edit twins sit at
-    Hamming ~1-5 instead of ~0 — the assertions are calibrated to the
-    deterministic fixture."""
-    from sketch_spark.operators.dedup import (
-        simhash,
-        simhash_candidate_pairs,
-        simhash_near_duplicates,
-    )
-
-    pdf, exact, appended = _zipf_corpus()
-    df = spark.createDataFrame(pdf).repartition(8)
-
-    def n_candidates(drop):
-        sim = simhash(df, "doc_id", "text", seed=1, drop_top_df=drop)
-        return simhash_candidate_pairs(sim, "doc_id").count()
-
-    dense = n_candidates(0)
-    sparse = n_candidates(50)
-    assert dense >= 10 * max(sparse, 1), (dense, sparse)
-
-    got = simhash_near_duplicates(
-        df, "doc_id", "text", max_hamming=3, seed=1, drop_top_df=50
-    ).toPandas()
-    got_pairs = {(int(a), int(b)) for a, b in zip(got.id_a, got.id_b)}
-    assert all(p in got_pairs for p in exact), "exact copies must always be found"
-    found = sum(1 for p in appended if p in got_pairs)
-    assert found >= 12, (found, len(appended))  # measured 14/20 on this fixture
-
-
-def test_simhash_head_drop_all_head_doc_fallback(spark):
-    """A doc made ENTIRELY of head tokens keeps a full-token-set
-    fingerprint instead of collapsing to zero votes (which would
-    spuriously bucket every such doc into one Hamming-0 cluster)."""
-    from sketch_spark.operators.dedup import simhash
-
-    rows = [{"doc_id": i, "text": "the a of and to in is " * 8} for i in range(2)]
-    rows += [{"doc_id": 2 + i, "text": f"rare{i} distinct{i} words{i} here{i}"} for i in range(3)]
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    # drop_top_df large enough to cover the whole head vocabulary
-    out = simhash(df, "doc_id", "text", seed=1, drop_top_df=7).toPandas().set_index("doc_id")
-    # head-only docs: identical text => identical fingerprint, but NOT
-    # the all-zero vote pattern of "no tokens at all"
-    assert out.loc[0, "simhash"] == out.loc[1, "simhash"]
-    base = simhash(df, "doc_id", "text", seed=1, drop_top_df=0).toPandas().set_index("doc_id")
-    assert out.loc[0, "simhash"] == base.loc[0, "simhash"]  # fallback = undropped votes
-    # tail docs unaffected by dropping head tokens they don't contain
-    for i in (2, 3, 4):
-        assert out.loc[i, "simhash"] == base.loc[i, "simhash"]
-
-
-def test_top_df_token_hashes_ranks_head(spark):
-    from sketch_spark.core.hashing import hash_strings
-    from sketch_spark.operators.dedup import top_df_token_hashes
-
-    rows = [{"text": f"common filler w{i} unique{i}"} for i in range(200)]
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    top = top_df_token_hashes(df, "text", k=2, seed=1)
-    expect = hash_strings(np.array(["common", "filler"], dtype=object), seed=1)
-    assert set(top.tolist()) == set(expect.tolist())
-
-
-# ---------------------------------------------------------------------------
 # ADVICE r2 — deterministic salt in keyed_sketch_aggregate
 # ---------------------------------------------------------------------------
 def test_keyed_salt_is_deterministic_expression(spark):
@@ -161,47 +68,6 @@ def test_cosine_topk_boundary_ties_deterministic(spark):
     # the 40 identical vectors all have sim 1.0; ids 0..4 must win
     assert got.vec_id.tolist() == [0, 1, 2, 3, 4]
     assert (got.sim == 1.0).all()
-
-
-# ---------------------------------------------------------------------------
-# VERDICT r3 #4 — LSH recall knee quantified against 1-(1-s^r)^b
-# ---------------------------------------------------------------------------
-def test_lsh_banding_recall_tracks_theory(spark):
-    """VERDICT r2 #4: the contract fixtures sit above the recall knee
-    by construction, so a banding bug that only bites borderline-J
-    pairs would previously go uncaught.  Plant signature pairs whose
-    components agree independently with probability s (exactly the
-    MinHash property for Jaccard s) across s in {0.35..0.75} and
-    assert measured bucket-collision recall tracks 1-(1-s^r)^b within
-    binomial tolerance.  This drives lsh_candidate_pairs' actual
-    slicing/hash/bucket pipeline, not a reimplementation."""
-    from sketch_spark.operators.dedup import lsh_candidate_pairs
-
-    rng = np.random.default_rng(17)
-    num_perm, bands, m_pairs = 64, 16, 400
-    r = num_perm // bands
-    levels = [0.35, 0.45, 0.55, 0.65, 0.75]
-    rows, planted = [], {}
-    nid = 0
-    for s in levels:
-        planted[s] = []
-        for _ in range(m_pairs):
-            base = rng.integers(0, 1 << 62, size=num_perm, dtype=np.int64)
-            other = rng.integers(0, 1 << 62, size=num_perm, dtype=np.int64)
-            agree = rng.random(num_perm) < s
-            partner = np.where(agree, base, other)
-            rows.append({"doc_id": nid, "sig": base.tolist()})
-            rows.append({"doc_id": nid + 1, "sig": partner.tolist()})
-            planted[s].append((nid, nid + 1))
-            nid += 2
-    sig_df = spark.createDataFrame(pd.DataFrame(rows)).repartition(8)
-    cand = lsh_candidate_pairs(sig_df, "doc_id", bands=bands).select("id_a", "id_b").toPandas()
-    got = {(int(a), int(b)) for a, b in zip(cand.id_a, cand.id_b)}
-    for s in levels:
-        theory = 1.0 - (1.0 - s**r) ** bands
-        measured = sum(1 for p in planted[s] if p in got) / m_pairs
-        se = (theory * (1 - theory) / m_pairs) ** 0.5
-        assert abs(measured - theory) <= 4 * se + 0.02, (s, measured, theory)
 
 
 # ---------------------------------------------------------------------------

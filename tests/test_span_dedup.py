@@ -1,6 +1,7 @@
 """Duplicate n-gram SPAN removal (ExactSubstr-style, Lee et al. 2022):
-hand-computed fixtures, hash-vs-string key equivalence, randomized
-DuckDB parity, and a no-Python plan guard."""
+hand-computed fixtures, randomized DuckDB parity, and the semi-join
+branch against the broadcast branch (the plan guard lives in
+test_plan_guards.py)."""
 
 import duckdb
 import numpy as np
@@ -35,12 +36,11 @@ def _duck(rows):
     return con
 
 
-@pytest.mark.parametrize("key", ["hash", "gram", "arrow"])
-def test_span_fixture_hand_computed(spark, key):
+def test_span_fixture_hand_computed(spark):
     df = spark.createDataFrame(FIXTURE, "doc_id long, text string")
     spans = {
         (r["doc_id"], r["span_start"], r["span_end"]): r["span_tokens"]
-        for r in duplicate_ngram_spans(df, n=3, min_count=2, key=key).collect()
+        for r in duplicate_ngram_spans(df, n=3, min_count=2).collect()
     }
     # doc 1: grams at pos 0..2 dup -> one span [0, 4]; doc 2: [2, 6];
     # doc 4: two islands [1, 5] and [7, 11]; docs 3/5/6/7: none
@@ -52,7 +52,7 @@ def test_span_fixture_hand_computed(spark, key):
     }
     out = {
         r["doc_id"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
-        for r in remove_duplicate_spans(df, n=3, min_count=2, key=key).collect()
+        for r in remove_duplicate_spans(df, n=3, min_count=2).collect()
     }
     assert out[1] == ("f g h", 8, 5)
     assert out[2] == ("x y z", 8, 5)
@@ -118,50 +118,28 @@ def test_randomized_duckdb_parity(spark, seed):
             tuple(r)
             for r in con.execute(remove_duplicate_spans_sql(n=n, min_count=2)).fetchall()
         )
-        for key in ("hash", "arrow"):
-            got = sorted(
-                tuple(r)
-                for r in duplicate_ngram_spans(df, n=n, min_count=2, key=key).collect()
-            )
-            assert got == want, f"spans diverge at n={n} seed={seed} key={key}"
-            got_rm = sorted(
-                tuple(r)
-                for r in remove_duplicate_spans(df, n=n, min_count=2, key=key).collect()
-            )
-            assert got_rm == want_rm, f"removal diverges at n={n} seed={seed} key={key}"
+        got = sorted(
+            tuple(r) for r in duplicate_ngram_spans(df, n=n, min_count=2).collect()
+        )
+        assert got == want, f"spans diverge at n={n} seed={seed}"
+        got_rm = sorted(
+            tuple(r) for r in remove_duplicate_spans(df, n=n, min_count=2).collect()
+        )
+        assert got_rm == want_rm, f"removal diverges at n={n} seed={seed}"
 
 
-def test_arrow_join_fallback_matches_broadcast(spark):
-    """broadcast_cap=0 forces the shuffle-semi-join branch (huge-dup-set
-    corpora); results must equal the broadcast-membership branch."""
-    from sketch_spark.operators.dedup import _duplicate_ngram_spans_arrow
+def test_arrow_join_fallback_matches_broadcast(spark, monkeypatch):
+    """A zero broadcast cap forces the shuffle-semi-join branch
+    (huge-dup-set corpora); results must equal the broadcast-membership
+    branch."""
+    from sketch_spark.operators import dedup
 
     rows = _random_corpus(9)
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        tuple(r)
-        for r in _duplicate_ngram_spans_arrow(df, "text", "doc_id", 4, 2).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in _duplicate_ngram_spans_arrow(
-            df, "text", "doc_id", 4, 2, broadcast_cap=0
-        ).collect()
-    )
+    a = sorted(tuple(r) for r in duplicate_ngram_spans(df, n=4, min_count=2).collect())
+    monkeypatch.setattr(dedup, "_SPAN_BROADCAST_CAP", 0)
+    b = sorted(tuple(r) for r in duplicate_ngram_spans(df, n=4, min_count=2).collect())
     assert a == b and len(a) > 0
-
-
-def test_span_plan_is_pure_catalyst(spark):
-    """No Python stage anywhere: gram explode, dup-set aggregate, semi
-    join, window merge, and the token filter are all JVM expressions."""
-    df = spark.createDataFrame(FIXTURE, "doc_id long, text string")
-    for frame in (
-        duplicate_ngram_spans(df, n=3, min_count=2),
-        remove_duplicate_spans(df, n=3, min_count=2),
-    ):
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        assert "Python" not in plan, plan
-        assert "BatchEvalPython" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -340,9 +340,9 @@ def main() -> None:
         "driver holds only the k x d centroid matrix.",
     ))
 
-    # duplicate n-gram span removal (ExactSubstr), Arrow scale path:
-    # q_dup_span_report eagerly runs pass 1 (unique-hash dup set) when
-    # called; the returned frame's plan is pass 2 + the island merge
+    # duplicate n-gram span removal (ExactSubstr): q_dup_span_report
+    # eagerly runs pass 1 (unique-hash dup set) when called; the
+    # returned frame's plan is pass 2 + the island merge
     df = entrymod.q_dup_span_report(spark, sf)
     plan = explain_str(df)
     # formatted plans print each exchange twice (tree node + detail
@@ -350,7 +350,7 @@ def main() -> None:
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
     no_occ_exchange = n_exchanges <= 2
     sections.append((
-        "Duplicate n-gram span report (ExactSubstr-style, Arrow scale path)",
+        "Duplicate n-gram span report (ExactSubstr-style)",
         plan,
         "- pass 1 (not in this plan; runs eagerly) folds per-partition "
         "gram-hash counts Arrow-side — the exchange carries unique 8-byte "
@@ -361,9 +361,9 @@ def main() -> None:
         f"{no_occ_exchange} — the tiny-input scan-spread round-robin plus "
         "the hit-stream hash exchange, which the window and span groupBy "
         "SHARE).\n"
-        "- the Catalyst forms (key='hash'/'gram') remain for the oracle and "
-        "small corpora; equivalence is pytest-pinned and the DuckDB gram-"
-        "string oracle hash-greens the Arrow path at both gate scales.",
+        "- this is the operator's only path; the DuckDB gram-string oracle "
+        "hash-greens it at both gate scales, and tests/test_plan_guards.py "
+        "pins the single MapInArrow and the unshuffled occurrence stream.",
     ))
 
     # hashed NB classifier scoring: map-only in BOTH engines
