@@ -36,11 +36,37 @@ def _duck(rows):
     return con
 
 
-def test_span_fixture_hand_computed(spark):
+def _fixture_rows(spark, monkeypatch, path):
+    """(span rows, removal rows) of FIXTURE at n=3, min_count=2 through
+    one span path: ``arrow`` probes the sorted broadcast of the dup
+    set, ``hash`` forces the shuffle semi join on the gram hash, and
+    ``gram`` is the gram-string-keyed DuckDB oracle."""
+    if path == "gram":
+        con = _duck(FIXTURE)
+        cols = ("doc_id", "span_start", "span_end", "span_tokens")
+        spans = con.execute(duplicate_ngram_spans_sql(n=3, min_count=2)).fetchall()
+        removed = con.execute(remove_duplicate_spans_sql(n=3, min_count=2)).fetchall()
+        return (
+            [dict(zip(cols, r)) for r in spans],
+            [dict(zip(("doc_id", "clean_text", "n_tokens", "n_removed"), r)) for r in removed],
+        )
+    if path == "hash":
+        from sketch_spark.operators import dedup
+
+        monkeypatch.setattr(dedup, "_SPAN_BROADCAST_CAP", 0)
     df = spark.createDataFrame(FIXTURE, "doc_id long, text string")
+    return (
+        duplicate_ngram_spans(df, n=3, min_count=2).collect(),
+        remove_duplicate_spans(df, n=3, min_count=2).collect(),
+    )
+
+
+@pytest.mark.parametrize("path", ["hash", "gram", "arrow"])
+def test_span_fixture_hand_computed(spark, monkeypatch, path):
+    span_rows, removed_rows = _fixture_rows(spark, monkeypatch, path)
     spans = {
         (r["doc_id"], r["span_start"], r["span_end"]): r["span_tokens"]
-        for r in duplicate_ngram_spans(df, n=3, min_count=2).collect()
+        for r in span_rows
     }
     # doc 1: grams at pos 0..2 dup -> one span [0, 4]; doc 2: [2, 6];
     # doc 4: two islands [1, 5] and [7, 11]; docs 3/5/6/7: none
@@ -52,7 +78,7 @@ def test_span_fixture_hand_computed(spark):
     }
     out = {
         r["doc_id"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
-        for r in remove_duplicate_spans(df, n=3, min_count=2).collect()
+        for r in removed_rows
     }
     assert out[1] == ("f g h", 8, 5)
     assert out[2] == ("x y z", 8, 5)
