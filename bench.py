@@ -89,6 +89,39 @@ def compact_line(detail: dict) -> str:
         )
     return line
 
+
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) ticks over all CPUs since boot, from /proc/stat."""
+    with open("/proc/stat") as f:
+        vals = [int(v) for v in f.readline().split()[1:9]]
+    return vals[7], sum(vals)
+
+
+def time_queries(qs: dict, names: list[str], spark, sf_dir: str) -> tuple[dict, dict, float]:
+    """(wall seconds, row count) per query of ``names``, and the share
+    of CPU time (%) the hypervisor stole over all their runs.
+
+    Each query's time is the min of 2 runs, plus a tie-breaker run when
+    the two disagree by >30%: the sandbox VM has bursty steal time and
+    the driver records a single invocation of this script."""
+    timings: dict[str, float] = {}
+    rowcounts: dict[str, int] = {}
+
+    def run(name: str) -> float:
+        t0 = time.perf_counter()
+        rowcounts[name] = qs[name](spark, sf_dir).count()
+        return time.perf_counter() - t0
+
+    steal0, total0 = cpu_ticks()
+    for name in names:
+        runs = [run(name), run(name)]
+        if max(runs) > 1.3 * min(runs) and min(runs) > 0.3:
+            runs.append(run(name))
+        timings[name] = round(min(runs), 3)
+    steal, total = cpu_ticks()
+    return timings, rowcounts, round(100.0 * (steal - steal0) / max(total - total0, 1), 2)
+
+
 # headline set: the flagship sketch pipeline + representative operators
 # from each family (exact text, windowed events, relational, dedup, ANN)
 HEADLINE = [
@@ -138,25 +171,7 @@ def main() -> None:
     # queries, not session bring-up
     spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
 
-    timings: dict[str, float] = {}
-    rowcounts: dict[str, int] = {}
-    for name in HEADLINE:
-        # min of 2, plus a tie-breaker run when the two disagree by
-        # >30% — the sandbox VM has bursty steal time and the driver
-        # records a single invocation of this script
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            n = df.count()
-            runs.append(time.perf_counter() - t0)
-        if max(runs) > 1.3 * min(runs) and min(runs) > 0.3:
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(min(runs), 3)
-        rowcounts[name] = n
-
+    timings, rowcounts, steal_pct = time_queries(qs, HEADLINE, spark, sf_dir)
     total = round(sum(timings.values()), 3)
 
     # LLM-pipeline operators, timed SEPARATELY: ``value`` and
@@ -214,16 +229,7 @@ def main() -> None:
         "fd_spectrum",
         "url_dedup",
     ]
-    r3_timings: dict[str, float] = {}
-    r3_rowcounts: dict[str, int] = {}
-    for name in PIPELINE:
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            n = qs[name](spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-        r3_timings[name] = round(min(runs), 3)
-        r3_rowcounts[name] = n
+    r3_timings, r3_rowcounts, r3_steal_pct = time_queries(qs, PIPELINE, spark, sf_dir)
 
     # sketch-update throughput on the documents table (docs+tokens/sec)
     from sketch_spark.operators.aggregate import SketchSpec, sketch_aggregate
@@ -289,6 +295,7 @@ def main() -> None:
         "pipeline_queries": r3_timings,
         "pipeline_total": round(sum(r3_timings.values()), 3),
         "pipeline_rowcounts": r3_rowcounts,
+        "steal_pct": {"headline": steal_pct, "pipeline": r3_steal_pct},
     }
     # attach the most recent two-parallelism-level scaling measurement
     # (bench_util/scaling.py, median-of-runs with spread) so the north

@@ -18,3 +18,19 @@ update over streamed tokens), generalized per BASELINE.json north_rule:
 """
 
 __version__ = "0.1.0"
+
+
+def _drop_zip_finders() -> None:
+    """Forget the cached zip finders: a PySpark worker's per-task
+    ``importlib.invalidate_caches()`` makes each re-read its whole
+    archive directory, yet Spark never changes an archive in place. A
+    later import builds a new finder from zipimport's directory cache."""
+    import sys
+    import zipimport
+
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+
+
+_drop_zip_finders()

@@ -37,6 +37,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegralType, LongType
 
 from ..core import make_sketch, sketch_from_bytes
 from ..core.base import Sketch
@@ -158,6 +159,17 @@ def ensure_min_partitions(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
+
+
+def long_ids(df: DataFrame, id_col: str) -> DataFrame:
+    """``df`` with its integral ``id_col`` cast to bigint, for a
+    mapInArrow that passes the id column through under a ``{id_col}
+    long`` schema: an int column there fails inside the task.  Any
+    other id type raises ``TypeError`` here, before a job runs."""
+    dt = df.schema[id_col].dataType
+    if not isinstance(dt, IntegralType):
+        raise TypeError(f"id column {id_col!r} must be an integral type, not {dt.simpleString()}")
+    return df if isinstance(dt, LongType) else df.withColumn(id_col, F.col(id_col).cast("long"))
 
 
 # a partition's buffered per-batch tables are re-folded past this many bytes

@@ -37,6 +37,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from .aggregate import long_ids
+
 __all__ = [
     "kmeans_init_min_ids",
     "kmeans_fit",
@@ -189,4 +191,4 @@ def kmeans_assign(
             yield pa.RecordBatch.from_pydict({id_col: ids, **out})
 
     schema = f"{id_col} long, cell long" + (", sqdist double" if with_dist else "")
-    return emb_df.select(id_col, vec_col).mapInArrow(run, schema)
+    return long_ids(emb_df, id_col).select(id_col, vec_col).mapInArrow(run, schema)

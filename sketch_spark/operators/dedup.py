@@ -181,9 +181,9 @@ def minhash_signatures(
                 }
             )
 
-    from .aggregate import ensure_min_partitions
+    from .aggregate import ensure_min_partitions, long_ids
 
-    return ensure_min_partitions(df.select(id_col, text_col)).mapInArrow(
+    return ensure_min_partitions(long_ids(df, id_col).select(id_col, text_col)).mapInArrow(
         run, f"{id_col} long, sig array<long>"
     )
 
@@ -618,6 +618,9 @@ def simhash(
     full token set (never a zero-vote all-bits-clear fingerprint,
     which would spuriously bucket such docs together).
     """
+    from .aggregate import ensure_min_partitions, long_ids
+
+    df = long_ids(df, id_col)
     drop = (
         top_df_token_hashes(df, text_col, drop_top_df, seed, df_sample_fraction)
         if drop_top_df > 0
@@ -640,8 +643,6 @@ def simhash(
             yield pa.RecordBatch.from_pydict(out)
 
     schema = f"{id_col} long, simhash long, band0 long, band1 long, band2 long, band3 long"
-    from .aggregate import ensure_min_partitions
-
     return ensure_min_partitions(df.select(id_col, text_col)).mapInArrow(run, schema)
 
 
@@ -903,10 +904,10 @@ def duplicate_ngram_spans(
     """
     if n < 2:
         raise ValueError("span dedup needs n >= 2 (n=1 removes every repeated token)")
-    from .aggregate import _map_side_combine, ensure_min_partitions
+    from .aggregate import _map_side_combine, ensure_min_partitions, long_ids
 
     seed = 1
-    src = ensure_min_partitions(docs.select(id_col, text_col))
+    src = ensure_min_partitions(long_ids(docs, id_col).select(id_col, text_col))
 
     def count(batch: pa.RecordBatch) -> pa.Table:
         hs, _, _ = _ngram_hash_positions(batch.column(0), n, seed)

@@ -24,6 +24,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, Window as W
 
 from ..core.hashing import derive_seeds
+from .aggregate import long_ids
 
 __all__ = [
     "cosine_topk",
@@ -336,7 +337,7 @@ def hyperplane_buckets(
                 {id_col: ids, "bucket": pa.array(bucket.astype(np.int64))}
             )
 
-    return emb_df.select(id_col, vec_col).mapInArrow(run, f"{id_col} long, bucket long")
+    return long_ids(emb_df, id_col).select(id_col, vec_col).mapInArrow(run, f"{id_col} long, bucket long")
 
 
 def lsh_bucket_topk(
@@ -421,7 +422,7 @@ def ivf_assign(
                 {id_col: ids, "cell": pa.array(cell.astype(np.int64))}
             )
 
-    return emb_df.select(id_col, vec_col).mapInArrow(run, f"{id_col} long, cell long")
+    return long_ids(emb_df, id_col).select(id_col, vec_col).mapInArrow(run, f"{id_col} long, cell long")
 
 
 def ivf_topk(
@@ -502,6 +503,7 @@ def build_ann_index(
 
     import pyarrow.parquet as pq
 
+    emb_df = long_ids(emb_df, id_col)
     if kind == "ivf":
         if centroids is None:
             if train == "full":
@@ -807,6 +809,7 @@ def incremental_semantic_dedup(
     """
     import pandas as pd
 
+    new_df = long_ids(new_df, id_col)
     spark = new_df.sparkSession
     cents = load_ann_centroids(index_path)
     k_cells = len(cents)

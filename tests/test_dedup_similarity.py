@@ -88,6 +88,58 @@ def test_minhash_jaccard_values_exact(spark, neardup_df):
         assert abs(truth[(r.id_a, r.id_b)] - r.jaccard) < 1e-6
 
 
+def test_minhash_int_ids_match_bigint(spark, neardup_df):
+    """An ``int`` id column gives the same MinHash pairs as the same ids
+    as bigint: the signature pass declares its id column long."""
+    want = sorted(minhash_near_duplicates(neardup_df, threshold=0.5, seed=1).collect())
+    as_int = neardup_df.withColumn("doc_id", F.col("doc_id").cast("int"))
+    assert as_int.schema["doc_id"].dataType.simpleString() == "int"
+    got = sorted(minhash_near_duplicates(as_int, threshold=0.5, seed=1).collect())
+    assert want and got == want
+
+
+def test_string_ids_raise_before_any_job(spark, neardup_df, tmp_path):
+    """Every operator whose mapInArrow carries the id under a long
+    schema rejects a string id at plan time, naming the column and its
+    type, instead of failing inside a task."""
+    from sketch_spark.operators.clustering import kmeans_assign
+    from sketch_spark.operators.dedup import duplicate_ngram_spans
+    from sketch_spark.operators.similarity import (
+        build_ann_index,
+        incremental_semantic_dedup,
+        ivf_assign,
+    )
+
+    docs = neardup_df.withColumn("doc_id", F.col("doc_id").cast("string"))
+    vecs = spark.createDataFrame([("v1", [1.0, 0.0])], "vec_id string, embedding array<double>")
+    cents = np.eye(2)
+    calls = {
+        "doc_id": [
+            lambda: minhash_signatures(docs),
+            lambda: minhash_near_duplicates(docs),
+            lambda: simhash(docs, drop_top_df=5),
+            lambda: duplicate_ngram_spans(docs, n=4),
+        ],
+        "vec_id": [
+            lambda: kmeans_assign(vecs, cents),
+            lambda: hyperplane_buckets(vecs),
+            lambda: ivf_assign(vecs, cents),
+            lambda: build_ann_index(vecs, str(tmp_path / "idx"), n_cells=2),
+            lambda: incremental_semantic_dedup(vecs, str(tmp_path / "missing")),
+        ],
+    }
+    sc = spark.sparkContext
+    sc.setJobGroup("string-ids", "string ids")
+    try:
+        for col, fns in calls.items():
+            for fn in fns:
+                with pytest.raises(TypeError, match=f"'{col}'.* string"):
+                    fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("string-ids")) == []
+
+
 def test_minhash_signature_estimate_unbiased(spark, neardup_df):
     sigs = minhash_signatures(neardup_df, num_perm=128, shingle_k=3, seed=3).toPandas()
     pdf = neardup_df.toPandas()
