@@ -1531,7 +1531,7 @@ def q_cmcu_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cmcu", "cmcu", "text", mode="tokens",
         params={"depth": 4, "log2_width": 14, "seed": 1},
     )
-    sketch = sketch_aggregate(docs, [spec], fanout=8).sketch("cmcu")
+    sketch = sketch_aggregate(docs, [spec]).sketch("cmcu")
     bc = broadcast_sketch(spark, sketch)
     cand = candidate_token_counts(docs, "text", bc, threshold=200)
     return cand.select(
@@ -1563,7 +1563,7 @@ def q_countsketch_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cs", "cs", "text", mode="tokens",
         params={"depth": 5, "log2_width": 14, "seed": 1},
     )
-    sketch = sketch_aggregate(docs, [spec], fanout=8).sketch("cs")
+    sketch = sketch_aggregate(docs, [spec]).sketch("cs")
     bc = broadcast_sketch(spark, sketch)
     heavy = (
         _tokens(docs)
@@ -1589,7 +1589,7 @@ def q_hll_distinct_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     spec = SketchSpec("hll", "hll", "text", mode="tokens", params={"p": 14, "seed": 1})
-    merged = merge_partials(build_partials(docs, [spec], ["lang"]), ["lang"], fanout=8)
+    merged = merge_partials(build_partials(docs, [spec], ["lang"]), ["lang"])
     return merged.select(
         "lang",
         F.round(state_estimate_col()(F.col("state"))).cast("long").alias("est_distinct"),
@@ -1612,7 +1612,7 @@ def q_kll_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = SketchSpec(
         "kll", "kll", "l_extendedprice", mode="numeric", params={"k": 200, "seed": 1}
     )
-    merged = merge_partials(build_partials(li, [spec]), fanout=8)
+    merged = merge_partials(build_partials(li, [spec]))
     return quantile_rows(merged, "kll", [0.1, 0.25, 0.5, 0.75, 0.9, 0.99])
 
 
@@ -1628,7 +1628,7 @@ def q_tdigest_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _read(spark, sf_dir, "events")
     spec = SketchSpec("td", "tdigest", "value", mode="numeric", params={"delta": 200})
-    merged = merge_partials(build_partials(ev, [spec]), fanout=8)
+    merged = merge_partials(build_partials(ev, [spec]))
     return quantile_rows(merged, "td", [0.01, 0.1, 0.5, 0.9, 0.99])
 
 
@@ -1647,7 +1647,7 @@ def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bloom", "bloom", "text", mode="tokens",
         params={"log2_bits": 20, "k": 5, "seed": 1},
     )
-    merged = merge_partials(build_partials(docs, [spec]), fanout=8)
+    merged = merge_partials(build_partials(docs, [spec]))
     probes = ["scan", "window", "column", "zzz_not_a_token", "qqq_missing", "the"]
     return membership_rows(merged, "bloom", probes)
 

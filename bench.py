@@ -241,7 +241,7 @@ def main() -> None:
         SketchSpec("bloom", "bloom", "text", mode="tokens", params={"log2_bits": 20, "k": 5, "seed": 1}),
     ]
     t0 = time.perf_counter()
-    res = sketch_aggregate(docs, specs, fanout=min(16, cpus))
+    res = sketch_aggregate(docs, specs)
     sketch_wall = time.perf_counter() - t0
     m = res.metrics[("cmcu",)]
     docs_per_sec = m["n_rows"] / sketch_wall

@@ -52,7 +52,7 @@ def build_job(spark, table_dir: str) -> dict:
     ]
     df = load_pages(spark, table_dir)
     t0 = time.perf_counter()
-    res = sketch_aggregate(df, specs, fanout=16)
+    res = sketch_aggregate(df, specs)
     wall = time.perf_counter() - t0
     m = res.metrics[("cmcu1",)]
     n_updates = sum(res.metrics[(f"cmcu{n}",)]["n_values"] for n in (1, 2, 3, 4))

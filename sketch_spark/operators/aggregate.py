@@ -8,7 +8,8 @@ the reference's shared-state atomic aggregation
   scan (columnar, pruned)                      -- Catalyst/parquet
     -> mapInArrow: per-partition numpy sketch partials,
        ALL specs in one fused pass per Arrow batch                  (P1)
-    -> two-level mapInArrow fold of the binary states               (P4)
+    -> mapInArrow fold of the binary states: one task, with a level-1
+       fold ahead of it when the partials outnumber _FOLD_FANIN     (P4)
     -> driver-side estimate / DataFrame-side broadcast estimate
 
 Scale properties this shape buys:
@@ -17,10 +18,10 @@ Scale properties this shape buys:
   the shuffle moves kilobytes, never data rows, and is immune to
   token-frequency skew (the sketch *is* the skew defense: a partition
   full of one hot token still emits one 512 KiB state);
-* the two-level fold (repartition(fanout) -> fold -> fold) bounds any
-  single reducer's fan-in, the treeAggregate shape that survives
-  100k-partition inputs; states move only through the executor-side
-  Arrow shuffle, never through pandas or the driver;
+* the fold's fan-in is bounded by ``_FOLD_FANIN``: past it a level-1
+  fold over ceil(P / _FOLD_FANIN) tasks runs first, the treeAggregate
+  shape that survives 100k-partition inputs; states move only through
+  the executor-side Arrow shuffle, never through pandas or the driver;
 * group-by-key sketches (e.g. per lang) apply the same partial/final
   shape, so a skewed group costs a bigger *partial count*, never a
   shuffled data row.
@@ -470,11 +471,27 @@ def _merge_state_rows(
     return acc
 
 
+# the fold reads at most this many partial states in one task; more
+# partials first run a level-1 fold over ceil(P / _FOLD_FANIN) tasks
+_FOLD_FANIN = 64
+# past this many bytes of in-memory state per group, the partial pass
+# coalesces to max(defaultParallelism, 2) tasks
+_WIDE_STATE_BYTES = 8 << 20
+
+
+def _state_bytes(specs: list[SketchSpec]) -> int:
+    """In-memory bytes of one empty state per spec: the dense arrays a
+    partial task holds (an HLL's 2^p registers), not the wire size (an
+    empty HLL serialises to ~130 bytes at any p)."""
+    return sum(
+        v.nbytes for s in specs for v in vars(s.make()).values() if isinstance(v, np.ndarray)
+    )
+
+
 def build_partials(
     df: DataFrame,
     specs: list[SketchSpec],
     group_cols: list[str] | None = None,
-    coalesce_to: int | None = None,
     spread_small_inputs: bool = True,
 ) -> DataFrame:
     """One row of binary sketch state per (input partition, group, spec).
@@ -485,20 +502,23 @@ def build_partials(
     ``group_cols`` is for low-cardinality keys (lang, source); state
     memory per partition is O(groups x specs x state_size).
 
-    ``coalesce_to``: cap the number of partials.  Total state volume is
-    partitions x groups x specs x state_size — for WIDE sketches
-    (w >= 2^18, tens of MB each) over many-partition inputs that
-    becomes the dominant shuffle, so coalesce (no data shuffle) to
-    ~2x executor count first; for the default KB/half-MB geometries it
-    is irrelevant and None keeps scan parallelism untouched.
+    Partitioning, when ``spread_small_inputs`` allows a change: WIDE
+    states (the specs' in-memory state past ``_WIDE_STATE_BYTES``, e.g.
+    w >= 2^18 CM tables of tens of MB) coalesce (no data shuffle) to
+    max(defaultParallelism, 2) tasks, since partitions x groups x specs
+    x state_size would otherwise become the dominant shuffle; narrower
+    states go through ``ensure_min_partitions``.  The keyed path passes
+    ``spread_small_inputs=False``: its ``(key, salt)`` partitioning is
+    kept as it is.
     """
     group_cols = list(group_cols or [])
     needed = sorted({s.column for s in specs} | set(group_cols))
     narrow = df.select(*needed)  # column pruning reaches the scan
-    if coalesce_to is not None:
-        narrow = narrow.coalesce(coalesce_to)
-    elif spread_small_inputs:
-        narrow = ensure_min_partitions(narrow)
+    if spread_small_inputs:
+        if _state_bytes(specs) > _WIDE_STATE_BYTES:
+            narrow = narrow.coalesce(max(df.sparkSession.sparkContext.defaultParallelism, 2))
+        else:
+            narrow = ensure_min_partitions(narrow)
     ddl = _partial_ddl(df, group_cols)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -585,30 +605,26 @@ def _fold_states(group_cols: list[str]):
 def merge_partials(
     partials: DataFrame,
     group_cols: list[str] | None = None,
-    fanout: int | None = None,
     two_level: bool = True,
-    max_states_per_reducer: int = 64,
 ) -> DataFrame:
     """Associative tree merge of binary sketch states via mapInArrow
-    folds: level 1 hash-partitions partials into ``fanout`` tasks (a
-    heavy key's states spread across them — the salting), each task
-    folds everything it sees; level 2 folds the fanout pre-merged
-    states per (group, spec) in one task.  States move only through the
-    executor-side shuffle (Arrow <-> disk), never through pandas or the
-    driver; with P partials no reducer materializes more than
-    ~P/fanout states.
-
-    ``fanout=None`` sizes itself so level-1 reducers see at most
-    ``max_states_per_reducer`` states.
+    folds, keyed by (group..., spec).  The plan follows the partial
+    count P: at P <= ``_FOLD_FANIN`` one task folds every state; past
+    it a level-1 fold first deals the partials round-robin over
+    ceil(P / _FOLD_FANIN) tasks (a heavy key's states spread across
+    them — the salting), so each of those tasks reads about
+    ``_FOLD_FANIN`` states and the final one-task fold reads one per
+    level-1 task.  States move only through
+    the executor-side shuffle (Arrow <-> disk), never through pandas or
+    the driver.  ``two_level=False`` never runs the level-1 fold.
     """
     group_cols = list(group_cols or [])
     schema_ddl = _partial_ddl(partials, group_cols)
-    if fanout is None:
-        n_parts = partials.rdd.getNumPartitions()
-        fanout = max(1, -(-n_parts // max_states_per_reducer))
     lvl = partials
-    if two_level and fanout > 1:
-        lvl = lvl.repartition(fanout).mapInArrow(_fold_states(group_cols), schema_ddl)
+    if two_level:
+        level1 = -(-partials.rdd.getNumPartitions() // _FOLD_FANIN)
+        if level1 > 1:
+            lvl = lvl.repartition(level1).mapInArrow(_fold_states(group_cols), schema_ddl)
     return lvl.repartition(1).mapInArrow(_fold_states(group_cols), schema_ddl)
 
 
@@ -867,22 +883,12 @@ def sketch_aggregate(
     df: DataFrame,
     specs: list[SketchSpec],
     group_cols: list[str] | None = None,
-    fanout: int | None = None,
-    coalesce_to: int | None = None,
 ) -> SketchResult:
     """End-to-end: build partials -> tree merge -> collect tiny states.
-
-    Auto-coalesces when the per-partition state volume is large (wide
-    sketches): targets <= ~64 MB of states per partial task.
-    """
+    Partitioning and fold plan are those of :func:`build_partials` and
+    :func:`merge_partials`, chosen from the specs and the partial count."""
     group_cols = list(group_cols or [])
-    if coalesce_to is None:
-        state_bytes = sum(len(s.make().to_bytes()) for s in specs)
-        if state_bytes > 8 * 1024 * 1024:
-            sc = df.sparkSession.sparkContext
-            coalesce_to = max(sc.defaultParallelism, 2)
-    partials = build_partials(df, specs, group_cols, coalesce_to=coalesce_to)
-    merged = merge_partials(partials, group_cols, fanout=fanout)
+    merged = merge_partials(build_partials(df, specs, group_cols), group_cols)
     rows = [r.asDict() for r in merged.collect()]
     result = SketchResult(rows, group_cols)
     if not group_cols:

@@ -197,7 +197,6 @@ def emerging_heavy_hitters(
     log2_width: int = 14,
     seed: int = 1,
     mode: str = "reference",
-    fanout: int | None = None,
     lowercase: bool = False,
     ngram: int = 1,
     prebuilt_sketch: CountMinCU | None = None,
@@ -222,7 +221,7 @@ def emerging_heavy_hitters(
             ngram=ngram,
             params={"depth": depth, "log2_width": log2_width, "seed": seed},
         )
-        result = sketch_aggregate(test_df, [spec], fanout=fanout)
+        result = sketch_aggregate(test_df, [spec])
         sketch = result.sketch("cmcu")
     else:
         sketch = prebuilt_sketch

@@ -49,7 +49,7 @@ def test_kill_resume_equals_uninterrupted(spark, pages_dir, tmp_path):
     assert res_a.metrics[("cm",)]["n_rows"] == df.count()
 
     # and equals the non-checkpointed aggregation
-    direct = sketch_aggregate(df, SPECS, fanout=4)
+    direct = sketch_aggregate(df, SPECS)
     assert direct.sketch("cm").to_bytes() == res_b.sketch("cm").to_bytes()
 
 

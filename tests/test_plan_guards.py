@@ -98,6 +98,44 @@ def test_sketch_scan_prunes_to_text(spark, sf001):
     assert "ReadSchema: struct<text:string>" in plan
 
 
+def _python_stages(plan: str) -> int:
+    """Plan pieces between Exchanges that hold a python node: the
+    python stages of a linear plan."""
+    stages = [[]]
+    for line in plan.splitlines():
+        if "Exchange" in line:
+            stages.append([])
+        else:
+            stages[-1].append(line)
+    return sum(any(m in line for line in s for m in PY_NODES) for s in stages)
+
+
+def test_sketch_fold_is_one_task_at_few_partials(spark, sf001):
+    """At no more than ``_FOLD_FANIN`` partials the merge is one fold
+    task and no level-1 fold: the partial pass and the fold are the
+    plan's only python nodes, and the contract KLL quantiles run two
+    python stages (partials; fold + quantile UDF)."""
+    import __spark_entry__ as em
+    from sketch_spark.operators.aggregate import (
+        _FOLD_FANIN,
+        SketchSpec,
+        build_partials,
+        merge_partials,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf001, "documents.parquet"))
+    specs = [
+        SketchSpec("cmcu", "cmcu", "text", params={"depth": 4, "log2_width": 14, "seed": 1}),
+        SketchSpec("hll", "hll", "text", params={"p": 14, "seed": 1}),
+    ]
+    partials = build_partials(docs, specs)
+    assert partials.rdd.getNumPartitions() <= _FOLD_FANIN
+    plan = _plan(merge_partials(partials))
+    assert plan.count("MapInArrow") == 2, plan
+    assert sum(plan.count(m) for m in PY_NODES) == 2, plan
+    assert _python_stages(_plan(em.q_kll_price_quantiles(spark, sf001))) == 2
+
+
 def test_tpch_filter_pushdown(spark, sf001):
     li = spark.read.parquet(os.path.join(sf001, "lineitem.parquet"))
     plan = _plan(li.filter(F.col("l_shipdate") <= "1998-09-02").select("l_quantity"))

@@ -50,7 +50,6 @@ def test_range_query_equals_direct(spark, pages_dir, rollup_dir):
     hll_direct = sketch_aggregate(
         df.filter(F.date_format("warc_ts", "yyyy-MM-dd").between(start, end)),
         [SPECS[1]],
-        fanout=4,
     ).sketch("hll")
     assert (hll.registers == hll_direct.registers).all()
 
@@ -58,7 +57,7 @@ def test_range_query_equals_direct(spark, pages_dir, rollup_dir):
 def test_full_range_and_missing_range(spark, rollup_dir, pages_dir):
     df = load_pages(spark, pages_dir)
     whole = query_sketch_rollup(spark, rollup_dir, "hll")
-    direct = sketch_aggregate(df, [SPECS[1]], fanout=4).sketch("hll")
+    direct = sketch_aggregate(df, [SPECS[1]]).sketch("hll")
     # HLL merge is an exact homomorphism: byte-equal however bucketed
     assert (whole.registers == direct.registers).all()
     with pytest.raises(KeyError):

@@ -71,44 +71,6 @@ def test_cosine_topk_boundary_ties_deterministic(spark):
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r3 #3 — executor-side result construction for quantile/membership
-# ---------------------------------------------------------------------------
-def test_quantile_membership_queries_executor_side(spark, sf001):
-    """q_kll_price_quantiles / q_tdigest_value_quantiles /
-    q_bloom_membership build results executor-side (state_quantiles_col
-    / state_contains_col posexplode) — no collect()/createDataFrame in
-    the query bodies — and match the driver-side sketch answers."""
-    import inspect
-
-    import __spark_entry__ as entrymod
-
-    for fn in (
-        entrymod.q_kll_price_quantiles,
-        entrymod.q_tdigest_value_quantiles,
-        entrymod.q_bloom_membership,
-    ):
-        src = inspect.getsource(fn)
-        assert ".collect()" not in src and ".createDataFrame(" not in src, fn.__name__
-
-    from sketch_spark.operators.aggregate import SketchSpec, sketch_aggregate
-
-    got = entrymod.q_kll_price_quantiles(spark, sf001).toPandas().sort_values("q")
-    li = entrymod._read(spark, sf001, "lineitem")
-    spec = SketchSpec("kll", "kll", "l_extendedprice", mode="numeric", params={"k": 200, "seed": 1})
-    kll = sketch_aggregate(li, [spec], fanout=8).sketch("kll")
-    qs = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
-    expect = [round(float(v), 4) for v in kll.quantile(np.array(qs))]
-    assert got.q.tolist() == qs
-    assert got.est.tolist() == expect
-
-    mem = entrymod.q_bloom_membership(spark, sf001).toPandas()
-    assert set(mem.columns) == {"token", "maybe_present"}
-    assert len(mem) == 6
-    # Bloom has no false negatives: "the" is in the corpus
-    assert bool(mem.set_index("token").loc["the", "maybe_present"])
-
-
-# ---------------------------------------------------------------------------
 # ADVICE r2 — streaming seen-history idempotent under epoch replay
 # ---------------------------------------------------------------------------
 def test_streaming_seen_history_epoch_overwrite(spark, tmp_path):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from sketch_spark.core import sketch_from_bytes
 from sketch_spark.operators.aggregate import (
+    SketchResult,
     SketchSpec,
     build_partials,
     merge_partials,
@@ -30,7 +31,7 @@ HLL_URL = SketchSpec("hll_url", "hll", "url", mode="value", params={"p": 14, "se
 def test_sketch_aggregate_estimates_vs_exact(spark, pages_dir, pages_pdf):
     pages, _ = pages_pdf
     df = load_pages(spark, pages_dir)
-    res = sketch_aggregate(df, [CMCU_SPEC, HLL_SPEC, HLL_URL], fanout=4)
+    res = sketch_aggregate(df, [CMCU_SPEC, HLL_SPEC, HLL_URL])
     assert len(res) == 3
 
     exact = exact_token_counts(pages["text"])
@@ -66,7 +67,7 @@ def test_repartition_invariance(spark, pages_dir):
     )
     blobs = []
     for nparts in (1, 4, 16):
-        res = sketch_aggregate(df.repartition(nparts), [spec], fanout=3)
+        res = sketch_aggregate(df.repartition(nparts), [spec])
         blobs.append(res.sketch("cm").to_bytes())
     assert blobs[0] == blobs[1] == blobs[2]
 
@@ -74,7 +75,7 @@ def test_repartition_invariance(spark, pages_dir):
 def test_grouped_sketches_per_lang(spark, pages_dir, pages_pdf):
     pages, _ = pages_pdf
     df = load_pages(spark, pages_dir)
-    res = sketch_aggregate(df, [HLL_SPEC], group_cols=["lang"], fanout=4)
+    res = sketch_aggregate(df, [HLL_SPEC], group_cols=["lang"])
     langs = sorted(pages["lang"].unique())
     assert sorted(k[0] for k in res.keys()) == langs
     for lang in langs:
@@ -102,23 +103,48 @@ def test_partition_pruning_on_window(spark, pages_dir):
     assert "PartitionFilters" in plan and "window" in plan
 
 
-def test_partials_shape_and_merge_metrics(spark, pages_dir):
+def test_partials_shape_and_merge_metrics(spark, pages_dir, monkeypatch):
+    """Past ``_FOLD_FANIN`` partials the merge runs a level-1 fold
+    first; its merged bytes equal the driver-side ``SketchResult`` fold
+    of the same partials for every kind with an exact merge."""
+    from sketch_spark.operators import aggregate
+
+    specs = [
+        CMCU_SPEC,
+        HLL_SPEC,
+        SketchSpec("cm", "cm", "text", mode="tokens", params={"depth": 4, "log2_width": 12, "seed": 3}),
+        SketchSpec("bloom", "bloom", "text", mode="tokens", params={"log2_bits": 16, "k": 4, "seed": 2}),
+    ]
     df = load_pages(spark, pages_dir).repartition(6)
-    partials = build_partials(df, [CMCU_SPEC, HLL_SPEC])
+    partials = build_partials(df, specs)
     pdf = partials.toPandas()
     # one row per (partition, spec); empty partitions may emit none
-    assert set(pdf["spec"]) == {"cmcu", "hll_tok"}
+    assert set(pdf["spec"]) == {s.name for s in specs}
     assert (pdf.groupby("spec").size() <= 6).all()
-    merged = merge_partials(partials, fanout=2).toPandas()
-    assert len(merged) == 2
-    assert merged.set_index("spec").loc["cmcu", "n_rows"] == df.count()
 
-    whole = sketch_from_bytes(merged.set_index("spec").loc["cmcu", "state"])
-    parts = [sketch_from_bytes(b) for b in pdf[pdf.spec == "cmcu"]["state"]]
-    acc = parts[0]
-    for p in parts[1:]:
-        acc.merge(p)
-    assert acc.to_bytes() == whole.to_bytes()
+    monkeypatch.setattr(aggregate, "_FOLD_FANIN", 2)
+    merged_df = merge_partials(partials)
+    plan = merged_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 3, plan  # partials, level-1 fold, final fold
+    merged = merged_df.toPandas().set_index("spec")
+    assert len(merged) == len(specs)
+    assert merged.loc["cmcu", "n_rows"] == df.count()
+
+    driver = SketchResult(pdf.to_dict("records"), [])
+    for spec in specs:
+        assert bytes(merged.loc[spec.name, "state"]) == driver.sketch(spec.name).to_bytes(), spec.name
+
+
+def test_wide_states_coalesce_partials(spark):
+    """Specs whose in-memory states pass 8 MiB coalesce the partial pass
+    to max(defaultParallelism, 2) tasks: 33 HLLs at p=18 hold 256 KiB
+    of dense registers each, though an empty one serialises to ~130
+    bytes."""
+    target = max(spark.sparkContext.defaultParallelism, 2)
+    df = spark.range(1000).selectExpr("CAST(id AS STRING) AS v").repartition(2 * target)
+    wide = [SketchSpec(f"h{i}", "hll", "v", mode="value", params={"p": 18, "seed": i}) for i in range(33)]
+    assert build_partials(df, wide).rdd.getNumPartitions() == target
+    assert build_partials(df, wide[:32]).rdd.getNumPartitions() == 2 * target
 
 
 def test_kll_numeric_spec(spark, sf01):
@@ -126,7 +152,7 @@ def test_kll_numeric_spec(spark, sf01):
     spec = SketchSpec(
         "kll_price", "kll", "l_extendedprice", mode="numeric", params={"k": 200, "seed": 1}
     )
-    res = sketch_aggregate(li, [spec], fanout=4)
+    res = sketch_aggregate(li, [spec])
     kll = res.sketch("kll_price")
     exact = li.selectExpr("percentile(l_extendedprice, array(0.1, 0.5, 0.9)) p").collect()[0]["p"]
     vals = np.asarray(li.select("l_extendedprice").toPandas()["l_extendedprice"])
@@ -139,6 +165,41 @@ def test_kll_numeric_spec(spark, sf01):
         hi = np.searchsorted(svals, est, "right") / n
         err = 0.0 if lo <= q <= hi else min(abs(q - lo), abs(q - hi))
         assert err < 0.03, f"q={q}: est {est} vs exact {ex}, rank err {err}"
+
+
+def test_quantile_membership_queries_executor_side(spark, sf001):
+    """q_kll_price_quantiles / q_tdigest_value_quantiles /
+    q_bloom_membership build results executor-side (state_quantiles_col
+    / state_contains_col posexplode) — no collect()/createDataFrame in
+    the query bodies — and match the driver-side sketch answers."""
+    import inspect
+
+    import __spark_entry__ as entrymod
+
+    for fn in (
+        entrymod.q_kll_price_quantiles,
+        entrymod.q_tdigest_value_quantiles,
+        entrymod.q_bloom_membership,
+    ):
+        src = inspect.getsource(fn)
+        assert ".collect()" not in src and ".createDataFrame(" not in src, fn.__name__
+
+    from sketch_spark.operators.aggregate import SketchSpec, sketch_aggregate
+
+    got = entrymod.q_kll_price_quantiles(spark, sf001).toPandas().sort_values("q")
+    li = entrymod._read(spark, sf001, "lineitem")
+    spec = SketchSpec("kll", "kll", "l_extendedprice", mode="numeric", params={"k": 200, "seed": 1})
+    kll = sketch_aggregate(li, [spec]).sketch("kll")
+    qs = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+    expect = [round(float(v), 4) for v in kll.quantile(np.array(qs))]
+    assert got.q.tolist() == qs
+    assert got.est.tolist() == expect
+
+    mem = entrymod.q_bloom_membership(spark, sf001).toPandas()
+    assert set(mem.columns) == {"token", "maybe_present"}
+    assert len(mem) == 6
+    # Bloom has no false negatives: "the" is in the corpus
+    assert bool(mem.set_index("token").loc["the", "maybe_present"])
 
 
 def test_keyed_salted_aggregation_matches_grouped(spark, pages_dir, pages_pdf):
@@ -170,8 +231,6 @@ def test_keyed_salted_aggregation_matches_grouped(spark, pages_dir, pages_pdf):
     hot = pages.host.value_counts().index[0]
     assert pages.host.value_counts().iloc[0] > 0.1 * len(pages)
     exact = pages[pages.host == hot]["text"].str.split().explode().nunique()
-    from sketch_spark.core import sketch_from_bytes
-
     est = sketch_from_bytes(bytes(k[hot])).estimate()
     assert abs(est - exact) / exact < 3 * 1.04 / (2**6) + 0.02
 

@@ -34,7 +34,7 @@ def test_streaming_matches_batch(spark, pages_dir, pages_pdf, tmp_path):
         q.stop()
 
     batch_df = spark.read.parquet(src)
-    batch_res = sketch_aggregate(batch_df, specs, fanout=4)
+    batch_res = sketch_aggregate(batch_df, specs)
 
     stream_cm = read_state(spark, str(tmp_path / "state"), "cm")
     batch_cm = batch_res.sketch("cm")

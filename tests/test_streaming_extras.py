@@ -1,6 +1,5 @@
 """Streaming coverage beyond foreachBatch: watermarked windowed
-aggregation (late-data semantics) and applyInPandasWithState keyed
-sketch state."""
+aggregation (late-data semantics)."""
 
 import os
 
@@ -58,45 +57,6 @@ def test_watermarked_window_counts(spark, events_stream_src, tmp_path):
     assert len(got) > 0
 
 
-def test_keyed_running_sketch_state(spark, sf001, tmp_path):
-    from sketch_spark.operators.aggregate import SketchSpec, sketch_aggregate
-    from sketch_spark.streaming.stateful import keyed_running_sketch
-
-    src = os.path.join(sf001, "documents.parquet")
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(os.path.dirname(src))
-    )
-    spec = SketchSpec("hll", "hll", "text", mode="tokens", params={"p": 12, "seed": 5})
-    out = keyed_running_sketch(stream, "lang", spec)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("keyed_state")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql(
-        "SELECT key, max_by(summary, n_rows) AS summary, max(n_rows) AS n_rows "
-        "FROM keyed_state GROUP BY key"
-    ).toPandas()
-
-    batch = sketch_aggregate(
-        spark.read.parquet(src), [spec], group_cols=["lang"], fanout=2
-    )
-    for r in got.itertuples():
-        expect = batch.sketch("hll", r.key).estimate()
-        assert abs(r.summary - expect) / max(expect, 1) < 0.01, (r.key, r.summary, expect)
-        assert r.n_rows == batch.metrics[(r.key, "hll")]["n_rows"]
-
-
 def test_null_and_empty_text_robustness(spark):
     """Nulls and empty strings flow through the whole sketch path."""
     from sketch_spark.operators.aggregate import SketchSpec, sketch_aggregate
@@ -107,7 +67,7 @@ def test_null_and_empty_text_robustness(spark):
         SketchSpec("cmcu", "cmcu", "text", params={"depth": 4, "log2_width": 10, "seed": 1}),
         SketchSpec("hll", "hll", "text", params={"p": 10, "seed": 1}),
     ]
-    res = sketch_aggregate(df, specs, fanout=2)
+    res = sketch_aggregate(df, specs)
     cm = res.sketch("cmcu")
     assert cm.total == 5  # a,b,c,a,a
     assert cm.estimate_tokens(["a"])[0] >= 3

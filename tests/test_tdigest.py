@@ -87,7 +87,7 @@ def test_tdigest_spark_spec(spark, sf01):
 
     li = spark.read.parquet(os.path.join(sf01, "lineitem.parquet"))
     spec = SketchSpec("td", "tdigest", "l_extendedprice", mode="numeric", params={"delta": 200})
-    td = sketch_aggregate(li, [spec], fanout=4).sketch("td")
+    td = sketch_aggregate(li, [spec]).sketch("td")
     vals = np.sort(li.select("l_extendedprice").toPandas()["l_extendedprice"].to_numpy())
     assert td.n == len(vals)
     assert td.quantile(0.0) == vals[0] and td.quantile(1.0) == vals[-1]
